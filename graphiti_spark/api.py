@@ -13,27 +13,45 @@ reference method it mirrors.
 
 State model (the Spark-native translation of "a graph database"):
 the graph IS four DataFrames (episodes, entities, edges, episodic_edges)
-plus optional communities, all keyed by ``group_id``. Updates are
-touched-group incremental (old+new turns of touched conversations
-re-run the batch stages; untouched groups carry over — provably equal
-to a full rebuild, tests/test_incremental.py), so an ``add_episode``
-costs O(that conversation), not O(graph), exactly the reference's
-per-episode incremental shape.
+plus the transcripts they are built from and optional communities, all
+keyed by ``group_id`` (= ``conv_id``). Every write takes one
+touched-group path: it names the conversations it touches,
+``build_graph`` rebuilds them from their surviving turns,
+``operators/maintenance.replace_groups`` folds their manual
+(``add_triplet``) edges and those edges' entities back in, and the handle
+swaps the touched groups' rows for the result (anti-join + union),
+cutting lineage with ``localCheckpoint``. Untouched groups carry over, so
+the handle always equals a fresh build over the surviving turns plus the
+surviving manual triplets, and a write costs O(touched conversations),
+not O(graph) — the reference's per-episode incremental shape.
+Communities are derived state: every write drops them (``None``) until
+``build_communities`` runs again.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphiti_spark.operators import maintenance as MT
 from graphiti_spark.plans.pipeline import RUN_TS, build_graph
 
 __all__ = ["GraphitiSpark"]
 
 _TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                       "text string, tool string, ts timestamp")
+_TURN_KEY = ["conv_id", "turn_idx"]
+
+
+def _join_groups(df: DataFrame | None, groups: DataFrame, how: str):
+    """``df``'s rows in (``left_semi``) or outside (``left_anti``) the
+    ``group_id``s of ``groups``; None stays None."""
+    return None if df is None else df.join(F.broadcast(groups), "group_id",
+                                           how)
 
 
 class GraphitiSpark:
@@ -64,162 +82,116 @@ class GraphitiSpark:
 
     def add_episode_bulk(self, transcripts: DataFrame) -> "GraphitiSpark":
         """``Graphiti.add_episode_bulk`` (graphiti.py, bulk path): ingest
-        turn rows ``(conv_id, turn_idx, role, text, tool, ts)``. First
-        call builds the graph; later calls rebuild ONLY the touched
-        conversations and carry every other group over unchanged
-        (≡ full rebuild, the operators/maintenance.incremental_update
-        contract)."""
-        if self.transcripts is None:
-            self.transcripts = transcripts.localCheckpoint(eager=True)
-            g = self._build(self.transcripts)
-            self.episodes, self.entities = g.episodes, g.entities
-            self.edges, self.episodic_edges = g.edges, g.episodic_edges
-            return self
-        # a re-supplied (conv_id, turn_idx) must deterministically take
-        # the NEW text — dropDuplicates keeps an arbitrary shuffle winner
-        kept = self.transcripts.join(
-            transcripts.select("conv_id", "turn_idx").distinct(),
-            ["conv_id", "turn_idx"], "left_anti")
-        all_tr = (kept.unionByName(
-                      transcripts.dropDuplicates(["conv_id", "turn_idx"]))
-                  .localCheckpoint(eager=True))
-        touched = transcripts.select("conv_id").distinct() \
-            .localCheckpoint(eager=True)
-        g = self._build(all_tr.join(F.broadcast(touched), "conv_id",
-                                    "left_semi"))
-        self.transcripts = all_tr
-
-        def merge(existing, new):
-            keep = existing.join(
-                F.broadcast(touched.select(F.col("conv_id")
-                                           .alias("group_id"))),
-                "group_id", "left_anti")
-            return keep.unionByName(new, allowMissingColumns=True)
-
-        self.episodes = merge(self.episodes, g.episodes)
-        self.entities = merge(self.entities, g.entities)
-        self.edges = merge(self.edges, g.edges)
-        self.episodic_edges = merge(self.episodic_edges, g.episodic_edges)
-        return self
+        turn rows ``(conv_id, turn_idx, role, text, tool, ts)`` and
+        rebuild the conversations they touch. A re-supplied
+        ``(conv_id, turn_idx)`` takes the NEW text."""
+        all_tr = transcripts
+        if self.transcripts is not None:
+            # anti-join first: dropDuplicates over old ∪ new would keep
+            # an arbitrary shuffle winner
+            kept = self.transcripts.join(
+                transcripts.select(*_TURN_KEY).distinct(), _TURN_KEY,
+                "left_anti")
+            all_tr = kept.unionByName(transcripts.dropDuplicates(_TURN_KEY))
+        return self._rebuild(all_tr, transcripts.select("conv_id").distinct())
 
     def add_episode(self, group_id: str, body: str, role: str = "user",
                     reference_time: datetime | None = None,
                     tool: str | None = None) -> "GraphitiSpark":
         """``Graphiti.add_episode`` (single-episode write path): one turn
         appended to ``group_id``'s conversation at the next turn index,
-        then the touched-group incremental update."""
+        then the touched-group rebuild."""
         nxt = 0
         if self.transcripts is not None:
             row = (self.transcripts.where(F.col("conv_id") == group_id)
                    .agg(F.max("turn_idx")).head()[0])
             nxt = 0 if row is None else row + 1
-        ts = reference_time or self.run_ts
+        ts = MT.utc_naive(reference_time or self.run_ts)
         one = self.spark.createDataFrame(
-            [(group_id, nxt, role, body, tool, ts.replace(tzinfo=None))],
-            _TRANSCRIPT_SCHEMA)
+            [(group_id, nxt, role, body, tool, ts)], _TRANSCRIPT_SCHEMA)
         return self.add_episode_bulk(one)
 
     def add_triplet(self, group_id: str, subj: str, pred: str, obj: str,
                     fact: str, valid_at: datetime | None = None
                     ) -> "GraphitiSpark":
         """``Graphiti.add_triplet`` (graphiti.py:979-1017): insert an
-        arbitrary (subj, pred, obj) edge and resolve it against the
-        group's EXISTING edges through the same dedupe + temporal
-        versioning as extracted ones — the group's stored rows are
-        re-sliced to raw (incremental.stored_edges_to_raw), unioned with
-        the new raw row, and re-merged; missing entity rows are
-        upserted."""
-        from graphiti_spark import rules
-        from graphiti_spark.operators import versioning
-        from graphiti_spark.operators.incremental import stored_edges_to_raw
-        from graphiti_spark.operators.maintenance import add_triplet
-
-        # same validation on BOTH branches (maintenance.add_triplet only
-        # guards the fresh-graph path): no empty names, no self-loops
-        subj_c, obj_c = rules.clean_text(subj), rules.clean_text(obj)
-        if not subj_c or not obj_c or \
-                rules.normalize_name(subj_c) == rules.normalize_name(obj_c):
-            raise ValueError(
-                "add_triplet needs two distinct non-empty entities")
-        if self.edges is None:
-            self.edges = add_triplet(self.spark, group_id, subj, pred,
-                                     obj, fact, self.run_ts, valid_at)
-            self._upsert_entities(group_id, [subj_c, obj_c])
-            return self
-        grp = self.edges.where(F.col("group_id") == group_id)
-        rest = self.edges.where(
-            F.coalesce(F.col("group_id") != group_id, F.lit(True)))
-        va = valid_at or self.run_ts
-        # NULL episode provenance: a manual triplet is created by no
-        # episode, so collect_list skips it and the merged edge carries
-        # an empty episodes array — remove_episode's orphan GC must
-        # never collect it (graphiti.py keeps non-episodic edges)
-        new_raw = self.spark.createDataFrame(
-            [(group_id, None, 0,
-              subj_c, pred, obj_c, rules.clean_text(fact) or fact,
-              va.replace(tzinfo=None), None,
-              rules.entity_uuid(group_id, subj_c),
-              rules.entity_uuid(group_id, obj_c),
-              rules.edge_uuid(group_id,
-                              rules.entity_uuid(group_id, subj_c), pred,
-                              rules.entity_uuid(group_id, obj_c), fact, 0),
-              self.run_ts.replace(tzinfo=None))],
-            "group_id string, episode_uuid string, turn_idx int,"
-            " subj string, pred string, obj string, fact string,"
-            " valid_at timestamp, invalid_at timestamp,"
-            " source_node_uuid string, target_node_uuid string,"
-            " uuid string, created_at timestamp")
-        raw = stored_edges_to_raw(grp).unionByName(
-            new_raw, allowMissingColumns=True)
-        merged = versioning.apply_versioning(
-            versioning.dedupe_edges(raw), self.run_ts,
-            ontology=self.ontology)
-        # the versioning re-merge emits embedding-less rows; re-derive
-        # fact_embedding for the touched group or its cosine search
-        # layer would silently go dark after any manual insert
-        if self.edges is not None and "fact_embedding" in self.edges.columns:
-            from graphiti_spark.operators.extract import embed_udf
-            merged = merged.withColumn("fact_embedding",
-                                       embed_udf(F.col("fact")))
-        self.edges = rest.unionByName(merged, allowMissingColumns=True)
-        self._upsert_entities(group_id, [subj_c, obj_c])
-        return self
-
-    def _upsert_entities(self, group_id: str, names: list[str]) -> None:
-        from graphiti_spark import rules
-        rows = [(rules.entity_uuid(group_id, n), n, group_id,
-                 self.run_ts.replace(tzinfo=None))
-                for n in names]
-        new = self.spark.createDataFrame(
-            rows, "uuid string, name string, group_id string,"
-                  " created_at timestamp")
+        arbitrary (subj, pred, obj) edge (``maintenance.add_triplet``
+        validates and builds it) and resolve it against the group's
+        EXISTING edges through the same dedupe + temporal versioning as
+        extracted ones; its two entities are upserted."""
+        edge = MT.add_triplet(self.spark, group_id, subj, pred, obj, fact,
+                              self.run_ts, valid_at)
+        ends = [edge.select(F.col(u).alias("uuid"), F.col(n).alias("name"),
+                            "group_id", "created_at")
+                for u, n in (("source_node_uuid", "subj"),
+                             ("target_node_uuid", "obj"))]
+        ents = ends[0].unionByName(ends[1])
         if (self.with_embeddings or
                 (self.entities is not None
                  and "name_embedding" in self.entities.columns)):
             # the reference embeds names on insert — without this the
             # node cosine layer never scores a manually-added entity
             from graphiti_spark.operators.extract import embed_udf
-            new = new.withColumn("name_embedding",
-                                 embed_udf(F.col("name")))
-        if self.entities is None:
-            self.entities = new
-            return
-        fresh = new.join(self.entities.select("uuid"), "uuid",
-                         "left_anti")
-        self.entities = self.entities.unionByName(
-            fresh, allowMissingColumns=True)
+            ents = ents.withColumn("name_embedding", embed_udf(F.col("name")))
+        groups = self.spark.createDataFrame([(group_id,)], "group_id string")
+        edges, entities = MT.replace_groups(
+            _join_groups(self.edges, groups, "left_semi"),
+            _join_groups(self.entities, groups, "left_semi"),
+            edge, ents, self.run_ts, ontology=self.ontology)
+        return self._apply(groups, edges=edges, entities=entities)
 
     def remove_episode(self, episode_uuids: list[str]) -> "GraphitiSpark":
         """``Graphiti.remove_episode`` (graphiti.py:1019-1052): drop the
-        episodes, the edges they alone created, and entities mentioned
-        only by them (orphan GC)."""
-        from graphiti_spark.operators.maintenance import remove_episodes
-        out = remove_episodes(self.episodes, self.episodic_edges,
-                              self.entities, self.edges, episode_uuids)
-        self.episodes = out["episodes"]
-        self.episodic_edges = out["episodic_edges"]
-        self.entities = out["entities"]
-        self.edges = out["edges"]
+        episodes' turns from the transcripts and rebuild their groups, so
+        edges and entities only they supported go too (manual triplets
+        stay)."""
+        if self.episodes is None:
+            return self
+        gone = (self.episodes.where(F.col("uuid").isin(list(episode_uuids)))
+                .select(F.col("group_id").alias("conv_id"), "turn_idx")
+                .collect())
+        if not gone:
+            return self
+        gone = self.spark.createDataFrame(gone, "conv_id string, turn_idx int")
+        kept = self.transcripts.join(F.broadcast(gone), _TURN_KEY,
+                                     "left_anti")
+        return self._rebuild(kept, gone.select("conv_id").distinct())
+
+    def _rebuild(self, transcripts: DataFrame,
+                 touched: DataFrame) -> "GraphitiSpark":
+        """The one write path: ``transcripts`` is the whole transcript
+        table after the write, ``touched`` the ``conv_id``s it changed.
+        Rebuilds those conversations, folds their manual edges back in
+        (``maintenance.replace_groups``) and swaps them into the handle."""
+        transcripts = transcripts.localCheckpoint(eager=True)
+        src = transcripts
+        if self.transcripts is not None:
+            touched = touched.localCheckpoint(eager=True)
+            src = transcripts.join(F.broadcast(touched), "conv_id",
+                                   "left_semi")
+        g = self._build(src)
+        groups = touched.select(F.col("conv_id").alias("group_id"))
+        edges, entities = MT.replace_groups(
+            g.edges, g.entities,
+            _join_groups(self.edges, groups, "left_semi"),
+            _join_groups(self.entities, groups, "left_semi"),
+            self.run_ts, ontology=self.ontology)
+        self.transcripts = transcripts
+        return self._apply(groups, edges=edges, entities=entities,
+                           episodes=g.episodes,
+                           episodic_edges=g.episodic_edges)
+
+    def _apply(self, groups: DataFrame, **tables: DataFrame
+               ) -> "GraphitiSpark":
+        """Replace the ``groups``' rows of each named table with the new
+        rows (anti-join + union), cut lineage so plans stay flat across
+        writes, and drop the now-stale communities."""
+        for name, new in tables.items():
+            kept = _join_groups(getattr(self, name), groups, "left_anti")
+            if kept is not None:
+                new = kept.unionByName(new, allowMissingColumns=True)
+            setattr(self, name, new.localCheckpoint(eager=True))
+        self.communities = self.community_edges = None
         return self
 
     # -- read path ---------------------------------------------------------
@@ -311,7 +283,12 @@ class GraphitiSpark:
         for the Iceberg tables of the brief)."""
         for name in self._TABLES:
             df = getattr(self, name)
+            path = f"{root.rstrip('/')}/{name}"
             if df is None:
+                # a table the handle dropped (communities after a write)
+                # must not come back stale from an earlier save
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
                 continue
             # cut lineage BEFORE overwrite: a load()ed table's plan still
             # reads the very directory this write replaces — Spark
@@ -324,7 +301,7 @@ class GraphitiSpark:
             w = df.write.mode("overwrite")
             if part:
                 w = w.partitionBy(part)
-            w.parquet(f"{root.rstrip('/')}/{name}")
+            w.parquet(path)
         return self
 
     @classmethod
@@ -334,8 +311,6 @@ class GraphitiSpark:
         """Re-open a saved graph: the handle resumes incremental updates
         and searches from the on-disk tables (restart-safety lives in
         the files, not driver state — the LshIndex/TableStore rule)."""
-        import os
-
         if "://" in root:
             raise NotImplementedError(
                 "load() probes the local filesystem; for a remote or "

@@ -1,50 +1,31 @@
-"""Entity-granular incremental maintenance (SURVEY §2.3 J3-J5, §2.10).
+"""Incremental-maintenance helpers (SURVEY §2.3 J3, §2.10).
 
-The reference's ``add_episode`` never recomputes whole groups: each newly
-extracted node/edge is resolved against the already-materialized graph
-through candidate joins — ``get_relevant_nodes`` / ``get_relevant_edges``
-(``search_utils.py:85-121``; dedup resolution
-``node_operations.py:258-381``, ``edge_operations.py:124-141``) — and only
-the touched slice of the graph is rewritten. This module is that path over
-tables:
+The reference's ``add_episode`` resolves each newly extracted node against
+the already-materialized graph through candidate joins —
+``get_relevant_nodes`` (``search_utils.py:85-103``; dedup resolution
+``node_operations.py:258-381``). :func:`relevant_nodes` is that candidate
+join over tables (the ``kg_relevant_nodes`` driver query).
 
-* extraction runs ONLY over the new turns (per-turn pure UDFs — old turns
-  of a touched conversation are never re-read);
-* new entities resolve against existing canonicals via a group-scoped
-  token-block candidate join (J3), member-uuid exact matches taking
-  priority;
-* edge dedupe + temporal versioning recompute ONLY the affected
-  ``(group_id, source_node_uuid)`` slice (J4/J5). Every dedupe grouping
-  key and versioning window key CONTAINS ``(group_id, source_node_uuid)``,
-  so the slice recompute equals a full rebuild restricted to those keys.
-
-Exactness of the re-slice: a stored positive edge re-enters the merge with
-its resolved ``invalid_at`` treated as explicit. That is still exact,
-because every fresh T1 candidate (lead over the superset slice, negation
-min) is ``<=`` the previously resolved value — the successor that produced
-the old value is still in the slice — and ``least()`` therefore lands on
-the full-rebuild answer. Ordering ties are exact too: the stored row
-carries the winning raw row's ``(t, turn_idx, uuid)`` ordering key
+:func:`stored_edges_to_raw` re-slices stored edges back to raw rows so a
+group's edges can re-enter ``dedupe_edges`` + ``apply_versioning``
+together with new rows — the re-merge behind ``add_triplet`` and the
+touched-group replace (``operators/maintenance.py``). Exactness of the
+re-slice: a stored positive edge re-enters the merge with its resolved
+``invalid_at`` treated as explicit. That is still exact, because every
+fresh T1 candidate (lead over the superset slice, negation min) is
+``<=`` the previously resolved value — the successor that produced the
+old value is still in the slice — and ``least()`` therefore lands on the
+full-rebuild answer. Ordering ties are exact too: the stored row carries
+the winning raw row's ``(t, turn_idx, uuid)`` ordering key
 (``versioning.dedupe_edges`` keeps ``turn_idx``).
-
-Granularity contrast with :func:`maintenance.incremental_update`
-(touched-GROUP recompute, provably ≡ batch rebuild): this path's cost is
-∝ |new turns| + |edges of affected source entities|, and its semantics are
-the reference's ``add_episode``: a new alias resolves TO the existing
-canonical — no retroactive re-canonicalization of the component — which is
-exactly where ``add_episode`` itself may differ from ``add_episode_bulk``
-(``graphiti.py:352-551`` vs ``bulk_utils.py``).
 """
 
 from __future__ import annotations
 
-from datetime import datetime
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphiti_spark.operators.dedup import (
-    MAX_BLOCK, _tok, duplicate_decision, resolve_edge_pointers)
+from graphiti_spark.operators.dedup import MAX_BLOCK, _tok, duplicate_decision
 
 
 # -- J3: candidate existing nodes per new node -------------------------------
@@ -78,48 +59,6 @@ def relevant_nodes(batch_entities: DataFrame, entities: DataFrame,
                                          F.col("existing_name")))
 
 
-def resolve_against_graph(batch_entities: DataFrame,
-                          entities: DataFrame) -> DataFrame:
-    """Resolve each batch entity to AT MOST one existing canonical —
-    the reference resolves each extracted node to one existing node or
-    creates it (``node_operations.py:258-381``). Returns
-    (uuid, resolved_uuid).
-
-    Priority: exact member-uuid identity (the new surface form was
-    already merged into an existing canonical as an alias) beats the
-    token-verified candidate; ties break by min existing uuid."""
-    exact = (entities
-             .select(F.col("uuid").alias("_canon"),
-                     F.explode(F.coalesce("member_uuids",
-                                          F.array(F.col("uuid"))))
-                     .alias("uuid"))
-             .groupBy("uuid").agg(F.min("_canon").alias("_exact")))
-    verified = (relevant_nodes(batch_entities, entities)
-                .groupBy("uuid")
-                .agg(F.min("existing_uuid").alias("_verified")))
-    return (batch_entities.select("uuid")
-            .join(exact, "uuid", "left")
-            .join(verified, "uuid", "left")
-            .withColumn("resolved_uuid", F.coalesce("_exact", "_verified"))
-            .where(F.col("resolved_uuid").isNotNull())
-            .select("uuid", "resolved_uuid"))
-
-
-# -- J4/J5: affected edge slice ----------------------------------------------
-
-def relevant_edges(edges: DataFrame, batch_edges: DataFrame) -> DataFrame:
-    """``get_relevant_edges`` / invalidation candidates
-    (``search_utils.py:106-121``, ``edge_operations.py:345-375``): the
-    existing edge rows any dedupe/versioning rule could touch for this
-    batch — those sharing an affected ``(group_id, source_node_uuid)``
-    key. The key set is micro-batch-sized → broadcast semi-join; the
-    untouched remainder of a 100 TB edges table is never read past the
-    partition filter."""
-    keys = batch_edges.select("group_id", "source_node_uuid").distinct()
-    return edges.join(F.broadcast(keys),
-                      ["group_id", "source_node_uuid"], "left_semi")
-
-
 def stored_edges_to_raw(edges: DataFrame) -> DataFrame:
     """Inverse of the ``dedupe_edges`` merge, for re-slicing: explode the
     ``episodes`` array back to per-episode rows carrying the winner's
@@ -137,143 +76,3 @@ def stored_edges_to_raw(edges: DataFrame) -> DataFrame:
         # carries a NULL episode_uuid, which collect_list skips on the
         # way back, preserving the empty provenance exactly
         F.explode_outer("episodes").alias("episode_uuid"))
-
-
-# -- the entity-granular micro-batch update ----------------------------------
-
-def incremental_update_entity(spark: SparkSession,
-                              new_transcripts: DataFrame,
-                              existing_transcripts: DataFrame | None,
-                              existing_entities: DataFrame | None,
-                              existing_edges: DataFrame | None,
-                              run_ts: datetime,
-                              ontology=None,
-                              delta_only: bool = False
-                              ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``add_episode`` semantics at ENTITY granularity. Returns
-    (merged_transcripts, merged_entities, merged_edges); under Iceberg
-    the edge merge is a MERGE on the affected (group, source) keys.
-
-    ``delta_only=True`` instead returns (affected_keys, delta_entities,
-    delta_edges) — ONLY the rows an Iceberg MERGE would write (the
-    recomputed edge slice and the refreshed/new entity rows), never
-    scanning the untouched remainder. This is the micro-batch cost
-    surface: ∝ |new turns| + |edges of affected source entities|.
-
-    Assumes batch turns are genuinely new (turn_idx beyond the stored
-    ones) — the streaming contract (`streaming/ingest.py`)."""
-    from graphiti_spark.operators import episodes as ep
-    from graphiti_spark.operators import extract, dedup, versioning
-    from graphiti_spark.plans.pipeline import entity_summaries
-
-    if existing_entities is None or existing_edges is None:
-        from graphiti_spark.plans.pipeline import build_graph
-        g = build_graph(spark, new_transcripts, run_ts=run_ts,
-                        ontology=ontology)
-        all_tr = (new_transcripts if existing_transcripts is None
-                  else existing_transcripts.unionByName(new_transcripts)
-                  .dropDuplicates(["conv_id", "turn_idx"]))
-        return all_tr, g.entities, g.edges
-
-    eps = ep.assemble_episodes(new_transcripts, run_ts)
-    mentions = extract.extract_mentions(eps, ontology=ontology)
-    raw = extract.raw_entities(mentions, run_ts)
-    canonical_b, umap_b = dedup.canonicalize_entities(raw, run_ts)
-    canonical_b = canonical_b.localCheckpoint(eager=False)
-
-    # J3 resolve: batch canonical → existing canonical (or itself).
-    resolved = resolve_against_graph(canonical_b, existing_entities)
-    # full_map feeds three consumers (edge pointer remap, batch_members,
-    # affected_ent) — checkpoint it so the downstream plans don't carry
-    # the whole extraction+resolve lineage three times (the plan TREE
-    # itself becomes the memory hazard at depth, not the data).
-    full_map = (umap_b
-                .join(resolved.select(F.col("uuid").alias("canonical_uuid"),
-                                      "resolved_uuid"),
-                      "canonical_uuid", "left")
-                .select("uuid",
-                        F.coalesce("resolved_uuid", "canonical_uuid")
-                        .alias("canonical_uuid"))
-                .localCheckpoint(eager=False))
-
-    # New raw edges, endpoints mapped through batch-canonical + graph
-    # resolution in one pass.
-    edges_raw_b = resolve_edge_pointers(
-        extract.extract_edges(eps, run_ts, ontology=ontology), full_map)
-    edges_raw_b = edges_raw_b.localCheckpoint(eager=False)
-
-    # J4/J5 slice recompute: only affected (group, src) keys re-run the
-    # dedupe + temporal-versioning stage; everything else is carried over
-    # behind an anti-join on the same broadcast key set.
-    keys = edges_raw_b.select("group_id", "source_node_uuid").distinct()
-    slice_existing = relevant_edges(existing_edges, edges_raw_b)
-    untouched = existing_edges.join(F.broadcast(keys),
-                                    ["group_id", "source_node_uuid"],
-                                    "left_anti")
-    combined_raw = (stored_edges_to_raw(slice_existing)
-                    .unionByName(edges_raw_b.select(
-                        "group_id", "source_node_uuid", "target_node_uuid",
-                        "pred", "subj", "obj", "fact", "uuid", "attributes",
-                        "valid_at", "invalid_at", "created_at", "turn_idx",
-                        "episode_uuid")))
-    recomputed = versioning.apply_versioning(
-        versioning.dedupe_edges(combined_raw), run_ts, eager=False,
-        ontology=ontology)
-    merged_edges = untouched.unionByName(
-        recomputed.select(untouched.columns))
-
-    # Entities: existing rows keep their identity (reference keeps the
-    # resolved node's fields, node_operations.py:258-284); matched rows
-    # gain the batch members; unresolved batch canonicals append as new.
-    batch_members = (full_map
-                     .groupBy("canonical_uuid")
-                     .agg(F.collect_set("uuid").alias("_new_members")))
-    existing_upd = (existing_entities
-                    .join(batch_members.withColumnRenamed(
-                        "canonical_uuid", "uuid"), "uuid", "left")
-                    .withColumn(
-                        "member_uuids",
-                        F.when(F.col("_new_members").isNull(),
-                               F.col("member_uuids"))
-                        .otherwise(F.array_sort(F.array_distinct(
-                            F.concat(F.coalesce("member_uuids",
-                                                F.array(F.col("uuid"))),
-                                     F.col("_new_members"))))))
-                    .drop("_new_members"))
-    new_canon = (canonical_b
-                 .join(resolved.select("uuid"), "uuid", "left_anti")
-                 .join(batch_members.withColumnRenamed(
-                     "canonical_uuid", "uuid"), "uuid", "left")
-                 .withColumn("member_uuids",
-                             F.array_sort(F.coalesce(
-                                 "_new_members", F.array(F.col("uuid")))))
-                 .drop("_new_members"))
-
-    # Summaries/attributes recompute ONLY for entities incident to the
-    # recomputed slice (new facts or changed first-payloads live there)
-    # PLUS every canonical the batch touched at all (full_map's targets):
-    # a mention-only new entity has no incident edge but must still land
-    # in the merged/delta output, and an existing entity that gained
-    # member_uuids from an edge-less alias must reach the delta writer.
-    affected_ent = (recomputed.select(F.col("source_node_uuid").alias("uuid"))
-                    .unionByName(recomputed.select(
-                        F.col("target_node_uuid").alias("uuid")))
-                    .unionByName(full_map.select(
-                        F.col("canonical_uuid").alias("uuid")))
-                    .distinct())
-    base_cols = ["uuid", "name", "group_id", "labels", "created_at",
-                 "name_norm", "first_turn", "member_uuids"]
-    base = (existing_upd.select(base_cols)
-            .unionByName(new_canon.select(base_cols)))
-    to_refresh = base.join(F.broadcast(affected_ent), "uuid", "left_semi")
-    refreshed = entity_summaries(to_refresh, merged_edges, restrict=True)
-    if delta_only:
-        return keys, refreshed, recomputed
-    kept = (existing_upd
-            .join(F.broadcast(affected_ent), "uuid", "left_anti"))
-    merged_entities = kept.unionByName(refreshed.select(kept.columns))
-
-    all_tr = (new_transcripts if existing_transcripts is None
-              else existing_transcripts.unionByName(new_transcripts)
-              .dropDuplicates(["conv_id", "turn_idx"]))
-    return all_tr, merged_entities, merged_edges

@@ -1,15 +1,16 @@
-"""Graph-maintenance API surface (SURVEY.md §2.1 S6-S9, §2.3 J7, §2.9 Q11,
+"""Graph-maintenance API surface (SURVEY.md §2.1 S6-S8, §2.3 J7, §2.9 Q11,
 §2.10 incremental semantics).
 
-Point lookups, pagination, orphan GC, and the incremental micro-batch path
-that recovers the reference's ``add_episode`` semantics (each batch joins
-against the already-materialized graph before union-merge —
-``graphiti.py:352-551`` re-expressed over tables, SURVEY §2.10).
+Point lookups, pagination, traversal semi-joins, manual triplets, and the
+touched-group replace that every incremental write goes through
+(:func:`replace_groups`: the reference's ``add_episode`` semantics,
+``graphiti.py:352-551``, re-expressed as a rebuild of the groups a write
+touches — SURVEY §2.10).
 """
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,7 +83,7 @@ def get_nodes_and_edges_by_episode(episodic_edges: DataFrame,
     return nodes, edges.where(prov)
 
 
-# -- S6 / S9: deletion + orphan GC ------------------------------------------
+# -- S6: deletion by group --------------------------------------------------
 
 def clear_groups(df: DataFrame, group_ids: list[str]) -> DataFrame:
     """S6 ``clear_data`` by group (graph_data_operations.py:66-81) — at the
@@ -91,36 +92,38 @@ def clear_groups(df: DataFrame, group_ids: list[str]) -> DataFrame:
     return df.where(~F.col("group_id").isin(group_ids))
 
 
-def remove_episodes(episodes: DataFrame, episodic_edges: DataFrame,
-                    entities: DataFrame, edges: DataFrame,
-                    episode_uuids: list[str]) -> dict[str, DataFrame]:
-    """S9 episode removal + orphan GC (graphiti.py:1019-1052):
-    drop the episodes, edges created by them (edge.episodes ⊆ removed),
-    and entities mentioned ONLY by them (mention-count anti-join)."""
-    removed = F.array(*[F.lit(u) for u in episode_uuids])
-
-    episodes_out = episodes.where(~F.col("uuid").isin(episode_uuids))
-
-    # Drop only edges whose episode provenance is entirely within the
-    # removed set. Null/empty provenance (manually inserted or externally
-    # loaded edges) means "not created by any episode" → always keep.
-    prov = F.coalesce("episodes", F.array().cast("array<string>"))
-    edges_out = edges.where(
-        (F.size(prov) == 0) | (F.size(F.array_except(prov, removed)) > 0))
-
-    kept_mentions = episodic_edges.where(
-        ~F.col("source_node_uuid").isin(episode_uuids))
-    # entities still mentioned by a surviving episode stay (graphiti.py:
-    # 1036-1042 counts mentions and deletes when == 1, i.e. only-removed)
-    entities_out = entities.join(
-        kept_mentions.select(F.col("target_node_uuid").alias("uuid"))
-                     .distinct(),
-        "uuid", "left_semi")
-    return {"episodes": episodes_out, "episodic_edges": kept_mentions,
-            "entities": entities_out, "edges": edges_out}
-
-
 # -- Q11: add_triplet --------------------------------------------------------
+
+def utc_naive(ts: datetime) -> datetime:
+    """Naive UTC wall-clock time of ``ts`` (the tables' timestamp form):
+    an aware datetime is converted to UTC, not stripped of its offset."""
+    if ts.tzinfo is None:
+        return ts
+    return ts.astimezone(timezone.utc).replace(tzinfo=None)
+
+
+def remerge_edges(edges: DataFrame | None, raw: DataFrame, run_ts: datetime,
+                  ontology=None) -> DataFrame:
+    """Resolve extra ``raw`` edge rows against a group's stored ``edges``:
+    the stored rows are re-sliced to raw (``stored_edges_to_raw``) and
+    everything re-runs ``dedupe_edges`` + ``apply_versioning``. Exact: a
+    stored edge re-enters with its resolved ``invalid_at`` as explicit,
+    and every added row can only lower it (``least()``). The versioning
+    stage emits embedding-less rows, so ``fact_embedding`` is re-derived
+    when the stored edges carry one."""
+    from graphiti_spark.operators import versioning
+    from graphiti_spark.operators.incremental import stored_edges_to_raw
+
+    if edges is not None:
+        raw = stored_edges_to_raw(edges).unionByName(
+            raw, allowMissingColumns=True)
+    out = versioning.apply_versioning(versioning.dedupe_edges(raw), run_ts,
+                                      eager=False, ontology=ontology)
+    if edges is not None and "fact_embedding" in edges.columns:
+        from graphiti_spark.operators.extract import embed_udf
+        out = out.withColumn("fact_embedding", embed_udf(F.col("fact")))
+    return out
+
 
 def add_triplet(spark, group_id: str, subj: str, pred: str, obj: str,
                 fact: str, run_ts: datetime, valid_at=None) -> DataFrame:
@@ -128,9 +131,14 @@ def add_triplet(spark, group_id: str, subj: str, pred: str, obj: str,
     DIRECTLY from (subj, pred, obj, fact) — the reference's add_triplet
     accepts arbitrary triples, so this must not depend on the extraction
     templates matching the fact text — then merged through the same
-    dedupe + temporal-versioning stages as extracted edges."""
+    dedupe + temporal-versioning stages as extracted edges.
+
+    The edge has NULL episode provenance (an empty ``episodes`` array): a
+    manual triplet is created by no episode, which is how
+    :func:`replace_groups` tells it apart from extracted edges. Resolving
+    it against a populated group is ``replace_groups`` with this edge as
+    the manual state."""
     from graphiti_spark import rules
-    from graphiti_spark.operators import versioning
 
     subj_c, obj_c = rules.clean_text(subj), rules.clean_text(obj)
     if not subj_c or not obj_c or \
@@ -138,60 +146,57 @@ def add_triplet(spark, group_id: str, subj: str, pred: str, obj: str,
         raise ValueError("add_triplet needs two distinct non-empty entities")
     src = rules.entity_uuid(group_id, subj_c)
     dst = rules.entity_uuid(group_id, obj_c)
-    va = valid_at or run_ts
     raw = spark.createDataFrame(
-        [(group_id, rules.episode_uuid(group_id, 0), 0,
+        [(group_id, None, 0,
           subj_c, pred, obj_c, rules.clean_text(fact) or fact,
-          va.replace(tzinfo=None), None, src, dst,
+          utc_naive(valid_at or run_ts), None, src, dst,
           rules.edge_uuid(group_id, src, pred, dst, fact, 0),
-          run_ts.replace(tzinfo=None))],
+          utc_naive(run_ts))],
         "group_id string, episode_uuid string, turn_idx int, subj string,"
         " pred string, obj string, fact string, valid_at timestamp,"
         " invalid_at timestamp, source_node_uuid string,"
         " target_node_uuid string, uuid string, created_at timestamp")
-    return versioning.apply_versioning(versioning.dedupe_edges(raw), run_ts)
+    return remerge_edges(None, raw, run_ts)
 
 
-# -- §2.10: incremental micro-batch merge -----------------------------------
+# -- §2.10: the touched-group replace ----------------------------------------
 
-def incremental_update(spark, new_transcripts: DataFrame,
-                       existing_transcripts: DataFrame | None,
-                       existing_entities: DataFrame | None,
-                       existing_edges: DataFrame | None,
-                       run_ts: datetime) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The add_episode semantics over tables via **touched-group
-    recomputation**: every dedup/versioning rule is scoped by ``group_id``
-    (the reference scopes all reads by group, ``nodes.py:84``), so a
-    micro-batch only needs to rebuild the conversations it touches —
-    old+new turns of those groups re-run the batch stages, and all other
-    groups' rows are carried over untouched. This is exact (provably equal
-    to a full batch rebuild) and incremental-cost ∝ touched-conversation
-    size, not graph size — the Spark-native form of the reference's
-    per-episode candidate-join-vs-graph pattern (J3-J5).
+def replace_groups(edges: DataFrame | None, entities: DataFrame | None,
+                   old_edges: DataFrame | None,
+                   old_entities: DataFrame | None, run_ts: datetime,
+                   ontology=None) -> tuple[DataFrame, DataFrame]:
+    """The one incremental write step. Every dedup/versioning rule is
+    scoped by ``group_id`` (episodes → edges → entities is an acyclic
+    foreign-key chain keyed by group), so a write rebuilds only the
+    groups it touches and carries the rest over.
 
-    Returns (merged_transcripts, merged_entities, merged_edges); under
-    Iceberg the merge is ``overwritePartitions`` on the touched group_ids.
-    """
-    from graphiti_spark.plans.pipeline import build_graph
+    ``edges``/``entities`` are the touched groups' rebuilt tables (None
+    when nothing was rebuilt); ``old_edges``/``old_entities`` are the same
+    groups' rows before the write (None when there is no prior state).
+    A rebuild from transcripts cannot reproduce manual edges — the ones
+    with empty episode provenance — so they are folded back in through
+    :func:`remerge_edges`, with their raw ``invalid_at`` (always NULL for
+    :func:`add_triplet`) restored so a removed invalidating episode no
+    longer closes them. The entities those edges point at that the
+    rebuild did not produce are carried over. Returns the touched
+    groups' (edges, entities): a fresh build over their turns plus their
+    manual triplets. With no old manual edges nothing is folded and the
+    rebuild is returned unchanged."""
+    from graphiti_spark.operators.incremental import stored_edges_to_raw
 
-    if existing_transcripts is not None:
-        all_tr = existing_transcripts.unionByName(new_transcripts) \
-            .dropDuplicates(["conv_id", "turn_idx"])
-    else:
-        all_tr = new_transcripts
-    affected = new_transcripts.select("conv_id").distinct()
-    touched = all_tr.join(F.broadcast(affected), "conv_id", "left_semi")
-
-    g = build_graph(spark, touched, run_ts=run_ts)
-    new_entities, new_edges = g.entities, g.edges
-
-    def merge(existing, new):
-        if existing is None:
-            return new
-        kept = existing.join(
-            F.broadcast(affected.select(F.col("conv_id").alias("group_id"))),
-            "group_id", "left_anti")
-        return kept.unionByName(new.select(existing.columns))
-
-    return (all_tr, merge(existing_entities, new_entities),
-            merge(existing_edges, new_edges))
+    if old_edges is None:
+        return edges, entities
+    manual = old_edges.where(F.size(F.coalesce(
+        "episodes", F.array().cast("array<string>"))) == 0)
+    if manual.isEmpty():
+        return edges, entities
+    raw = stored_edges_to_raw(manual).withColumn(
+        "invalid_at", F.lit(None).cast("timestamp"))
+    edges = remerge_edges(edges, raw, run_ts, ontology=ontology)
+    ends = (manual.select(F.col("source_node_uuid").alias("uuid"))
+            .union(manual.select(F.col("target_node_uuid").alias("uuid"))))
+    carried = old_entities.join(ends, "uuid", "left_semi")
+    if entities is None:
+        return edges, carried
+    carried = carried.join(entities.select("uuid"), "uuid", "left_anti")
+    return edges, entities.unionByName(carried, allowMissingColumns=True)

@@ -49,24 +49,16 @@ class GraphTables:
     uuid_map: DataFrame
 
 
-def entity_summaries(entities: DataFrame, edges: DataFrame,
-                     restrict: bool = False) -> DataFrame:
+def entity_summaries(entities: DataFrame, edges: DataFrame) -> DataFrame:
     """E4 deterministic stand-in: summary = chronological concat of the
     entity's supporting facts, truncated to 250 words; typed entity
     attributes from the ontology type of the first mention
-    (node_operations.py:295-381). Shared by the batch pipeline and the
-    entity-granular incremental path (operators/incremental.py), which
-    passes ``restrict=True`` to pre-filter the fact scan to its (small)
-    affected-entity subset — the batch path skips that extra join, since
-    there every fact's endpoints are in ``entities`` anyway."""
+    (node_operations.py:295-381)."""
     facts = (edges.select(F.col("source_node_uuid").alias("uuid"),
                           "fact", "valid_at", "created_at")
              .unionByName(edges.select(
                  F.col("target_node_uuid").alias("uuid"),
                  "fact", "valid_at", "created_at")))
-    if restrict:
-        facts = facts.join(F.broadcast(entities.select("uuid")),
-                           "uuid", "left_semi")
     per_entity = (facts
                   .groupBy("uuid")
                   .agg(F.array_join(

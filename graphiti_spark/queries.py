@@ -1697,7 +1697,7 @@ def q_kg_relevant_nodes(spark, sf_dir):
     """J3 ``get_relevant_nodes`` as a driver query: a micro-batch of
     numeric aliases (last token of every 10th customer name) resolves
     against the customer-derived entity table through the REAL
-    entity-granular candidate join (`operators/incremental.relevant_nodes`
+    candidate join (`operators/incremental.relevant_nodes`
     — token-block equi-join, per-(group, token) df cap, duplicate
     verify). The oracle replays blocking, cap, and the verify rule
     (equality | token-subset | token-cosine ≥ 0.8) in SQL."""

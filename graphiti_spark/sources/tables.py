@@ -25,14 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        return "org.apache.iceberg.spark.SparkCatalog" in spark.conf.get(
-            "spark.sql.catalog.spark_catalog", "")
-    except Exception:
-        return False
-
-
 class TableStore:
     """Directory-backed table store with manifests and lineage capture."""
 

@@ -2,16 +2,16 @@
 
 The reference is incremental, not streaming: ``add_episode`` is awaited
 sequentially per group with the graph DB as the only state
-(``graphiti.py:412-415``). Our batch pipeline recovers those semantics via
-the candidate-join-vs-existing-tables pattern, so the streaming wrapper is
-thin: ``foreachBatch`` re-uses the *identical* stage functions per
-micro-batch and merges into the materialized tables.
+(``graphiti.py:412-415``). Our batch pipeline recovers those semantics by
+rebuilding the groups a write touches, so the streaming wrapper is thin:
+``foreachBatch`` re-uses the *identical* stage functions and the API's
+touched-group replace per micro-batch.
 
 The previous-episode context (S3) is a bounded ``rowsBetween(-3,-1)``
 window, so no unbounded state is needed; late turns are handled with a
 watermark on ``ts`` — turns later than the watermark re-enter as a new
-micro-batch and the uuid-keyed merge keeps the result identical to a batch
-rebuild (ids are pure functions of content, rules.py).
+micro-batch and the touched-group rebuild keeps the result identical to a
+batch rebuild (ids are pure functions of content, rules.py).
 """
 
 from __future__ import annotations
@@ -36,10 +36,12 @@ def stream_transcripts(spark: SparkSession, path: str,
 
 class StreamingGraphWriter:
     """foreachBatch sink: per micro-batch, rebuild only the conversations
-    the batch touches and replace ONLY those partitions via dynamic
-    partition overwrite — the parquet form of Iceberg's
-    ``overwritePartitions``. IO per batch is O(touched groups), not
-    O(graph); untouched partitions' files are never rewritten.
+    the batch touches, fold their manual edges back in
+    (``maintenance.replace_groups``, the API's write step) and replace
+    ONLY those partitions via dynamic partition overwrite — the parquet
+    form of Iceberg's ``overwritePartitions``. IO per batch is O(touched
+    groups), not O(graph); untouched partitions' files are never
+    rewritten.
 
     Every output is ``localCheckpoint``-materialized BEFORE the first
     write: the recompute plans read the very partition files the write
@@ -51,11 +53,13 @@ class StreamingGraphWriter:
         self.run_ts = run_ts
 
     def _read_or_none(self, spark: SparkSession, name: str):
+        # ONLY a missing table directory means "no state yet". Any read
+        # failure must raise: mapped to None, the batch would rebuild the
+        # touched groups from itself alone and overwrite their partitions.
         p = os.path.join(self.out_root, name)
-        try:
-            df = spark.read.parquet(p)
-        except Exception:
+        if not os.path.isdir(p):
             return None
+        df = spark.read.parquet(p)
         # partition-column type inference may read a numeric-looking
         # conv_id/group_id back as int — pin the schema's string type
         for c in ("conv_id", "group_id"):
@@ -67,29 +71,34 @@ class StreamingGraphWriter:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        from graphiti_spark.operators.maintenance import replace_groups
         from graphiti_spark.plans.pipeline import build_graph
 
         # A micro-batch's conversation list is bounded (maxFilesPerTrigger
         # caps the batch), so collect it and filter with a LITERAL isin:
-        # conv_id is the store's partition column, so this prunes the
-        # existing-table scan to the touched partition dirs statically —
-        # a semi-join against the batch (the previous shape) listed and
-        # scanned every partition of the grown table on every batch.
+        # conv_id/group_id are the store's partition columns, so this
+        # prunes every existing-table scan to the touched partition dirs
+        # statically.
         convs = [r["conv_id"] for r in
                  batch_df.select("conv_id").distinct().collect()]
-        existing_tr = self._read_or_none(spark, "transcripts")
-        if existing_tr is not None:
-            old_touched = existing_tr.where(F.col("conv_id").isin(convs))
-            touched = (old_touched.select(*batch_df.columns)
+
+        def old(name, key="group_id"):
+            df = self._read_or_none(spark, name)
+            return None if df is None else df.where(F.col(key).isin(convs))
+
+        touched = batch_df
+        old_tr = old("transcripts", "conv_id")
+        if old_tr is not None:
+            touched = (old_tr.select(*batch_df.columns)
                        .unionByName(batch_df)
                        .dropDuplicates(["conv_id", "turn_idx"]))
-        else:
-            touched = batch_df
         g = build_graph(spark, touched, run_ts=self.run_ts)
+        edges, entities = replace_groups(g.edges, g.entities, old("edges"),
+                                         old("entities"), self.run_ts)
 
         outputs = [("transcripts", touched, "conv_id"),
-                   ("entities", g.entities, "group_id"),
-                   ("edges", g.edges, "group_id")]
+                   ("entities", entities, "group_id"),
+                   ("edges", edges, "group_id")]
         materialized = [(name, df.localCheckpoint(eager=True), pcol)
                         for name, df, pcol in outputs]
         for name, df, pcol in materialized:

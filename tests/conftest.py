@@ -10,7 +10,7 @@ from graphiti_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="graphiti_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app="graphiti_spark_tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -172,3 +172,127 @@ def test_save_in_place_after_load(spark, tmp_path):
     assert any("Berlin" in r["fact"] for r in again.edges.collect())
     with _pytest.raises(FileNotFoundError):
         GraphitiSpark.load(spark, str(tmp_path / "nope"), run_ts=TS)
+
+
+def _edge_set(g):
+    return sorted(map(tuple, g.edges.select(
+        "uuid", "group_id", "fact", "valid_at", "invalid_at").collect()))
+
+
+def _entity_uuids(g):
+    return sorted(r["uuid"] for r in g.entities.select("uuid").collect())
+
+
+def test_add_triplet_survives_add_episode(spark):
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    g.add_triplet("conv1", "Alice Smith", "FOUNDED", "Initech",
+                  "Alice Smith founded Initech.")
+    g.add_episode("conv1", "Alice Smith moved to Berlin.")
+    assert g.edges.where(
+        "group_id = 'conv1' AND name = 'FOUNDED'").count() == 1
+    assert g.entities.where(
+        "group_id = 'conv1' AND name = 'Initech'").count() == 1
+    assert any("Berlin" in r["fact"] for r in
+               g.edges.where("group_id = 'conv1'").collect())
+
+
+def test_add_triplet_on_empty_handle_survives_bulk(spark):
+    g = GraphitiSpark(spark, run_ts=TS)
+    g.add_triplet("conv2", "Bob Jones", "FOUNDED", "Initech",
+                  "Bob Jones founded Initech.")
+    assert g.edges.first()["episodes"] == []
+    g.add_episode_bulk(_tr(spark, ROWS))
+    assert g.edges.where(
+        "group_id = 'conv2' AND name = 'FOUNDED'").count() == 1
+    assert g.entities.where("name = 'Initech'").count() == 1
+    assert g.edges.where(
+        "group_id = 'conv2' AND name = 'WORKS_AT'").count() == 1
+
+
+def test_removed_episode_stays_removed(spark):
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    gone = g.episodes.where("group_id = 'conv1' AND turn_idx = 0") \
+        .select("uuid").head()[0]
+    g.remove_episode([gone])
+    g.add_episode("conv1", "Alice Smith moved to Berlin.")
+    assert g.episodes.where(F.col("uuid") == gone).count() == 0
+    assert g.transcripts.where(
+        "conv_id = 'conv1' AND text LIKE '%Acme%'").count() == 0
+    facts = [r["fact"] for r in
+             g.edges.where("group_id = 'conv1'").collect()]
+    assert not any("Acme" in f for f in facts)
+    assert any("Berlin" in f for f in facts)
+
+
+def _plan_nodes(df) -> int:
+    """Node count of a DataFrame's analyzed logical plan, counted as
+    perfbench/tracing.plan_nodes counts it."""
+    stack, n = [df._jdf.queryExecution().analyzed()], 0
+    while stack:
+        node = stack.pop()
+        n += 1
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+def test_writes_drop_communities_and_keep_plans_flat(spark):
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    nodes = []
+    for k, place in enumerate(("Berlin", "Rome", "Oslo", "Lima")):
+        if k == 0:
+            g.build_communities()
+        g.add_episode("conv1", f"Alice Smith moved to {place}.")
+        assert g.communities is None and g.community_edges is None
+        nodes.append(_plan_nodes(g.edges))
+    assert nodes[3] == nodes[1]
+    g.build_communities()
+    g.add_triplet("conv2", "Bob Jones", "FOUNDED", "Initech",
+                  "Bob Jones founded Initech.")
+    assert g.communities is None
+    g.build_communities()
+    g.remove_episode([g.episodes.select("uuid").head()[0]])
+    assert g.communities is None
+
+
+def test_write_sequence_equals_fresh_build(spark, tmp_path):
+    """add_episode_bulk → add_triplet → add_episode → remove_episode →
+    save/load equals a fresh build over the surviving turns with the
+    surviving manual triplets added; communities saved before the writes
+    do not come back."""
+    root = str(tmp_path / "graph")
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    g.build_communities()
+    g.save(root)
+    g.add_triplet("conv1", "Alice Smith", "FOUNDED", "Initech",
+                  "Alice Smith founded Initech.")
+    g.add_triplet("conv2", "Bob Jones", "WORKS_AT", "Globex",
+                  "Bob Jones works at Globex.")
+    g.add_episode("conv1", "Alice Smith works at Hooli.")
+    g.remove_episode([g.episodes.where("group_id = 'conv2'")
+                      .select("uuid").head()[0]])
+    g.save(root)
+    h = GraphitiSpark.load(spark, root, run_ts=TS)
+    assert h.communities is None and h.community_edges is None
+
+    fresh = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(h.transcripts)
+    fresh.add_triplet("conv1", "Alice Smith", "FOUNDED", "Initech",
+                      "Alice Smith founded Initech.")
+    fresh.add_triplet("conv2", "Bob Jones", "WORKS_AT", "Globex",
+                      "Bob Jones works at Globex.")
+    assert h.transcripts.where("conv_id = 'conv2'").count() == 0
+    assert _edge_set(h) == _edge_set(fresh)
+    assert _entity_uuids(h) == _entity_uuids(fresh)
+
+
+def test_aware_times_are_converted_to_utc(spark):
+    plus2 = dt.timezone(dt.timedelta(hours=2))
+    g = GraphitiSpark(spark, run_ts=TS)
+    g.add_triplet("conv9", "Eve Adams", "FOUNDED", "Umbrella",
+                  "Eve Adams founded Umbrella.",
+                  valid_at=dt.datetime(2024, 3, 1, 12, tzinfo=plus2))
+    g.add_episode("conv9", "Eve Adams lives in Oslo.",
+                  reference_time=dt.datetime(2024, 5, 1, 12, tzinfo=plus2))
+    assert g.transcripts.head()["ts"] == dt.datetime(2024, 5, 1, 10)
+    assert g.edges.where("name = 'FOUNDED'").head()["valid_at"] == \
+        dt.datetime(2024, 3, 1, 10)

@@ -1,22 +1,13 @@
-"""Entity-granular incremental maintenance (J3-J5, operators/incremental).
-
-The central contract: for appended turns whose mentions either repeat an
-existing surface form or introduce brand-new entities, the entity-granular
-micro-batch result EQUALS a from-scratch batch rebuild — edges (including
-versioning-resolved invalid_at), entities, summaries, member lists. Alias
-resolution (new surface form matching an existing canonical) follows the
-reference's add_episode semantics instead: the batch node resolves TO the
-existing canonical (no retroactive re-canonicalization), which is also
-where reference add_episode differs from add_episode_bulk.
-"""
+"""Incremental-maintenance helpers (operators/incremental): the J3
+candidate join and the stored→raw re-slice that the touched-group
+replace re-merges through."""
 
 from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
 from graphiti_spark.operators.incremental import (
-    incremental_update_entity, relevant_edges, relevant_nodes,
-    stored_edges_to_raw)
+    relevant_nodes, stored_edges_to_raw)
 from graphiti_spark.plans.pipeline import build_graph
 
 RUN_TS = datetime(2025, 1, 1, tzinfo=timezone.utc)
@@ -48,74 +39,12 @@ BASE = [
 
 NEW = [
     # duplicate fact (merges episodes), functional-pred supersede,
-    # negation, and a brand-new entity — all in touched groups c1/c2.
+    # negation, and a brand-new entity.
     ("c1", 2, "Alice works at Acme Corp.", 2),
     ("c1", 3, "Alice works at Hooli.", 3),          # supersedes Acme
     ("c2", 1, "Bob Jones no longer works at Globex.", 1),
     ("c2", 2, "Dave works at Globex.", 2),          # new entity
 ]
-
-
-def test_entity_granular_equals_full_rebuild(spark):
-    base = _turns(spark, BASE)
-    new = _turns(spark, NEW)
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-
-    tr, ents, edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-
-    full = build_graph(spark, base.unionByName(new), run_ts=RUN_TS)
-    assert _edge_key(edges) == _edge_key(full.edges)
-
-    want = {r["uuid"]: (r["name"], r["summary"],
-                        tuple(r["member_uuids"] or []))
-            for r in full.entities.collect()}
-    got = {r["uuid"]: (r["name"], r["summary"],
-                       tuple(r["member_uuids"] or []))
-           for r in ents.collect()}
-    assert got == want
-    assert tr.count() == base.count() + new.count()
-
-
-def test_untouched_group_carried_over_not_recomputed(spark):
-    base = _turns(spark, BASE)
-    new = _turns(spark, NEW)
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-
-    _, ents, edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-
-    # c3's rows are byte-identical to the pre-batch graph (anti-join
-    # carry-over, not recompute).
-    before = {tuple(r) for r in g0.edges.where("group_id='c3'")
-              .select("uuid", "fact", "valid_at", "invalid_at").collect()}
-    after = {tuple(r) for r in edges.where("group_id='c3'")
-             .select("uuid", "fact", "valid_at", "invalid_at").collect()}
-    assert before == after
-    # and Carol's summary row survived untouched
-    carol = ents.where("name='Carol'").collect()
-    assert len(carol) == 1 and "Initech" in carol[0]["summary"]
-
-
-def test_alias_resolves_to_existing_canonical(spark):
-    base = _turns(spark, [("c1", 0, "Bob Jones works at Globex.", 0)])
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-    new = _turns(spark, [("c1", 1, "Bob lives in Paris.", 1)])
-
-    _, ents, edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-
-    bob = g0.entities.where("name_norm='bob jones'").collect()[0]
-    # 'Bob' (token subset of 'bob jones') resolved to the EXISTING
-    # canonical: no new entity row, and the new edge's source is the
-    # existing uuid.
-    assert ents.where("name_norm='bob'").count() == 0
-    lives = edges.where("name='LIVES_IN'").collect()
-    assert len(lives) == 1 and lives[0]["source_node_uuid"] == bob["uuid"]
-    # member list gained the alias uuid
-    members = (ents.where(F.col("uuid") == bob["uuid"])
-               .collect()[0]["member_uuids"])
-    assert len(members) >= 2
 
 
 def test_relevant_nodes_candidates_are_verified(spark):
@@ -130,105 +59,6 @@ def test_relevant_nodes_candidates_are_verified(spark):
            for r in relevant_nodes(batch, ents).collect()}
     # 'bob' ⊂ 'bob jones' same group only; 'zeta ltd' matches nothing.
     assert got == {("b1", "u1")}
-
-
-def test_relevant_edges_is_affected_slice_only(spark):
-    edges = spark.createDataFrame(
-        [("g1", "s1", "e1"), ("g1", "s2", "e2"), ("g2", "s1", "e3")],
-        "group_id string, source_node_uuid string, uuid string")
-    batch = spark.createDataFrame(
-        [("g1", "s1", "x")],
-        "group_id string, source_node_uuid string, uuid string")
-    got = {r["uuid"] for r in relevant_edges(edges, batch).collect()}
-    assert got == {"e1"}
-
-
-def test_delta_only_matches_merge(spark):
-    """delta_only returns exactly the rows the full merge recomputes:
-    untouched ∪ delta == merged edges, and delta entities == the
-    refreshed subset of merged entities."""
-    base = _turns(spark, BASE)
-    new = _turns(spark, NEW)
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-
-    keys, d_ents, d_edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS, delta_only=True)
-    _, m_ents, m_edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-
-    untouched = g0.edges.join(
-        keys, ["group_id", "source_node_uuid"], "left_anti")
-    assert _edge_key(untouched.unionByName(
-        d_edges.select(untouched.columns))) == _edge_key(m_edges)
-    # delta entity rows appear verbatim in the merged entities
-    merged = {(r["uuid"], r["summary"]) for r in m_ents.collect()}
-    delta = {(r["uuid"], r["summary"]) for r in d_ents.collect()}
-    assert delta <= merged
-    # the touched groups' entities are all in the delta
-    assert {r["group_id"] for r in d_ents.collect()} == {"c1", "c2"}
-
-
-def test_mention_only_new_entity_survives(spark):
-    """A brand-new entity with NO incident edge (self-pair sentence, a
-    named speaker on a template-less turn) must still appear in the
-    merged entities — regression for affected_ent being derived solely
-    from recomputed edge endpoints."""
-    base = _turns(spark, BASE)
-    new = spark.createDataFrame([
-        # self-pair: mention 'Paris' extracted, triple dropped
-        ("c1", 2, "user", "Paris lives in Paris.", None,
-         datetime(2024, 1, 1, 2)),
-        # named speaker (episode content is "role: text"), template-less
-        # body → mention-only 'Eve'
-        ("c4", 0, "Eve", "The weather is nice today.", None,
-         datetime(2024, 1, 1, 0)),
-    ], SCHEMA)
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-    _, ents, edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-
-    full = build_graph(spark, base.unionByName(new), run_ts=RUN_TS)
-    want = {r["uuid"]: (r["name"], r["summary"],
-                        tuple(r["member_uuids"] or []))
-            for r in full.entities.collect()}
-    got = {r["uuid"]: (r["name"], r["summary"],
-                       tuple(r["member_uuids"] or []))
-           for r in ents.collect()}
-    assert got == want
-    assert "Eve" in {v[0] for v in got.values()}
-    assert _edge_key(edges) == _edge_key(full.edges)
-
-
-def test_delta_includes_edgeless_member_update(spark):
-    """An existing entity that gains member_uuids from an alias resolved
-    by a mention-only turn (no new edge) must reach the delta writer —
-    an Iceberg MERGE driven by the delta would otherwise lose the
-    member-list update."""
-    base = _turns(spark, [("c1", 0, "Bob Jones works at Globex.", 0)])
-    g0 = build_graph(spark, base, run_ts=RUN_TS)
-    bob = g0.entities.where("name_norm='bob jones'").collect()[0]
-    # speaker alias in the ROLE slot (content is "role: text"); the body
-    # matches no template, so this turn yields a mention and no edge
-    new = spark.createDataFrame(
-        [("c1", 1, "Bob", "It is a nice day.", None,
-          datetime(2024, 1, 1, 1))], SCHEMA)
-
-    _, d_ents, d_edges = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS, delta_only=True)
-    assert d_edges.count() == 0
-    delta_bob = d_ents.where(F.col("uuid") == bob["uuid"]).collect()
-    assert len(delta_bob) == 1
-    assert len(delta_bob[0]["member_uuids"]) > len(bob["member_uuids"] or
-                                                   [bob["uuid"]]) - 1
-    # and the merged path agrees with a full rebuild on the member list
-    _, m_ents, _ = incremental_update_entity(
-        spark, new, base, g0.entities, g0.edges, RUN_TS)
-    full = build_graph(spark, base.unionByName(new), run_ts=RUN_TS)
-    want = {r["uuid"]: tuple(r["member_uuids"] or [])
-            for r in full.entities.collect()}
-    got = {r["uuid"]: tuple(r["member_uuids"] or [])
-           for r in m_ents.collect()}
-    assert got == want
 
 
 def test_stored_edges_roundtrip_through_merge(spark):

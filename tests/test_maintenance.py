@@ -1,5 +1,6 @@
 """Maintenance-surface tests: lookups, pagination, traversal semi-joins,
-episode removal + orphan GC, add_triplet, incremental merge."""
+add_triplet. The touched-group replace is tested through the facade
+(tests/test_api.py)."""
 
 from datetime import datetime, timezone
 
@@ -61,22 +62,13 @@ def test_clear_groups(spark, tables):
     assert [r["uuid"] for r in left] == ["ep3"]
 
 
-def test_remove_episode_with_orphan_gc(spark, tables):
-    episodes, entities, epi_edges, edges = tables
-    out = MT.remove_episodes(episodes, epi_edges, entities, edges, ["ep1"])
-    assert {r["uuid"] for r in out["episodes"].collect()} == {"ep2", "ep3"}
-    # e1's only provenance was ep1 → dropped; e2 survives via ep2
-    assert {r["uuid"] for r in out["edges"].collect()} == {"e2", "e3"}
-    # acme was mentioned only by ep1 → orphan-collected; alice survives
-    assert {r["uuid"] for r in out["entities"].collect()} == {"alice", "bob"}
-
-
 def test_add_triplet_routes_through_pipeline(spark):
     edges = MT.add_triplet(spark, "gX", "Alice", "WORKS_AT", "Acme Corp",
                            "Alice works at Acme Corp.", RUN_TS)
     rows = edges.collect()
     assert len(rows) == 1
     assert rows[0]["name"] == "WORKS_AT" and rows[0]["group_id"] == "gX"
+    assert rows[0]["episodes"] == []          # created by no episode
 
 
 def test_add_triplet_accepts_arbitrary_predicates(spark):
@@ -97,64 +89,6 @@ def test_add_triplet_accepts_arbitrary_predicates(spark):
     assert r["valid_at"] is not None
     with pytest.raises(ValueError):
         MT.add_triplet(spark, "gY", "X", "SELF", "X", "X is X.", RUN_TS)
-
-
-def test_remove_episodes_keeps_null_provenance_edges(spark, tables):
-    """An edge with null/empty `episodes` (manually inserted) is unrelated
-    to any episode removal and must be kept."""
-    episodes, entities, epi_edges, _ = tables
-    edges = spark.createDataFrame(
-        [("e1", "g1", "alice", "acme", ["ep1"]),
-         ("manual", "g1", "alice", "acme", None),
-         ("empty", "g1", "alice", "acme", [])],
-        "uuid string, group_id string, source_node_uuid string,"
-        " target_node_uuid string, episodes array<string>")
-    out = MT.remove_episodes(episodes, epi_edges, entities, edges, ["ep1"])
-    assert {r["uuid"] for r in out["edges"].collect()} == {"manual", "empty"}
-
-
-def test_incremental_update_touched_groups_only(spark):
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    tr1 = spark.createDataFrame(
-        [("c1", 0, "user", "Alice works at Acme Corp.", None,
-          datetime(2024, 1, 1)),
-         ("c9", 0, "user", "Carol Chen lives in Oslo.", None,
-          datetime(2024, 1, 1))], schema)
-    tr_all, ents1, edges1 = MT.incremental_update(
-        spark, tr1, None, None, None, RUN_TS)
-    tr_all, ents1, edges1 = tr_all.cache(), ents1.cache(), edges1.cache()
-    n_edges1 = edges1.count()
-
-    # second batch touches only c1: duplicate fact + a new fact
-    tr2 = spark.createDataFrame(
-        [("c1", 0, "user", "Alice works at Acme Corp.", None,
-          datetime(2024, 1, 1)),
-         ("c1", 1, "user", "Alice lives in Paris.", None,
-          datetime(2024, 1, 2))], schema)
-    tr_all2, ents2, edges2 = MT.incremental_update(
-        spark, tr2, tr_all, ents1, edges1, RUN_TS)
-    assert edges2.count() == n_edges1 + 1        # dup merged, LIVES_IN added
-    assert ents2.select("uuid").distinct().count() == ents2.count()
-    # untouched group c9 rows carried over bit-identically
-    keep = {tuple(r) for r in edges1.where("group_id='c9'")
-            .select("uuid", "fact").collect()}
-    got = {tuple(r) for r in edges2.where("group_id='c9'")
-           .select("uuid", "fact").collect()}
-    assert keep == got
-
-    # equivalence with a full batch rebuild over the union of turns
-    from graphiti_spark.plans.pipeline import build_graph
-    full = build_graph(
-        spark, tr1.unionByName(tr2).dropDuplicates(["conv_id", "turn_idx"]),
-        run_ts=RUN_TS)
-    want = {tuple(r) for r in full.edges
-            .select("uuid", "source_node_uuid", "name",
-                    "target_node_uuid").collect()}
-    have = {tuple(r) for r in edges2
-            .select("uuid", "source_node_uuid", "name",
-                    "target_node_uuid").collect()}
-    assert have == want
 
 
 def test_get_nodes_and_edges_by_episode(spark, tables):

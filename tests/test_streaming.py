@@ -99,3 +99,20 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     assert by_text["aa"] == [1]            # first arrival won
     assert by_text["bb"] == [2]
     assert by_text["cc"] == [5]
+
+
+def test_unreadable_state_raises(spark, tmp_path):
+    """Only a missing table directory means "no state yet": a state dir
+    that cannot be read must fail the batch, not be treated as empty
+    (which would rebuild the touched groups from the batch alone and
+    overwrite their partitions)."""
+    import pytest
+
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = tmp_path / "out"
+    (out / "transcripts").mkdir(parents=True)
+    (out / "transcripts" / "part-0.txt").write_text("not parquet")
+    writer = StreamingGraphWriter(str(out), RUN_TS)
+    with pytest.raises(Exception):
+        writer(_turns(spark, [("c1", 0, "Alice works at Acme Corp.", 0)]), 0)
