@@ -42,13 +42,13 @@ HEADLINE = [
     "kg_extract_triples", "kg_mentions", "kg_json_episodes",
     "kg_fact_dates", "kg_custom_ontology", "kg_relevant_nodes",
     "bm25_search", "composite_search", "doc_fingerprint",
-    "simhash_buckets", "embedding_near_dup", "media_probe",
+    "simhash_buckets", "embedding_near_dup",
     # round-4 additions
-    "media_decode", "kg_anaphora", "kg_context_coref", "kg_speech_acts",
+    "kg_anaphora", "kg_context_coref", "kg_speech_acts",
     "kg_mmr_diverse", "kg_communities_ref", "embedding_knn_ivf",
     # round-5 additions
     "pii_scrub", "quality_repetition", "stratified_sample", "kg_pagerank",
-    "events_asof_join", "decontaminate", "sequence_pack", "domain_mixture",
+    "events_asof_join", "decontaminate", "domain_mixture",
     "length_quantiles", "keyword_tfidf", "quality_logprob",
     "embedding_int8", "inverted_index", "graph_triangles",
     "weighted_sample", "boilerplate_ngrams",

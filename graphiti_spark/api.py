@@ -84,7 +84,13 @@ class GraphitiSpark:
         """``Graphiti.add_episode_bulk`` (graphiti.py, bulk path): ingest
         turn rows ``(conv_id, turn_idx, role, text, tool, ts)`` and
         rebuild the conversations they touch. A re-supplied
-        ``(conv_id, turn_idx)`` takes the NEW text."""
+        ``(conv_id, turn_idx)`` takes the NEW text. A NULL ``conv_id``
+        or ``turn_idx`` raises ``ValueError``: such a turn never matches
+        the key joins, so it could be neither replaced nor rebuilt."""
+        if not transcripts.where(F.col("conv_id").isNull()
+                                 | F.col("turn_idx").isNull()).isEmpty():
+            raise ValueError("add_episode_bulk: conv_id and turn_idx "
+                             "must not be NULL")
         all_tr = transcripts
         if self.transcripts is not None:
             # anti-join first: dropDuplicates over old ∪ new would keep
@@ -310,7 +316,7 @@ class GraphitiSpark:
              with_embeddings: bool = True) -> "GraphitiSpark":
         """Re-open a saved graph: the handle resumes incremental updates
         and searches from the on-disk tables (restart-safety lives in
-        the files, not driver state — the LshIndex/TableStore rule)."""
+        the files, not in driver state)."""
         if "://" in root:
             raise NotImplementedError(
                 "load() probes the local filesystem; for a remote or "

@@ -6,8 +6,10 @@ Deterministic replacements for the reference's external services:
     newline→space) with a feature-hash embedding so cosine math is
     reproducible offline;
   * cosine / L2 mirror ``helpers.py:104-107`` and ``bulk_utils.py:236-241``;
-  * minhash / simhash implement the LSH blocking the reference lacks
-    (its candidate generation is O(n²) Python, ``bulk_utils.py:208-244``).
+  * minhash / simhash are the Python references for the document-dedup
+    queries' signatures; the pipeline's own blocking (which the
+    reference lacks: its candidate generation is O(n²) Python,
+    ``bulk_utils.py:208-244``) is ``operators/ann.signlsh_buckets``.
 
 All functions are batch-oriented (lists/ndarrays in, ndarray out) so the
 pandas UDF wrappers stay Arrow-vectorized.

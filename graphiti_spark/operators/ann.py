@@ -219,13 +219,10 @@ def near_dup_pairs_lsh(embeddings: DataFrame, n_planes: int = 12,
 def minhash_band_keys(docs: DataFrame, id_col: str = "doc_id",
                       toks_col: str = "toks", n_hashes: int = 8,
                       bands: int = 2) -> DataFrame:
-    """→ (id_col, bk): one LSH band key per (doc, band) — the shared
-    signature step behind both the batch self-join
-    (:func:`minhash_candidate_pairs`) and the incremental at-rest index
-    (:mod:`graphiti_spark.streaming.lsh_index`). Engine-portable hashes
-    (md5 of 'seed:token'), so the same doc always produces the same keys
-    on any engine/run — the property that lets an index built
-    incrementally equal one rebuilt from scratch."""
+    """→ (id_col, bk): one LSH band key per (doc, band) — the signature
+    step behind the batch self-join (:func:`minhash_candidate_pairs`).
+    Engine-portable hashes (md5 of 'seed:token'), so the same doc always
+    produces the same keys on any engine/run."""
     rows_per_band = n_hashes // bands
     tok = docs.select(id_col, F.explode(toks_col).alias("tok"))
     seeds = docs.sparkSession.range(n_hashes).select(

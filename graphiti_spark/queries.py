@@ -518,8 +518,7 @@ def q_dedup_minhash(spark, sf_dir):
     dropped at MINHASH_MAX_BUCKET via a bk-partitioned count window (rides
     the same bk shuffle the self-join needs — no extra scan). Engine-
     portable because the hash is md5 of 'seed:token' (identical in any
-    engine). Plan lives in operators/ann.minhash_candidate_pairs; the
-    1M-doc scale probe (scripts/exp_docs.py) runs the same function."""
+    engine). Plan lives in operators/ann.minhash_candidate_pairs."""
     from graphiti_spark.operators.ann import minhash_candidate_pairs
     d = (load(spark, sf_dir, "documents")
          .select("doc_id", F.array_distinct(F.expr(_TOKS)).alias("toks")))
@@ -900,110 +899,6 @@ SELECT lang, count(*) AS n_docs FROM p GROUP BY lang
 
 
 SQL_LANG_ID_NGRAM = _sql_lang_id_ngram()
-
-
-def q_media_probe(spark, sf_dir):
-    """Multimodal metadata extraction, end-to-end and oracle-checked:
-    real container bytes are BUILT JVM-side from the documents table
-    (multimodal.synthetic_containers — PNG with per-doc dims + real
-    IHDR CRC via Spark's crc32, valid 500 ms WAV; hex → unhex, zero
-    Python) and parsed BACK by the distributed header probe
-    (multimodal.sniff_media, narrow Arrow mapInPandas). DuckDB can't
-    parse binaries, but the dims are closed-form in doc_id — the oracle
-    states them arithmetically, so a probe that misreads any byte
-    mismatches."""
-    from graphiti_spark.operators.multimodal import (
-        sniff_media, synthetic_containers)
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    out = sniff_media(synthetic_containers(d))
-    return out.select(
-        F.regexp_replace("media_id", "^m", "").cast("long").alias("doc_id"),
-        "kind", "mime_detected", "width", "height", "duration_ms",
-        "n_bytes")
-
-
-SQL_MEDIA_PROBE = """
-SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-       CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END
-         AS mime_detected,
-       CASE WHEN doc_id % 2 = 0
-            THEN CAST(16 + doc_id % 32 AS INTEGER) END AS width,
-       CASE WHEN doc_id % 2 = 0
-            THEN CAST(9 + doc_id % 7 AS INTEGER) END AS height,
-       CASE WHEN doc_id % 2 = 1 THEN CAST(500 AS INTEGER) END
-         AS duration_ms,
-       CASE WHEN doc_id % 2 = 0 THEN CAST(45 AS BIGINT)
-            ELSE CAST(8044 AS BIGINT) END AS n_bytes
-FROM documents WHERE doc_id < 500
-"""
-
-
-def q_media_decode(spark, sf_dir):
-    """REAL pixel/sample decode, end-to-end and oracle-checked: synthetic
-    containers WITH content (multimodal.synthetic_containers_px — 8-bit
-    grayscale PNG whose rows cycle all five spec filter types, PCM16
-    WAV with a mod-4001 sample ramp) are decoded back by the distributed
-    stdlib codec (decode_stats: zlib inflate + per-row unfilter / RIFF +
-    int16 frames, narrow Arrow mapInPandas). The emitted statistics are
-    INTEGER-exact sums, and both the pixels and the samples are pure
-    arithmetic in doc_id — so DuckDB states the expected stats
-    closed-form; any mis-inverted filter, wrong stride, or endianness
-    slip mismatches the hash."""
-    from graphiti_spark.operators.multimodal import (
-        decode_stats, synthetic_containers_px)
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    out = decode_stats(synthetic_containers_px(d))
-    return out.select(
-        F.regexp_replace("media_id", "^m", "").cast("long").alias("doc_id"),
-        "kind", "width", "height", "channels", "px_sum", "px_min", "px_max",
-        "n_samples", "sample_rate", "sample_sum", "sample_sumsq", "decoded")
-
-
-SQL_MEDIA_DECODE = """
-WITH img AS (
-  SELECT d.doc_id,
-         CAST(16 + d.doc_id % 32 AS INTEGER) AS width,
-         CAST(9 + d.doc_id % 7 AS INTEGER) AS height,
-         SUM((d.doc_id + 17 * y.y) % 256) AS colsum,
-         MIN((d.doc_id + 17 * y.y) % 256) AS vmin,
-         MAX((d.doc_id + 17 * y.y) % 256) AS vmax
-  FROM (SELECT doc_id FROM documents
-        WHERE doc_id < 500 AND doc_id % 2 = 0) d
-  JOIN generate_series(0, 14) AS y(y) ON y.y < 9 + d.doc_id % 7
-  GROUP BY d.doc_id
-), aud AS (
-  SELECT d.doc_id,
-         SUM(((37 * d.doc_id + 11 * i.i) % 4001) - 2000) AS ssum,
-         SUM((((37 * d.doc_id + 11 * i.i) % 4001) - 2000)
-             * (((37 * d.doc_id + 11 * i.i) % 4001) - 2000)) AS ssumsq
-  FROM (SELECT doc_id FROM documents
-        WHERE doc_id < 500 AND doc_id % 2 = 1) d
-  CROSS JOIN generate_series(0, 1599) AS i(i)
-  GROUP BY d.doc_id
-)
-SELECT doc_id, 'image' AS kind, width, height,
-       CAST(1 AS INTEGER) AS channels,
-       CAST(width * colsum AS BIGINT) AS px_sum,
-       CAST(vmin AS INTEGER) AS px_min, CAST(vmax AS INTEGER) AS px_max,
-       CAST(NULL AS BIGINT) AS n_samples,
-       CAST(NULL AS INTEGER) AS sample_rate,
-       CAST(NULL AS BIGINT) AS sample_sum,
-       CAST(NULL AS BIGINT) AS sample_sumsq,
-       TRUE AS decoded
-FROM img
-UNION ALL
-SELECT doc_id, 'audio' AS kind, CAST(NULL AS INTEGER) AS width,
-       CAST(NULL AS INTEGER) AS height, CAST(NULL AS INTEGER) AS channels,
-       CAST(NULL AS BIGINT) AS px_sum, CAST(NULL AS INTEGER) AS px_min,
-       CAST(NULL AS INTEGER) AS px_max,
-       CAST(1600 AS BIGINT) AS n_samples,
-       CAST(8000 AS INTEGER) AS sample_rate,
-       CAST(ssum AS BIGINT) AS sample_sum,
-       CAST(ssumsq AS BIGINT) AS sample_sumsq,
-       TRUE AS decoded
-FROM aud
-"""
 
 
 def q_cross_encoder_rerank(spark, sf_dir):
@@ -2239,30 +2134,14 @@ def q_embedding_knn_ivf(spark, sf_dir):
     cell a vector sits in, never whether it is scanned) and must equal
     brute force exactly — which makes SQL_EMBEDDING_KNN a valid oracle for
     the whole IVF plan shape (cell partitioning, probe join, in-cell
-    rerank). The pruned scale path (nprobe < n_cells) is
-    ``embedding_knn_ivf_pruned`` below, rows-only + pytest recall gate."""
+    rerank). The pruned scale path (nprobe < n_cells) is covered by the
+    recall gate in tests/test_ann.py."""
     from graphiti_spark.operators import ann
     e = load(spark, sf_dir, "embeddings")
     queries = (e.where(F.col("vec_id") < 10)
                .select(F.col("vec_id").alias("query_id"), "embedding"))
     cents, assign = ann.build_ivf(e, n_cells=8)
     return ann.ivf_knn(e, queries, cents, assign, k=5, nprobe=8)
-
-
-def q_embedding_knn_ivf_pruned(spark, sf_dir):
-    """IVF-pruned ANN (the 100 TB scale path): coarse-quantizer cells →
-    probe top-4 of 8 → exact rerank inside. Deterministic but iterative
-    (Lloyd step float avg) → no SQL oracle; pytest asserts recall vs
-    brute force (tests/test_ann.py). Kept out of the driver QUERIES dict
-    so the only rows-only driver entry is kg_build_edges; the oracle-
-    checked exhaustive probe (q_embedding_knn_ivf) exercises the same
-    IVF plan shape end-to-end."""
-    from graphiti_spark.operators import ann
-    e = load(spark, sf_dir, "embeddings")
-    queries = (e.where(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    cents, assign = ann.build_ivf(e, n_cells=8)
-    return ann.ivf_knn(e, queries, cents, assign, k=5, nprobe=4)
 
 
 def q_embedding_near_dup(spark, sf_dir):
@@ -2640,67 +2519,6 @@ SELECT doc_id, CAST(count(*) AS INTEGER) AS matched_ngrams
 FROM (SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 97 != 0) x
 JOIN bench USING (gram)
 GROUP BY doc_id
-"""
-
-
-def q_sequence_pack(spark, sf_dir):
-    """Sequence packing (operators/packing.pack_sequences): concat-and-chunk
-    packing coordinates for 2048-token training sequences — the last step
-    of every pre-training pipeline. Docs are sharded by (lang, md5 bucket)
-    so the window cumsum is the ONLY shuffle and no reducer sees more than
-    one shard (sequences never cross shards — the practice that keeps
-    shards independently writable/resumable at 100 TB). Token cost reuses
-    the BPE-ish model from q_token_count; every output column is BIGINT so
-    the value hash is exact. The oracle replays the same window prefix sum
-    and floor divisions in SQL."""
-    from graphiti_spark.operators.packing import pack_sequences
-    d = load(spark, sf_dir, "documents")
-    pieces = "regexp_extract_all(text, '[A-Za-z0-9]+|[^\\\\sA-Za-z0-9]', 0)"
-    per_doc = F.expr(
-        f"aggregate({pieces}, CAST(0 AS BIGINT), (acc, p) -> acc + "
-        "CASE WHEN p RLIKE '^[A-Za-z0-9]' "
-        "THEN CAST((length(p) + 3) DIV 4 AS BIGINT) ELSE CAST(1 AS BIGINT) END)")
-    bucket = (F.conv(F.substring(F.md5(F.concat(
-        F.lit("pack:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("bigint") % 4)
-    base = d.select(
-        "doc_id",
-        F.concat(F.col("lang"), F.lit("/"), bucket.cast("string"))
-         .alias("shard"),
-        per_doc.alias("doc_tokens"))
-    out = pack_sequences(base, token_col="doc_tokens", budget=2048,
-                         order_cols=["doc_id"], shard_col="shard")
-    return out.select("doc_id", "shard", "doc_tokens", "start_tok",
-                      "first_seq", "last_seq", "n_seqs", "seq_offset")
-
-
-SQL_SEQUENCE_PACK = r"""
-WITH per_doc AS (
-  SELECT doc_id,
-         lang || '/' || CAST(
-           CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)),
-                                1, 8)) AS BIGINT) % 4 AS VARCHAR) AS shard,
-         CAST(list_sum(list_transform(
-           regexp_extract_all(text, '[A-Za-z0-9]+|[^\sA-Za-z0-9]'),
-           p -> CASE WHEN regexp_matches(p, '^[A-Za-z0-9]')
-                     THEN (length(p) + 3) // 4 ELSE 1 END)) AS BIGINT)
-           AS doc_tokens
-  FROM documents
-), s AS (
-  SELECT doc_id, shard, doc_tokens,
-         CAST(COALESCE(SUM(doc_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS start_tok
-  FROM per_doc
-)
-SELECT doc_id, shard, doc_tokens, start_tok,
-       start_tok // 2048 AS first_seq,
-       greatest(start_tok + doc_tokens - 1, start_tok) // 2048 AS last_seq,
-       greatest(start_tok + doc_tokens - 1, start_tok) // 2048
-         - start_tok // 2048 + 1 AS n_seqs,
-       start_tok % 2048 AS seq_offset
-FROM s
 """
 
 
@@ -3161,7 +2979,6 @@ QUERIES = {
     "boilerplate_ngrams": q_boilerplate_ngrams,
     "events_asof_join": q_events_asof_join,
     "decontaminate": q_decontaminate,
-    "sequence_pack": q_sequence_pack,
     "domain_mixture": q_domain_mixture,
     "dedup_resolve": q_dedup_resolve,
     "length_quantiles": q_length_quantiles,
@@ -3170,8 +2987,6 @@ QUERIES = {
     "inverted_index": q_inverted_index,
     "lang_id": q_lang_id,
     "lang_id_ngram": q_lang_id_ngram,
-    "media_probe": q_media_probe,
-    "media_decode": q_media_decode,
     "cross_encoder_rerank": q_cross_encoder_rerank,
     "bm25_search": q_bm25_search,
     "composite_search": q_composite_search,
@@ -3234,7 +3049,6 @@ ORACLES = {
     "boilerplate_ngrams": SQL_BOILERPLATE_NGRAMS,
     "events_asof_join": SQL_EVENTS_ASOF_JOIN,
     "decontaminate": SQL_DECONTAMINATE,
-    "sequence_pack": SQL_SEQUENCE_PACK,
     "domain_mixture": SQL_DOMAIN_MIXTURE,
     "dedup_resolve": SQL_DEDUP_RESOLVE,
     "length_quantiles": SQL_LENGTH_QUANTILES,
@@ -3243,8 +3057,6 @@ ORACLES = {
     "inverted_index": SQL_INVERTED_INDEX,
     "lang_id": SQL_LANG_ID,
     "lang_id_ngram": SQL_LANG_ID_NGRAM,
-    "media_probe": SQL_MEDIA_PROBE,
-    "media_decode": SQL_MEDIA_DECODE,
     "cross_encoder_rerank": SQL_CROSS_ENCODER_RERANK,
     "bm25_search": SQL_BM25_SEARCH,
     "composite_search": SQL_COMPOSITE_SEARCH,
@@ -3279,6 +3091,6 @@ ORACLES = {
     # states the expected end-to-end edge set (see q_kg_build_edges).
     # Alias-merging CC inputs stay pytest-gated (golden P/R = 1.0).
     "kg_build_edges": SQL_KG_BUILD_EDGES,
-    # The pruned-probe IVF variant (q_embedding_knn_ivf_pruned) stays
-    # pytest-gated for recall.
+    # The pruned-probe IVF path (nprobe < n_cells) stays pytest-gated
+    # for recall (tests/test_ann.py).
 }

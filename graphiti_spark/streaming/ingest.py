@@ -122,26 +122,3 @@ def run_stream(spark: SparkSession, in_path: str, out_root: str,
             .trigger(availableNow=True)
             .start())
 
-
-def stream_dedup(docs: DataFrame, text_col: str = "text",
-                 ts_col: str = "ts",
-                 watermark: str = "10 minutes") -> DataFrame:
-    """Streaming exact deduplication — the streaming form of the batch
-    content-hash dedup (queries.dedup_exact): key each document by
-    ``sha1(text)`` and keep only the first arrival, with dedup state
-    EXPIRED by the watermark (``dropDuplicatesWithinWatermark``), so
-    state size is bounded by the duplicate-arrival horizon instead of
-    growing with the corpus — the property that makes this runnable
-    forever on an unbounded 100 TB/day feed. Duplicates separated by
-    more than the watermark re-emit (by design: bounded state cannot
-    testify about arbitrarily old history; a periodic batch dedup_exact
-    over the sink compacts those — the standard lambda split).
-
-    ``docs`` must be a streaming DataFrame with an event-time column
-    ``ts_col``. Returns the deduplicated stream (one row per content
-    hash within any watermark window, first arrival wins).
-    """
-    return (docs
-            .withColumn("content_hash", F.sha1(F.col(text_col)))
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["content_hash"]))

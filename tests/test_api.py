@@ -159,6 +159,23 @@ def test_resupplied_turn_takes_new_text(spark):
     assert not any("Paris" in f for f in facts)
 
 
+def test_null_turn_key_raises_and_leaves_handle_unchanged(spark):
+    import pytest as _pytest
+
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    n_tr, n_edges = g.transcripts.count(), g.edges.count()
+    bad = _tr(spark, [(None, 0, "Carol Wu works at Globex.")])
+    with _pytest.raises(ValueError):
+        g.add_episode_bulk(bad)
+    with _pytest.raises(ValueError):
+        g.add_episode_bulk(bad.withColumn("conv_id", F.lit("conv3"))
+                           .withColumn("turn_idx", F.lit(None).cast("int")))
+    with _pytest.raises(ValueError):
+        g.add_episode(None, "Carol Wu works at Globex.")
+    assert g.transcripts.count() == n_tr
+    assert g.edges.count() == n_edges
+
+
 def test_save_in_place_after_load(spark, tmp_path):
     import pytest as _pytest
 

@@ -43,6 +43,21 @@ def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
 
 
+def test_name_lists_are_queries():
+    """Every query has an oracle, and the bench headline and the plan
+    audit's allow-lists name only registered queries."""
+    import os
+    from runpy import run_path
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench = run_path(os.path.join(root, "bench.py"))
+    audit = run_path(os.path.join(root, "scripts", "explain_audit.py"))
+    assert set(ORACLES) == set(QUERIES)
+    for names in (bench["HEADLINE"], audit["ALLOW_NESTED_LOOP"],
+                  audit["ALLOW_GLOBAL_WINDOW"]):
+        assert set(names) <= set(QUERIES), set(names) - set(QUERIES)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

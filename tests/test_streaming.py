@@ -54,53 +54,6 @@ def test_stream_matches_batch_rebuild(spark, tmp_path):
             == full.entities.count())
 
 
-def test_stream_dedup_matches_batch(spark, tmp_path):
-    """Watermarked streaming dedup: duplicates across micro-batches inside
-    the watermark are dropped; the surviving hash set equals the batch
-    distinct; first arrival wins."""
-    from pyspark.sql import functions as F
-
-    from graphiti_spark.streaming.ingest import stream_dedup
-
-    in_dir = str(tmp_path / "docs")
-    out_dir = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    schema = "doc_id long, text string, ts timestamp"
-
-    def drop(rows, name):
-        (spark.createDataFrame(
-            [(i, t, datetime(2024, 1, 1, 0, m)) for i, t, m in rows],
-            schema).coalesce(1).write.mode("append").parquet(in_dir))
-
-    # batch 1: two unique + an in-batch duplicate of "aa"
-    drop([(1, "aa", 0), (2, "bb", 1), (3, "aa", 2)], "b1")
-    # batch 2 (arrives later, within the 10-min watermark of batch 1):
-    # cross-batch duplicate of "bb" + one new doc
-    drop([(4, "bb", 3), (5, "cc", 4)], "b2")
-
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (stream_dedup(src, watermark="10 minutes")
-         .writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir).collect()
-    by_text = {}
-    for r in got:
-        by_text.setdefault(r.text, []).append(r.doc_id)
-    # one survivor per distinct text — the batch-distinct hash set
-    assert {t: len(ids) for t, ids in by_text.items()} == \
-        {"aa": 1, "bb": 1, "cc": 1}
-    assert by_text["aa"] == [1]            # first arrival won
-    assert by_text["bb"] == [2]
-    assert by_text["cc"] == [5]
-
-
 def test_unreadable_state_raises(spark, tmp_path):
     """Only a missing table directory means "no state yet": a state dir
     that cannot be read must fail the batch, not be treated as empty
