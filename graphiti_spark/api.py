@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.operators import maintenance as MT
 from graphiti_spark.plans.pipeline import RUN_TS, build_graph
+from graphiti_spark.sources.tables import read_group_table
 
 __all__ = ["GraphitiSpark"]
 
@@ -328,12 +329,7 @@ class GraphitiSpark:
             p = f"{root.rstrip('/')}/{name}"
             if os.path.isdir(p):
                 found = True
-                df = spark.read.parquet(p)
-                # partition-column inference may narrow string keys
-                for c in ("conv_id", "group_id"):
-                    if c in df.columns:
-                        df = df.withColumn(c, F.col(c).cast("string"))
-                setattr(g, name, df)
+                setattr(g, name, read_group_table(spark, p))
         if not found:
             # a typo'd root must not silently hand back an empty graph
             # that a later save() would happily write somewhere new

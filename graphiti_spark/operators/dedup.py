@@ -19,9 +19,11 @@ union-find (``/root/reference/graphiti_core/utils/bulk_utils.py:201-285,
      is needed in the hot path. Blocking by shared token has full recall
      for every branch: equal, subset, and token-cosine > 0 all require a
      shared token.
-  3. **Connected components**: iterative hash-min label propagation over
-     DataFrame joins (GraphFrames-style), canonical = lexicographic-min uuid
-     in the component — exactly the reference's ``compress_uuid_map``
+  3. **Connected components**: an in-group union-find
+     (:func:`grouped_uuid_map`; components never span groups), or, on the
+     opt-in embedding path, iterative hash-min label propagation over
+     DataFrame joins (GraphFrames-style). Canonical = lexicographic-min
+     uuid in the component — exactly the reference's ``compress_uuid_map``
      tie-break (``bulk_utils.py:399-414``), which keeps outputs identical
      across partitionings and cluster sizes.
 
@@ -240,8 +242,8 @@ def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
     a group with more than ``max_full_pairwise`` members falls back to
     token-blocked candidate generation (capped per token like MAX_BLOCK)
     inside the same UDF. The global iterative-join CC
-    (:func:`connected_components`) remains for graphs whose components may
-    span the partition key."""
+    (:func:`connected_components`) serves the ``emb_col`` path of
+    :func:`canonicalize_entities` and the ``dedup_resolve`` query."""
     import math
     import re
     from collections.abc import Iterator
@@ -361,7 +363,6 @@ def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
 
 
 def canonicalize_entities(entities: DataFrame, run_ts,
-                          grouped: bool = True,
                           emb_col: str | None = None
                           ) -> tuple[DataFrame, DataFrame]:
     """→ (canonical_entities, uuid_map).
@@ -372,10 +373,8 @@ def canonicalize_entities(entities: DataFrame, run_ts,
     Embeddings are NOT computed here — the pipeline embeds canonical names
     once, downstream, so the CC/merge shuffles stay narrow.
 
-    ``grouped=True`` (default) uses the single-shuffle per-group
-    union-find (:func:`grouped_uuid_map`); ``grouped=False`` runs the
-    blocking join + global iterative CC — same semantics, kept for graphs
-    whose duplicate relation is not partition-scoped.
+    Duplicates are resolved by the single-shuffle per-group union-find
+    (:func:`grouped_uuid_map`).
 
     ``emb_col`` (opt-in) switches the duplicate verify to REAL embedding
     cosine at the 0.8 threshold (``bulk_utils.py:208,236-241``) with
@@ -388,12 +387,8 @@ def canonicalize_entities(entities: DataFrame, run_ts,
         pairs = duplicate_pairs(entities, emb_col=emb_col)
         cc = connected_components(entities.select("uuid"), pairs)
         uuid_map = cc.select("uuid", F.col("component").alias("canonical_uuid"))
-    elif grouped:
-        uuid_map = grouped_uuid_map(entities)
     else:
-        pairs = duplicate_pairs(entities)
-        cc = connected_components(entities.select("uuid"), pairs)
-        uuid_map = cc.select("uuid", F.col("component").alias("canonical_uuid"))
+        uuid_map = grouped_uuid_map(entities)
 
     merged = (
         entities.join(uuid_map, "uuid")

@@ -8,8 +8,8 @@ Reference semantics reproduced:
     ``tests/evals/eval_e2e_graph_building.py:53``). This is the per-row
     invariant: per-turn text equality under stable (conv_id, turn_idx) order.
   * previous-episode context = prior ``EPISODE_WINDOW_LEN = 3`` turns
-    (``utils/maintenance/graph_data_operations.py:28,84-135``) via a bounded
-    window — no unbounded state, so it streams/scales trivially.
+    (``utils/maintenance/graph_data_operations.py:28,84-135``), attached by
+    :func:`hydrate_context` only to episodes a coreference can use it in.
   * ``valid_at`` = turn ts (document time), ``created_at`` = fixed run_ts
     (ingestion time) — the bi-temporal split (``nodes.py:151-153``).
 
@@ -35,18 +35,13 @@ def stable_id_cols(*cols):
     return F.substring(F.sha1(F.concat_ws(SEP, *cols)), 1, 32)
 
 
-def assemble_episodes(transcripts: DataFrame, run_ts: datetime,
-                      include_context: bool = False) -> DataFrame:
-    """Window over (conv_id, turn_idx) → one episode row per turn.
+def assemble_episodes(transcripts: DataFrame, run_ts: datetime) -> DataFrame:
+    """transcripts → one episode row per turn.
 
-    ``include_context`` materializes the previous-3-turns window
-    (EPISODE_WINDOW_LEN) for EVERY row; the pipeline leaves it off — it
-    triples the episode-row payload that every downstream shuffle and
-    cache carries — and instead attaches context only where a
-    coreference can consume it, via :func:`hydrate_context`. Context
+    ``prev_context`` starts empty: :func:`hydrate_context` attaches the
+    previous turns only where a coreference can consume them. Context
     retrieval for the read path is :func:`retrieve_episodes`.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     # EpisodeType routing (``nodes.py:45-70``): an optional `source` column
     # on the transcripts selects the episode kind per row; 'message'
     # content is "role: text", 'text'/'json' pass the payload through
@@ -60,16 +55,13 @@ def assemble_episodes(transcripts: DataFrame, run_ts: datetime,
                               F.coalesce(F.col("text"), F.lit("")))
     content = F.when(source == "message", msg_content) \
                .otherwise(F.coalesce(F.col("text"), F.lit("")))
-    # The empty fallback is deliberately NON-foldable (an empty slice of
+    # The empty context is deliberately NON-foldable (an empty slice of
     # a content-dependent array, not the F.array() literal): a foldable
     # empty-array argument to a pandas UDF under a Generate trips a
     # Catalyst INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in column pruning on
     # Spark 4.1 (BindReferences: "Could not find turn_idx in
     # [group_id, m]").
-    prev_ctx = (F.collect_list("content")
-                 .over(w.rowsBetween(-EPISODE_WINDOW_LEN, -1))
-                if include_context
-                else F.slice(F.array(F.col("content")), 1, 0))
+    prev_ctx = F.slice(F.array(F.col("content")), 1, 0)
     return (
         transcripts
         .withColumn("_source", source)

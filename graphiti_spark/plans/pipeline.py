@@ -88,7 +88,6 @@ def _fingerprint(**kwargs) -> str:
 def build_graph(spark: SparkSession, transcripts: DataFrame,
                 store: TableStore | None = None,
                 run_ts: datetime = RUN_TS,
-                fingerprint_extra: str = "",
                 with_embeddings: bool = False,
                 eager: bool | None = None,
                 ontology=None) -> GraphTables:
@@ -104,8 +103,7 @@ def build_graph(spark: SparkSession, transcripts: DataFrame,
     # Checkpoint fingerprints are ontology-scoped (E6): the same input
     # extracted under a different rule set must never resume from the
     # other ontology's materialized stages.
-    fp = _fingerprint(v=1, run_ts=run_ts, extra=fingerprint_extra,
-                      emb=with_embeddings,
+    fp = _fingerprint(v=1, run_ts=run_ts, emb=with_embeddings,
                       onto=None if ontology is None
                       else ontology.fingerprint())
 
@@ -174,27 +172,15 @@ def build_graph(spark: SparkSession, transcripts: DataFrame,
     # for two passes, identical outputs.) The combined stage is
     # multi-consumer (both flattens read it) so it takes the adaptive
     # materialization barrier; the flattened single-consumer stages stay
-    # lazy. Custom ontologies keep the two-pass path (their UDFs carry
-    # the ontology closure).
-    if ontology is None:
-        combined = stage("extract_combined",
-                         lambda: extract.extract_combined(episodes_x))
-        mentions = stage("mentions",
-                         lambda: extract.mentions_from_combined(combined),
-                         barrier=False)
-        edges_raw = stage("edges_raw",
-                          lambda: extract.edges_from_combined(combined,
-                                                              run_ts),
-                          barrier=False)
-    else:
-        mentions = stage("mentions",
-                         lambda: extract.extract_mentions(episodes_x,
-                                                          ontology=ontology),
-                         barrier=False)
-        edges_raw = stage("edges_raw",
-                          lambda: extract.extract_edges(episodes_x, run_ts,
-                                                        ontology=ontology),
-                          barrier=False)
+    # lazy. A custom ontology binds into the same UDF.
+    combined = stage("extract_combined",
+                     lambda: extract.extract_combined(episodes_x, ontology))
+    mentions = stage("mentions",
+                     lambda: extract.mentions_from_combined(combined),
+                     barrier=False)
+    edges_raw = stage("edges_raw",
+                      lambda: extract.edges_from_combined(combined, run_ts),
+                      barrier=False)
 
     _canon: dict = {}
 

@@ -663,8 +663,7 @@ def parse_json_episode(content: str) -> tuple[str | None, list[tuple[str, str]]]
 
 def extract_all(content: str, ts: datetime | None,
                 source: str = SOURCE_MESSAGE,
-                ontology=None, want_mentions: bool = True,
-                want_triples: bool = True,
+                ontology=None,
                 prev_context=None) -> tuple[list[dict], list[dict]]:
     """content + episode ts -> (mentions, triples) in ONE pass.
 
@@ -694,10 +693,9 @@ def extract_all(content: str, ts: datetime | None,
 
     One sentence scan serves both outputs — the template matcher (the
     extraction hot path) runs once per sentence, not once per consumer.
-    ``want_mentions``/``want_triples`` let single-output callers (the
-    thin wrappers below, used on the custom-ontology two-pass path) skip
-    BUILDING the unused half; the matcher work is shared either way, and
-    the flags never change what the wanted half contains.
+    This is the only extraction entry point: the pipeline UDF calls it
+    for every ontology, and :func:`extract_mentions` /
+    :func:`extract_triples` are its two halves.
 
     ``prev_context`` (list of previous-episode contents, oldest→newest —
     the reference's ``previous_episodes`` window,
@@ -715,7 +713,7 @@ def extract_all(content: str, ts: datetime | None,
     triples: list[dict] = []
 
     def add(name: str, type_id: str) -> None:
-        if not want_mentions or type_id in excluded:
+        if type_id in excluded:
             return
         name = clean_text(name)
         if not name:
@@ -734,8 +732,7 @@ def extract_all(content: str, ts: datetime | None,
         # slots are TYPE_ENTITY, so excluding 'Entity' refuses the nodes
         # AND their edges (node_operations.py:157-160 — the reference
         # never extracts edges to nodes it refused to extract).
-        if (want_triples and subject is not None
-                and TYPE_ENTITY not in excluded):
+        if subject is not None and TYPE_ENTITY not in excluded:
             for k, v in pairs:
                 if normalize_name(subject) == normalize_name(v):
                     continue
@@ -885,8 +882,7 @@ def extract_all(content: str, ts: datetime | None,
                 antecedent_org = clean_text(b_name)
         if not a_name or not b_name:
             continue   # unresolvable reference: no bogus entity, no triple
-        if (not want_triples or skip_facts
-                or t_a in excluded or t_b in excluded):
+        if skip_facts or t_a in excluded or t_b in excluded:
             continue   # mentions recorded above; the fact is not asserted
         subj, obj = clean_text(a_name), clean_text(b_name)
         if not subj or not obj or normalize_name(subj) == normalize_name(obj):
@@ -938,10 +934,9 @@ def extract_all(content: str, ts: datetime | None,
 
 def extract_mentions(content: str, source: str = SOURCE_MESSAGE,
                      ontology=None, prev_context=None) -> list[dict]:
-    """Mentions half of :func:`extract_all` (kept for single-output
-    callers; the pipeline UDF uses extract_all directly)."""
+    """Mentions half of :func:`extract_all`."""
     return extract_all(content, None, source, ontology,
-                       want_triples=False, prev_context=prev_context)[0]
+                       prev_context=prev_context)[0]
 
 
 def extract_triples(content: str, ts: datetime | None,
@@ -949,7 +944,7 @@ def extract_triples(content: str, ts: datetime | None,
                     ontology=None, prev_context=None) -> list[dict]:
     """Triples half of :func:`extract_all`."""
     return extract_all(content, ts, source, ontology,
-                       want_mentions=False, prev_context=prev_context)[1]
+                       prev_context=prev_context)[1]
 
 
 # ---------------------------------------------------------------------------

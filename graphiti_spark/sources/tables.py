@@ -23,6 +23,20 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def read_group_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a ``conv_id``/``group_id``-partitioned parquet table with
+    those keys as the strings that were written. Partition-type inference
+    alone would read ``conv_id=007`` back as the int 7, so the table is
+    re-read with the inferred schema's key fields pinned to string."""
+    inferred = spark.read.parquet(path).schema
+    schema = T.StructType([
+        T.StructField(f.name, T.StringType(), f.nullable)
+        if f.name in ("conv_id", "group_id") else f
+        for f in inferred])
+    return spark.read.schema(schema).parquet(path)
 
 
 class TableStore:

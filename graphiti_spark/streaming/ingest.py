@@ -7,8 +7,9 @@ rebuilding the groups a write touches, so the streaming wrapper is thin:
 ``foreachBatch`` re-uses the *identical* stage functions and the API's
 touched-group replace per micro-batch.
 
-The previous-episode context (S3) is a bounded ``rowsBetween(-3,-1)``
-window, so no unbounded state is needed; late turns are handled with a
+The previous-episode context (S3) is the three previous turns of the
+same conversation, which the touched-group rebuild reads, so no
+unbounded state is needed; late turns are handled with a
 watermark on ``ts`` — turns later than the watermark re-enter as a new
 micro-batch and the touched-group rebuild keeps the result identical to a
 batch rebuild (ids are pure functions of content, rules.py).
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphiti_spark.schema import TRANSCRIPTS
+from graphiti_spark.sources.tables import read_group_table
 
 
 def stream_transcripts(spark: SparkSession, path: str,
@@ -59,13 +61,7 @@ class StreamingGraphWriter:
         p = os.path.join(self.out_root, name)
         if not os.path.isdir(p):
             return None
-        df = spark.read.parquet(p)
-        # partition-column type inference may read a numeric-looking
-        # conv_id/group_id back as int — pin the schema's string type
-        for c in ("conv_id", "group_id"):
-            if c in df.columns:
-                df = df.withColumn(c, F.col(c).cast("string"))
-        return df
+        return read_group_table(spark, p)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -191,6 +191,26 @@ def test_save_in_place_after_load(spark, tmp_path):
         GraphitiSpark.load(spark, str(tmp_path / "nope"), run_ts=TS)
 
 
+def test_numeric_looking_conv_id_survives_reload(spark, tmp_path):
+    """conv_id "007" reloads as "007", not the int-inferred "7": a turn
+    re-sent after load() replaces the saved one instead of being added
+    next to it under a second key."""
+    root = str(tmp_path / "graph")
+    GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, [
+        ("007", 0, "Alice Smith works at Acme Corp."),
+        ("007", 1, "Alice Smith lives in Paris.")])).save(root)
+    h = GraphitiSpark.load(spark, root, run_ts=TS)
+    h.add_episode_bulk(_tr(spark, [
+        ("007", 1, "Alice Smith lives in Madrid.")]))
+    keys = sorted(tuple(r) for r in
+                  h.transcripts.select("conv_id", "turn_idx").collect())
+    assert keys == [("007", 0), ("007", 1)]
+    per_turn = sorted(tuple(r) for r in h.episodes
+                      .groupBy("group_id", "turn_idx").count().collect())
+    assert per_turn == [("007", 0, 1), ("007", 1, 1)]
+    assert {r["group_id"] for r in h.edges.collect()} == {"007"}
+
+
 def _edge_set(g):
     return sorted(map(tuple, g.edges.select(
         "uuid", "group_id", "fact", "valid_at", "invalid_at").collect()))

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from graphiti_spark.ontology import Ontology, Template
 from graphiti_spark.plans.pipeline import build_graph
 
 
@@ -112,26 +113,40 @@ def test_episodic_edges_reference_canonical_entities(spark, graph):
     assert orphans == 0
 
 
-def test_resume_reuses_checkpointed_stages(spark, corpus_dir, tmp_path):
+CUSTOM_ONTOLOGY = Ontology(
+    entity_types={"Product": ("category",)},
+    excluded_entity_types=["Place"],
+    templates=[Template("{a} supplies {b}", "SUPPLIES",
+                        subj_type="Organization", obj_type="Product")],
+    functional_preds=["SUPPLIES"])
+
+
+@pytest.mark.parametrize("ontology", [None, CUSTOM_ONTOLOGY],
+                         ids=["default", "custom"])
+def test_resume_reuses_checkpointed_stages(spark, corpus_dir, tmp_path,
+                                           ontology):
     """TableStore resume: second build with same fingerprint reads back
-    manifested stages (rows identical), no recompute divergence."""
+    manifested stages (rows identical), no recompute divergence. Every
+    ontology extracts through the one combined stage."""
     from graphiti_spark.sources.tables import TableStore
     tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet").limit(200)
     store = TableStore(spark, str(tmp_path / "ckpt"))
-    g1 = build_graph(spark, tr, store=store)
+    g1 = build_graph(spark, tr, store=store, ontology=ontology)
     n1 = g1.edges.count()
-    assert store.is_complete("edges", _fp())
-    g2 = build_graph(spark, tr, store=store)
+    assert store.is_complete("edges", _fp(ontology))
+    g2 = build_graph(spark, tr, store=store, ontology=ontology)
     assert g2.edges.count() == n1
     lineage = store.lineage().toPandas()
-    assert set(lineage.stage) >= {"episodes", "mentions", "edges_raw",
-                                  "entities", "edges"}
+    assert set(lineage.stage) >= {"episodes", "extract_combined", "mentions",
+                                  "edges_raw", "entities", "edges"}
     assert (lineage.rows_out >= 0).all()
 
 
-def _fp():
+def _fp(ontology=None):
     from graphiti_spark.plans.pipeline import RUN_TS, _fingerprint
-    return _fingerprint(v=1, run_ts=RUN_TS, extra="", emb=False, onto=None)
+    return _fingerprint(v=1, run_ts=RUN_TS, emb=False,
+                        onto=None if ontology is None
+                        else ontology.fingerprint())
 
 
 def test_build_graph_with_custom_ontology(spark):
@@ -140,15 +155,9 @@ def test_build_graph_with_custom_ontology(spark):
     its checkpoint fingerprint distinct from the default ontology's."""
     from datetime import datetime, timezone
 
-    from graphiti_spark.ontology import Ontology, Template
     from graphiti_spark.plans import pipeline as P
 
-    onto = Ontology(
-        entity_types={"Product": ("category",)},
-        excluded_entity_types=["Place"],
-        templates=[Template("{a} supplies {b}", "SUPPLIES",
-                            subj_type="Organization", obj_type="Product")],
-        functional_preds=["SUPPLIES"])
+    onto = CUSTOM_ONTOLOGY
     ts0 = datetime(2024, 1, 1, tzinfo=timezone.utc).replace(tzinfo=None)
     tr = spark.createDataFrame(
         [("c1", 0, "user", "Acme Corp supplies Widget Max.", None, ts0),

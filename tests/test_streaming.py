@@ -69,3 +69,29 @@ def test_unreadable_state_raises(spark, tmp_path):
     writer = StreamingGraphWriter(str(out), RUN_TS)
     with pytest.raises(Exception):
         writer(_turns(spark, [("c1", 0, "Alice works at Acme Corp.", 0)]), 0)
+
+
+def test_numeric_looking_conv_id_keeps_earlier_turns(spark, tmp_path):
+    """Two micro-batches on conv "007" equal one batch rebuild: the second
+    batch must find the first one's state under the key it was written
+    with (partition-type inference reads ``conv_id=007`` back as 7)."""
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    batch1 = _turns(spark, [
+        ("007", 0, "Alice works at Acme Corp.", 0),
+        ("007", 1, "Alice lives in Paris.", 1)])
+    batch2 = _turns(spark, [("007", 2, "Bob Jones works at Globex.", 2)])
+    writer = StreamingGraphWriter(out, RUN_TS)
+    writer(batch1, 0)
+    writer(batch2, 1)
+
+    full = build_graph(spark, batch1.unionByName(batch2), run_ts=RUN_TS)
+    cols = ("uuid", "source_node_uuid", "name", "target_node_uuid")
+    got = spark.read.parquet(os.path.join(out, "edges"))
+    assert ({tuple(r) for r in got.select(*cols).collect()}
+            == {tuple(r) for r in full.edges.select(*cols).collect()})
+    got_ents = spark.read.parquet(os.path.join(out, "entities"))
+    assert ({r["uuid"] for r in got_ents.collect()}
+            == {r["uuid"] for r in full.entities.collect()})
+    assert spark.read.parquet(os.path.join(out, "transcripts")).count() == 3
