@@ -269,7 +269,7 @@ class GraphitiSpark:
         comms, ce = build_communities(self.entities, self.edges,
                                       self.run_ts, mode=mode)
         self.communities = comms.localCheckpoint(eager=True)
-        self.community_edges = ce
+        self.community_edges = ce.localCheckpoint(eager=True)
         return self.communities
 
     def _build(self, transcripts: DataFrame):

@@ -1,12 +1,13 @@
 """M7 — community detection + summarization (SURVEY.md §2.4 A4/A5).
 
-Label propagation re-expressed as iterative DataFrame joins
-(``/root/reference/graphiti_core/utils/maintenance/community_operations.py:
-77-122``): each node adopts the plurality community among its neighbors
-weighted by edge multiplicity, ties broken toward the larger label
-(``:102-108``), iterated to fixpoint. The reference builds an in-memory
-neighbor projection per group (``:44-62``); ours is a (src, dst,
-edge_count) DataFrame aggregated once from the edges table.
+Label propagation (``/root/reference/graphiti_core/utils/maintenance/
+community_operations.py:77-122``): each node adopts the plurality
+community among its neighbors weighted by edge multiplicity, ties broken
+toward the larger label (``:102-108``), iterated to fixpoint. The
+reference holds one group's neighbor projection in memory (``:44-62``)
+and iterates it in-process; ours aggregates the (group_id, src, dst,
+edge_count) projection once from the edges table and runs the same
+per-group fixpoint in one cogrouped ``applyInPandas`` over ``group_id``.
 
 Community summarization replaces the pairwise-LLM summarize-reduce
 (``community_operations.py:125-190``) with a deterministic ordered
@@ -25,19 +26,6 @@ from graphiti_spark.operators.episodes import stable_id_cols
 
 MAX_COMMUNITY_ROUNDS = 20
 SUMMARY_MAX_WORDS = 250
-# Per-group caps for the in-memory grouped LPA executor. The reference
-# itself materializes one group's whole neighbor projection in a Python dict
-# (community_operations.py:44-62) before running label_propagation on it —
-# so "a group fits in one worker's memory" is the reference's own operating
-# assumption; these caps are where we stop trusting it and fall back to the
-# iterative-join rounds. 200k nodes × (uuid + neighbor list) is ~100 MB of
-# Python objects, comfortably inside one executor-core's slice. The EDGE cap
-# guards the other axis: task memory is dominated by projection rows (one
-# (label, weight) tuple each), which node count alone does not bound — a
-# 150k-node group with avg degree 2,000 is ~3×10⁸ proj rows and would OOM
-# the task while passing the node gate. 2M proj rows ≈ 200-300 MB of tuples.
-GROUPED_LPA_MAX_NODES = 200_000
-GROUPED_LPA_MAX_EDGES = 2_000_000
 
 
 def neighbor_projection(edges: DataFrame) -> DataFrame:
@@ -57,16 +45,16 @@ def neighbor_projection(edges: DataFrame) -> DataFrame:
 
 def label_propagation(entities: DataFrame, edges: DataFrame,
                       max_rounds: int = MAX_COMMUNITY_ROUNDS,
-                      mode: str = "monotone", strategy: str = "auto",
-                      max_group_nodes: int = GROUPED_LPA_MAX_NODES,
-                      max_group_edges: int = GROUPED_LPA_MAX_EDGES
-                      ) -> DataFrame:
+                      mode: str = "monotone") -> DataFrame:
     """→ (uuid, group_id, community) with community = a stable label id.
 
     Initial label = own uuid; each round a node adopts a neighbor
     plurality label (Σ edge_count weighting, argmax ties → larger label,
     ``community_operations.py:102-108``); isolated nodes keep their own
     label; synchronous rounds to fixpoint (capped at ``max_rounds``).
+    Rounds are group-local, so the whole fixpoint runs per group in
+    memory (:func:`_grouped_lpa`) — the reference's own unit of work —
+    with no driver loop per round and a fixed number of Spark jobs.
 
     ``mode`` picks the update rule:
 
@@ -88,75 +76,20 @@ def label_propagation(entities: DataFrame, edges: DataFrame,
       forever on adversarial symmetric graphs; this version stops at
       ``max_rounds`` (tested to fixpoint on seeded random graphs against
       a pure-Python port, tests/test_communities.py).
-
-    ``strategy`` picks the physical executor (same semantics either way;
-    equality is test-gated on seeded random graphs for both modes):
-
-    * ``"grouped"``: one cogrouped ``applyInPandas`` over ``group_id``
-      runs the whole fixpoint per group in-memory — the reference's own
-      unit of work (it projects ONE group's neighbors into a dict and
-      iterates it in-process, ``community_operations.py:44-62,77``).
-      Rounds are group-local, so this is exactly the synchronous-join
-      result, minus a driver loop of 2 shuffles per GLOBAL round. At
-      10^12-turn scale group graphs are conversation-sized and this is
-      one shuffle total.
-    * ``"rounds"``: iterative DataFrame joins, one synchronous round per
-      driver-loop iteration (localCheckpoint lineage cuts). Needed only
-      when a single group's graph outgrows one task's memory.
-    * ``"auto"`` (default): size-gate — groups within ``max_group_nodes``
-      AND ``max_group_edges`` (projection rows — the term that actually
-      dominates task memory; node count alone does not bound it on dense
-      groups) take the grouped path, larger ones the join rounds;
-      results unioned. The gate is one count aggregate over ``entities``
-      plus one over the projection.
     """
     if mode not in ("monotone", "reference"):
         raise ValueError(f"unknown LPA mode {mode!r}")
-    if strategy not in ("auto", "grouped", "rounds"):
-        raise ValueError(f"unknown LPA strategy {strategy!r}")
-    if strategy == "rounds":
-        return _rounds_lpa(entities, neighbor_projection(edges),
-                           max_rounds, mode)
-    proj = neighbor_projection(edges)
-    if strategy == "grouped":
-        return _grouped_lpa(entities, proj, mode, max_rounds)
-    # Materialize the projection ONCE: the size gate, the grouped path
-    # and a possible rounds path all read it — without the checkpoint the
-    # edge scan + projection shuffle would re-execute for each.
-    proj = proj.localCheckpoint(eager=True)
-    big_nodes = (entities.groupBy("group_id")
-                 .agg(F.count(F.lit(1)).alias("n"))
-                 .where(F.col("n") > max_group_nodes)
-                 .select("group_id"))
-    big_edges = (proj.groupBy("group_id")
-                 .agg(F.count(F.lit(1)).alias("m"))
-                 .where(F.col("m") > max_group_edges)
-                 .select("group_id"))
-    big = [r["group_id"] for r in
-           big_nodes.unionByName(big_edges).distinct().collect()]
-    if not big:
-        return _grouped_lpa(entities, proj, mode, max_rounds)
-    # Null-safe split: `isin` returns NULL (not False) for a NULL
-    # group_id, and ~NULL is NULL, so a naive where/~where pair would
-    # silently drop every NULL-keyed entity from BOTH branches.
-    nonnull = [g for g in big if g is not None]
-    is_big = (F.coalesce(F.col("group_id").isin(nonnull), F.lit(False))
-              if nonnull else F.lit(False))
-    if any(g is None for g in big):
-        is_big = is_big | F.col("group_id").isNull()
-    small = _grouped_lpa(entities.where(~is_big), proj.where(~is_big),
-                         mode, max_rounds)
-    return small.unionByName(
-        _rounds_lpa(entities.where(is_big), proj.where(is_big),
-                    max_rounds, mode))
+    return _grouped_lpa(entities, neighbor_projection(edges), mode,
+                        max_rounds)
 
 
 def _grouped_lpa(entities: DataFrame, proj: DataFrame, mode: str,
                  max_rounds: int) -> DataFrame:
     """Per-group in-memory LPA fixpoint (cogrouped applyInPandas): the
     direct Spark expression of the reference's per-group loop
-    (``community_operations.py:44-122``), parameterized by the same two
-    update rules as the join executor. Label/tie comparisons are Python
+    (``community_operations.py:44-122``) under either update rule of
+    :func:`label_propagation`. A NULL ``group_id`` is one more cogroup
+    key, so its entities keep their rows. Label/tie comparisons are Python
     ``str`` order == Spark UTF8 binary order on the ASCII hex uuids the
     pipeline emits."""
     import pandas as pd
@@ -171,8 +104,8 @@ def _grouped_lpa(entities: DataFrame, proj: DataFrame, mode: str,
         nbrs: dict[str, list[tuple[str, int]]] = {}
         for s, d, w in zip(proj_pdf["src"], proj_pdf["dst"],
                            proj_pdf["edge_count"]):
-            # endpoints outside the entity set carry no label to vote
-            # with (the join executor drops them via the labels join)
+            # endpoints outside the group's entity set carry no label
+            # to vote with
             if s in in_group and d in in_group:
                 nbrs.setdefault(s, []).append((d, int(w)))
         community = {u: u for u in nodes}
@@ -208,100 +141,13 @@ def _grouped_lpa(entities: DataFrame, proj: DataFrame, mode: str,
     # build), so their group_id columns carry the SAME attribute id and
     # Spark's ambiguous-self-join check rejects the cogroup outright.
     # An Alias mints fresh attribute ids at zero runtime cost (the
-    # Project collapses); the rounds executor dodges the same hazard
-    # only via its eager neighbor-projection checkpoint.
+    # Project collapses).
     fresh = lambda df: df.select(                       # noqa: E731
         [F.col(c).alias(c) for c in df.columns])
     return (fresh(entities.select("uuid", "group_id")).groupBy("group_id")
             .cogroup(fresh(proj).groupBy("group_id"))
             .applyInPandas(fn, "uuid string, group_id string, "
                                "community string"))
-
-
-def _rounds_lpa(entities: DataFrame, proj: DataFrame,
-                max_rounds: int, mode: str) -> DataFrame:
-    """Synchronous-round LPA as iterative DataFrame joins — the executor
-    for groups too large for one task's memory. Takes the neighbor
-    PROJECTION (already built by the caller, so the auto gate's
-    checkpointed copy is reused instead of re-shuffling the edges). One
-    round = neighbor-vote join + two hash aggregates + label join,
-    lineage-cut per round. NULL-keyed groups never propagate here (the
-    equi-joins drop NULL group_id); the auto gate routes them to the
-    grouped executor, which handles a NULL cogroup key fine — only a
-    direct strategy="rounds" call on NULL-keyed data hits this."""
-    proj = proj.localCheckpoint(eager=True)
-    labels = (entities.select("uuid", "group_id")
-              .withColumn("community", F.col("uuid"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_rounds):
-        # join on (group_id, dst), not dst alone: groups are independent
-        # graphs (the reference projects and labels ONE group at a time,
-        # community_operations.py:44-62), so an edge row whose group_id
-        # differs from an endpoint's must not leak a vote across the
-        # boundary — the grouped executor's cogroup enforces the same
-        # rule, keeping the two executors label-identical on any input.
-        nbr_votes = (proj.join(
-            labels.select("group_id", F.col("uuid").alias("dst"),
-                          F.col("community").alias("nbr_label")),
-            ["group_id", "dst"])
-            .select("group_id", "src", "nbr_label",
-                    F.col("edge_count").alias("w")))
-        if mode == "monotone":
-            # Self-vote (weight 1): stabilizes synchronous updates —
-            # without it a symmetric pair oscillates a↔b forever (the
-            # reference's synchronous loop shares this hazard; its
-            # weight>1/max(candidate,current) rule masks it on weight-1
-            # ties only).
-            self_votes = labels.select(
-                "group_id", F.col("uuid").alias("src"),
-                F.col("community").alias("nbr_label"), F.lit(1).alias("w"))
-            nbr_votes = nbr_votes.unionByName(self_votes)
-        nbr = (nbr_votes
-               .groupBy("group_id", "src", "nbr_label")
-               .agg(F.sum("w").alias("votes")))
-        # argmax by (votes, label) via struct-max: same pick order as the
-        # previous rank window (votes desc, label desc) but a hash
-        # aggregate with map-side partial combine instead of a per-round
-        # sort — at 2M nodes / 7.4M votes this is the difference between
-        # a sort and a combine in EVERY LPA round.
-        # keyed by (group_id, src) and merged back on both columns: a
-        # vote row whose edge-group differs from the node's own group
-        # stays a dangling row the left join never consumes (and uuids
-        # are only required unique WITHIN a group).
-        best = (nbr.groupBy("group_id", "src")
-                .agg(F.max(F.struct(F.col("votes"), F.col("nbr_label")))
-                     .alias("_b"))
-                .select(F.col("src").alias("uuid"), "group_id",
-                        F.col("_b.nbr_label").alias("new_label"),
-                        F.col("_b.votes").alias("new_votes")))
-        if mode == "monotone":
-            # Monotone adoption: take the plurality label only when it is
-            # LARGER than the current one (extending the reference's
-            # tie-toward-larger rule into the update itself).
-            picked = F.when(F.col("new_label") > F.col("community"),
-                            F.col("new_label")).otherwise(F.col("community"))
-        else:
-            # Reference rule (community_operations.py:96-105): plurality
-            # candidate wins outright when its weight > 1; a weight-1
-            # candidate only wins if larger than the current label;
-            # no candidates (isolated node, candidate = -1) keeps current.
-            picked = (F.when(F.col("new_label").isNull(),
-                             F.col("community"))
-                      .when(F.col("new_votes") > 1, F.col("new_label"))
-                      .otherwise(F.greatest("new_label", "community")))
-        new_labels = (labels.join(best, ["uuid", "group_id"], "left")
-                      .select("uuid", "group_id",
-                              picked.alias("community"),
-                              # convergence flag rides the same
-                              # materialization — no per-round join of
-                              # new-vs-old labels just to detect change
-                              (picked != F.col("community")).alias("_chg"))
-                      .localCheckpoint(eager=True))
-        changed = new_labels.where("_chg").limit(1).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            break
-    return labels
 
 
 def _community_rows(members: DataFrame, run_ts: datetime) -> DataFrame:
@@ -356,36 +202,30 @@ def _member_edge_rows(members: DataFrame, run_ts: datetime) -> DataFrame:
 
 def build_communities(entities: DataFrame, edges: DataFrame,
                       run_ts: datetime,
-                      mode: str = "monotone",
-                      materialize: bool = True,
-                      strategy: str = "auto") -> tuple[DataFrame,
-                                                       DataFrame]:
+                      mode: str = "monotone") -> tuple[DataFrame,
+                                                      DataFrame]:
     """→ (communities, community_edges) — CommunityNode rows (uuid, name,
-    group_id, summary, created_at) + HAS_MEMBER thin edges. ``mode`` and
-    ``strategy`` pass through to :func:`label_propagation` (monotone
-    scale default or the reference-semantics synchronous vote; grouped
-    in-memory vs iterative-join executor, size-gated by default).
+    group_id, summary, created_at) + HAS_MEMBER thin edges. ``mode``
+    passes through to :func:`label_propagation` (monotone scale default
+    or the reference-semantics synchronous vote), which runs the per-group
+    in-memory fixpoint.
 
-    ``materialize`` (default True) cuts the input lineage with an eager
-    ``localCheckpoint`` before the iterative loop — the standard Spark
-    rule for iterative-join algorithms: every LPA round and the final
-    member join otherwise re-analyzes and (through a cold cache, races
-    included) re-executes the full upstream plan per action. Measured on
-    the 300-conversation driver slice: 21.3 s → 13.2 s end-to-end
-    (interleaved best-of-3, local[32]). Pass False when the inputs are
-    already materialized scans (store-mode pipeline tables, parquet) —
-    there the checkpoint would only copy the tables again."""
-    if materialize:
-        entities = entities.localCheckpoint(eager=True)
-        edges = edges.localCheckpoint(eager=True)
-    labels = label_propagation(entities, edges, mode=mode,
-                               strategy=strategy)
+    The inputs are cut with an eager ``localCheckpoint`` first: the
+    label propagation, the degree aggregate and the member join all read
+    them, and each would otherwise re-analyze and re-execute the full
+    upstream plan."""
+    entities = entities.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
+    labels = label_propagation(entities, edges, mode=mode)
     members = (entities.join(labels.select("uuid", "community"), "uuid")
                .join(_degree(edges), "uuid", "left").na.fill({"degree": 0})
                .withColumn("community_uuid",
                            stable_id_cols(F.lit("community"),
                                           F.col("group_id"),
-                                          F.col("community"))))
+                                          F.col("community")))
+               # both outputs read the members: cut once, so reading
+               # both runs the label propagation once
+               .localCheckpoint(eager=True))
     return (_community_rows(members, run_ts),
             _member_edge_rows(members, run_ts))
 

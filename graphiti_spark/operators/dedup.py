@@ -19,13 +19,14 @@ union-find (``/root/reference/graphiti_core/utils/bulk_utils.py:201-285,
      is needed in the hot path. Blocking by shared token has full recall
      for every branch: equal, subset, and token-cosine > 0 all require a
      shared token.
-  3. **Connected components**: an in-group union-find
-     (:func:`grouped_uuid_map`; components never span groups), or, on the
-     opt-in embedding path, iterative hash-min label propagation over
-     DataFrame joins (GraphFrames-style). Canonical = lexicographic-min
-     uuid in the component — exactly the reference's ``compress_uuid_map``
-     tie-break (``bulk_utils.py:399-414``), which keeps outputs identical
-     across partitionings and cluster sizes.
+  3. **Connected components**: one in-group union-find in one
+     ``mapInPandas`` over group-sorted partitions (components never span
+     groups). It finds the token duplicates itself
+     (:func:`grouped_uuid_map`) or takes precomputed pairs on the opt-in
+     embedding path (:func:`pair_components`). Canonical =
+     lexicographic-min uuid in the component — exactly the reference's
+     ``compress_uuid_map`` tie-break (``bulk_utils.py:399-414``), which
+     keeps outputs identical across partitionings and cluster sizes.
 
 Skew note: token blocks are capped (``MAX_BLOCK``) — a stop-token shared by
 millions of names would otherwise create a quadratic block; the reference
@@ -187,88 +188,143 @@ def edge_duplicate_pairs(edges: DataFrame,
                     "uuid_a", "uuid_b"))
 
 
-def connected_components(vertices: DataFrame, pairs: DataFrame,
-                         max_iter: int = 20) -> DataFrame:
-    """Hash-min label propagation: (uuid → component) with component =
-    lexicographic-min uuid reachable. Returns (uuid, component).
+def _min_components(uuids: list, links) -> list:
+    """Union-find over the indices of ``uuids`` joined by the ``(i, j)``
+    index pairs of ``links`` → each index's canonical uuid: the
+    lexicographic-min uuid of its component, exactly the reference's
+    ``compress_uuid_map`` tie-break (``bulk_utils.py:377-414``)."""
+    parent = list(range(len(uuids)))
 
-    Driver-side loop of DataFrame joins with localCheckpoint per round to
-    cut lineage (SURVEY.md §7 risk 2); rounds are O(diameter), and alias
-    components have diameter ≤ 2-3. Deterministic: min() is order-free.
-    """
-    # Materialize pairs once — the symmetric union consumes it twice, and
-    # recomputing the blocking join per branch doubles the heaviest stage.
-    pairs = pairs.localCheckpoint(eager=True)
-    sym = (pairs.select(F.col("uuid_a").alias("src"), F.col("uuid_b").alias("dst"))
-           .union(pairs.select(F.col("uuid_b").alias("src"),
-                               F.col("uuid_a").alias("dst"))))
-    sym = sym.localCheckpoint(eager=True)
-    labels = vertices.select(F.col("uuid"), F.col("uuid").alias("component"))
-    labels = labels.localCheckpoint(eager=True)
-    for it in range(max_iter):
-        msgs = (sym.join(labels, sym.dst == labels.uuid)
-                .select(F.col("src").alias("uuid"), "component",
-                        F.lit(False).alias("own")))
-        # Old label rides along (own=True) so the convergence check is a
-        # cheap scan of the checkpointed result — no extra join job.
-        new_labels = (labels.withColumn("own", F.lit(True)).union(msgs)
-                      .groupBy("uuid")
-                      .agg(F.min("component").alias("component"),
-                           F.min(F.when(F.col("own"), F.col("component")))
-                            .alias("_old")))
-        new_labels = new_labels.localCheckpoint(eager=True)
-        labels = new_labels.select("uuid", "component")
-        if it == 0:
-            # Alias components have diameter ≥ 1; the first round always
-            # changes something — skip its convergence check.
-            continue
-        changed = (new_labels
-                   .where(F.col("component") != F.col("_old"))
-                   .limit(1).count())
-        if changed == 0:
-            break
-    return labels
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for i, j in links:
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            parent[max(ri, rj)] = min(ri, rj)
+    canon_by_root: dict[int, str] = {}
+    for i, u in enumerate(uuids):
+        r = find(i)
+        c = canon_by_root.get(r)
+        if c is None or u < c:
+            canon_by_root[r] = u
+    return [canon_by_root[find(i)] for i in range(len(uuids))]
 
 
-def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
-                     ) -> DataFrame:
-    """(uuid → canonical_uuid) via ONE ``applyInPandas`` over ``group_id``.
+def _map_groups(rows: DataFrame, solve, schema: str) -> DataFrame:
+    """Run ``solve`` once per ``group_id`` in ONE ``mapInPandas`` over
+    group-sorted partitions. ``rows`` is (group_id, *cols); ``solve``
+    takes one group's column lists and returns the two output columns
+    of ``schema`` as lists.
 
-    Duplicate components can never span groups — every entity uuid is a
-    hash of (group_id, name) and all candidate joins are group-scoped — so
-    connected components reduce to an in-group union-find: one shuffle,
-    no driver-side iteration, no convergence barriers. This is the
-    scale-out shape: groups are conversation-sized (tens of entities), and
-    a group with more than ``max_full_pairwise`` members falls back to
-    token-blocked candidate generation (capped per token like MAX_BLOCK)
-    inside the same UDF. The global iterative-join CC
-    (:func:`connected_components`) serves the ``emb_col`` path of
-    :func:`canonicalize_entities` and the ``dedup_resolve`` query."""
-    import math
-    import re
+    Groups are split out of each Arrow batch by hand: millions of
+    conversation-sized groups make per-group pandas dispatch
+    (applyInPandas) the bottleneck; here each batch handles thousands of
+    groups with plain-list slicing. A group straddling two batches is
+    carried over (state persists across yields within one partition)."""
     from collections.abc import Iterator
 
     import pandas as pd
 
+    cols = rows.columns[1:]
+    out_names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry_g, carry = None, None
+        for pdf in batches:
+            gs = pdf["group_id"].tolist()
+            vals = [pdf[c].tolist() for c in cols]
+            out_a, out_b = [], []
+            i, n = 0, len(gs)
+            while i < n:
+                j, g = i, gs[i]
+                while j < n and gs[j] == g:
+                    j += 1
+                part = [v[i:j] for v in vals]
+                if carry is not None:
+                    if carry_g == g:
+                        part = [c + p for c, p in zip(carry, part)]
+                    else:
+                        a, b = solve(*carry)
+                        out_a += a
+                        out_b += b
+                    carry = None
+                if j == n:
+                    carry_g, carry = g, part    # may continue next batch
+                else:
+                    a, b = solve(*part)
+                    out_a += a
+                    out_b += b
+                i = j
+            if out_a:
+                yield pd.DataFrame(dict(zip(out_names, (out_a, out_b))))
+        if carry is not None:
+            yield pd.DataFrame(dict(zip(out_names, solve(*carry))))
+
+    n_part = max(2 * rows.sparkSession.sparkContext.defaultParallelism, 8)
+    return (rows.repartition(n_part, "group_id")
+            .sortWithinPartitions(*rows.columns[:2])
+            .mapInPandas(run, schema))
+
+
+def pair_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components of known duplicate pairs → (uuid, component),
+    one row per vertex, component = lexicographic-min uuid reachable.
+
+    ``vertices`` is (group_id, uuid) and ``pairs`` (group_id, uuid_a,
+    uuid_b); components never cross ``group_id``. Both inputs become one
+    union of (group_id, uuid, other) rows (``other`` NULL on a vertex
+    row) solved by the same in-group union-find as
+    :func:`grouped_uuid_map`: one shuffle and a fixed job count whatever
+    the components' diameter. A union needs no re-aliasing when both
+    inputs share lineage (``duplicate_pairs(entities)`` beside
+    ``entities``), unlike a cogroup."""
+    rows = (vertices.select("group_id", "uuid",
+                            F.lit(None).cast("string").alias("other"))
+            .unionByName(pairs.select("group_id",
+                                      F.col("uuid_a").alias("uuid"),
+                                      F.col("uuid_b").alias("other"))))
+
+    def solve(uuids: list, others: list) -> tuple[list, list]:
+        idx: dict[str, int] = {}
+        for u in uuids + others:
+            if u is not None:
+                idx.setdefault(u, len(idx))
+        links = [(idx[u], idx[o]) for u, o in zip(uuids, others)
+                 if o is not None]
+        canon = dict(zip(idx, _min_components(list(idx), links)))
+        verts = list(dict.fromkeys(u for u, o in zip(uuids, others)
+                                   if o is None))
+        return verts, [canon[u] for u in verts]
+
+    return _map_groups(rows, solve, "uuid string, component string")
+
+
+def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
+                     ) -> DataFrame:
+    """(uuid → canonical_uuid) via ONE ``mapInPandas`` over ``group_id``.
+
+    Duplicate components can never span groups — every entity uuid is a
+    hash of (group_id, name) and all candidate joins are group-scoped — so
+    connected components reduce to an in-group union-find: one shuffle,
+    no driver-side iteration, no convergence barriers. Groups are
+    conversation-sized (tens of entities); a group with more than
+    ``max_full_pairwise`` members falls back to token-blocked candidate
+    generation (capped per token like MAX_BLOCK) inside the same UDF.
+    The ``emb_col`` path of :func:`canonicalize_entities` solves its
+    precomputed pairs with the same union-find (:func:`pair_components`)."""
+    import math
+    import re
+
     alnum = re.compile(r"[a-z0-9]+")
 
-    def solve_group(uuids: list, names: list) -> list:
+    def solve(uuids: list, names: list) -> tuple[list, list]:
         # same alnum-run tokenization as rules.name_tokens / _tok
         toks = [set(alnum.findall(n)) for n in names]
         k = len(uuids)
-
-        parent = list(range(k))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
 
         def dup(i, j):
             if names[i] == names[j]:
@@ -282,10 +338,7 @@ def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
             return cos >= rules.NODE_COSINE_THRESHOLD
 
         if k <= max_full_pairwise:
-            for i in range(k):
-                for j in range(i + 1, k):
-                    if dup(i, j):
-                        union(i, j)
+            cand = ((i, j) for i in range(k) for j in range(i + 1, k))
         else:
             blocks: dict[str, list[int]] = {}
             for i, ts in enumerate(toks):
@@ -293,73 +346,13 @@ def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
                     b = blocks.setdefault(t, [])
                     if len(b) < MAX_BLOCK:
                         b.append(i)
-            seen = set()
-            for members in blocks.values():
-                for ai in range(len(members)):
-                    for bi in range(ai + 1, len(members)):
-                        i, j = members[ai], members[bi]
-                        key = (i, j)
-                        if key in seen:
-                            continue
-                        seen.add(key)
-                        if dup(i, j):
-                            union(i, j)
+            cand = {(m[a], m[b]) for m in blocks.values()
+                    for a in range(len(m)) for b in range(a + 1, len(m))}
+        links = [(i, j) for i, j in cand if dup(i, j)]
+        return uuids, _min_components(uuids, links)
 
-        # canonical = lexicographic-min uuid in the component
-        canon_by_root: dict[int, str] = {}
-        for i in range(k):
-            r = find(i)
-            c = canon_by_root.get(r)
-            if c is None or uuids[i] < c:
-                canon_by_root[r] = uuids[i]
-        return [canon_by_root[find(i)] for i in range(k)]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Manual group splitting over group-sorted partitions: millions of
-        # conversation-sized groups make per-group pandas dispatch
-        # (applyInPandas) the bottleneck; here each Arrow batch handles
-        # thousands of groups with plain-list slicing. A group straddling
-        # two batches is carried over (state persists across yields
-        # within one partition).
-        carry_g, carry_u, carry_n = None, [], []
-        for pdf in batches:
-            gs = pdf["group_id"].tolist()
-            us = pdf["uuid"].tolist()
-            ns = pdf["name_norm"].tolist()
-            out_u, out_c = [], []
-            i, n = 0, len(gs)
-            while i < n:
-                j = i
-                g = gs[i]
-                while j < n and gs[j] == g:
-                    j += 1
-                uu, nn = us[i:j], ns[i:j]
-                if carry_g == g:
-                    uu, nn = carry_u + uu, carry_n + nn
-                    carry_u, carry_n, carry_g = [], [], None
-                elif carry_g is not None:
-                    cc = solve_group(carry_u, carry_n)
-                    out_u += carry_u
-                    out_c += cc
-                    carry_u, carry_n, carry_g = [], [], None
-                if j == n:
-                    carry_g, carry_u, carry_n = g, uu, nn   # maybe continues
-                else:
-                    out_u += uu
-                    out_c += solve_group(uu, nn)
-                i = j
-            if out_u:
-                yield pd.DataFrame({"uuid": out_u, "canonical_uuid": out_c})
-        if carry_u:
-            yield pd.DataFrame({"uuid": carry_u,
-                                "canonical_uuid": solve_group(carry_u,
-                                                              carry_n)})
-
-    n_part = max(2 * entities.sparkSession.sparkContext.defaultParallelism, 8)
-    return (entities.select("group_id", "uuid", "name_norm")
-            .repartition(n_part, "group_id")
-            .sortWithinPartitions("group_id", "uuid")
-            .mapInPandas(run, "uuid string, canonical_uuid string"))
+    return _map_groups(entities.select("group_id", "uuid", "name_norm"),
+                       solve, "uuid string, canonical_uuid string")
 
 
 def canonicalize_entities(entities: DataFrame, run_ts,
@@ -379,14 +372,14 @@ def canonicalize_entities(entities: DataFrame, run_ts,
     ``emb_col`` (opt-in) switches the duplicate verify to REAL embedding
     cosine at the 0.8 threshold (``bulk_utils.py:208,236-241``) with
     sign-LSH blocking — use when ``entities`` carries an external model's
-    embeddings, whose cosine is NOT the token cosine. Implies the
-    blocking-join + iterative-CC path (duplicates found through a shared
-    LSH bucket are still group-scoped, but the in-UDF union-find only
-    knows token rules)."""
+    embeddings, whose cosine is NOT the token cosine. Its pairs come from
+    :func:`duplicate_pairs` (group-scoped blocking joins) and are solved
+    by the same in-group union-find (:func:`pair_components`)."""
     if emb_col is not None:
         pairs = duplicate_pairs(entities, emb_col=emb_col)
-        cc = connected_components(entities.select("uuid"), pairs)
-        uuid_map = cc.select("uuid", F.col("component").alias("canonical_uuid"))
+        uuid_map = (pair_components(entities, pairs)
+                    .select("uuid",
+                            F.col("component").alias("canonical_uuid")))
     else:
         uuid_map = grouped_uuid_map(entities)
 

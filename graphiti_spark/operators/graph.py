@@ -5,11 +5,9 @@ mention counts, node-distance reranking); a training-data / analytics user
 of the same tables also wants a global importance score. PageRank is the
 canonical one, and on Spark it is a pure DataFrame fixpoint: each
 iteration is ONE partitioned join (edges ⋈ ranks on the source key) plus
-ONE aggregation (contributions summed per destination) — the same
-iterative-join shape as the connected-components canonicalizer
-(operators/dedup.py:connected_components), with the same lineage hygiene
-(eager localCheckpoint per round so the plan never grows with the
-iteration count).
+ONE aggregation (contributions summed per destination), with an eager
+localCheckpoint per round so the plan never grows with the iteration
+count.
 
 Scale shape (the part that matters at 100 TB):
 

@@ -2567,28 +2567,30 @@ FROM c, t
 def q_dedup_resolve(spark, sf_dir):
     """The end-step of near-dup dedup: candidate PAIRS → clusters →
     one canonical keeper per cluster. Reuses the Jaccard≥0.5 pairs of
-    q_dedup_jaccard, runs the production hash-min connected-components
-    operator (operators/dedup.connected_components — O(diameter) rounds,
-    and near-dup clusters have tiny diameter), canonical = numeric-min
-    doc_id (ids are zero-padded so the operator's lexicographic min IS the
-    numeric min). The oracle computes the same fixpoint via a recursive
-    transitive-closure CTE — the first general-graph CC to be
-    oracle-checked, complementing kg_build_edges' closed-form input.
+    q_dedup_jaccard and solves them with the production in-group
+    union-find (operators/dedup.pair_components — one shuffle, exact at
+    any cluster diameter). Document near-dups have no conversation key,
+    so both inputs carry one constant ``group_id`` and the whole query
+    is one group. Canonical = numeric-min doc_id (ids are zero-padded so
+    the operator's lexicographic min IS the numeric min). The oracle
+    computes the same fixpoint via a recursive transitive-closure CTE —
+    the first general-graph CC to be oracle-checked, complementing
+    kg_build_edges' closed-form input.
     Output: every clustered doc with its canonical id + keeper flag."""
-    from graphiti_spark.operators.dedup import connected_components
-    # Checkpoint the pair plan HERE: verts derives from it, and
-    # connected_components checkpoints its two inputs separately — an
-    # un-cut lineage would execute the quadratic token self-join twice
-    # (once for pairs, again under verts).
+    from graphiti_spark.operators.dedup import pair_components
+    # Checkpoint the pair plan HERE: verts derives from it and both feed
+    # the union-find — an un-cut lineage would execute the quadratic
+    # token self-join twice (once for pairs, again under verts).
     pairs = (q_dedup_jaccard(spark, sf_dir)
-             .select(F.lpad(F.col("doc_a").cast("string"), 12, "0")
+             .select(F.lit("docs").alias("group_id"),
+                     F.lpad(F.col("doc_a").cast("string"), 12, "0")
                      .alias("uuid_a"),
                      F.lpad(F.col("doc_b").cast("string"), 12, "0")
                      .alias("uuid_b"))
              .localCheckpoint(eager=True))
-    verts = (pairs.select(F.col("uuid_a").alias("uuid"))
-             .union(pairs.select("uuid_b")).distinct())
-    cc = connected_components(verts, pairs)
+    verts = (pairs.select("group_id", F.col("uuid_a").alias("uuid"))
+             .union(pairs.select("group_id", "uuid_b")))
+    cc = pair_components(verts, pairs)
     return (cc.select(F.col("uuid").cast("bigint").alias("doc_id"),
                       F.col("component").cast("bigint")
                        .alias("canonical_id"))

@@ -292,6 +292,14 @@ def test_writes_drop_communities_and_keep_plans_flat(spark):
     assert g.communities is None
 
 
+def test_build_communities_materializes_community_edges(spark):
+    """community_edges is cut like communities (one checkpoint scan), so
+    a later read such as save() does not run label propagation again."""
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    g.build_communities()
+    assert _plan_nodes(g.community_edges) == _plan_nodes(g.communities)
+
+
 def test_write_sequence_equals_fresh_build(spark, tmp_path):
     """add_episode_bulk → add_triplet → add_episode → remove_episode →
     save/load equals a fresh build over the surviving turns with the

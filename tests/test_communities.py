@@ -76,31 +76,25 @@ def test_build_communities_rollup(spark):
     assert orphan == 0
 
 
-def test_build_communities_shared_lineage_unmaterialized(spark):
-    """materialize=False with entities/edges derived from ONE upstream
-    plan (the pipeline's normal shape): the cogroup's two sides then
-    carry identical attribute ids, which tripped Spark's
-    ambiguous-self-join check before _grouped_lpa re-aliased its inputs.
-    Regression for the grouped executor; must work on all strategies."""
+def test_label_propagation_shared_lineage(spark):
+    """Entities and edges derived from ONE upstream plan (the pipeline's
+    normal shape): the cogroup's two sides then carry identical
+    attribute ids, which tripped Spark's ambiguous-self-join check
+    before _grouped_lpa re-aliased its inputs."""
     base = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["src", "dst"])
     nodes = (base.select(F.col("src").alias("uuid"))
              .unionByName(base.select(F.col("dst").alias("uuid")))
              .distinct())
-    ents = nodes.select(
-        "uuid", F.upper("uuid").alias("name"), F.lit("g").alias("group_id"),
-        F.concat(F.lit("summary of "), "uuid").alias("summary"))
+    ents = nodes.select("uuid", F.lit("g").alias("group_id"))
     edges = base.select(
         F.concat(F.lit("e"), "src", "dst").alias("uuid"),
         F.lit("g").alias("group_id"),
         F.col("src").alias("source_node_uuid"),
         F.col("dst").alias("target_node_uuid"))
-    for strategy in ("grouped", "rounds", "auto"):
-        comms, comm_edges = C.build_communities(
-            ents, edges, RUN_TS, materialize=False, strategy=strategy)
-        rows = comms.collect()
-        assert {r["n_members"] for r in rows} == {3, 2}, strategy
-        assert comm_edges.count() == 5, strategy
+    by = {r["uuid"]: r["community"]
+          for r in C.label_propagation(ents, edges).collect()}
+    assert by == {"a": "c", "b": "c", "c": "c", "x": "y", "y": "y"}
 
 
 def test_get_communities_by_nodes(spark):
@@ -234,59 +228,120 @@ def _random_graph(seed):
 
 
 @pytest.mark.parametrize("seed", [11, 23, 47])
-@pytest.mark.parametrize("strategy", ["grouped", "rounds"])
-def test_reference_mode_matches_python_port(spark, seed, strategy):
+def test_reference_mode_matches_python_port(spark, seed):
     nodes, edge_rows = _random_graph(seed)
     ents, edges = _graph(spark, edge_rows, nodes)
     # reference mode lacks the monotone invariant, so convergence can
     # take more rounds than the scale default (seed 47 needs 26)
     got = {r["uuid"]: r["community"]
            for r in C.label_propagation(ents, edges, max_rounds=60,
-                                        mode="reference",
-                                        strategy=strategy).collect()}
+                                        mode="reference").collect()}
     want = _lpa_reference_port(nodes, edge_rows, max_rounds=60)
     assert got == want                       # labels, not just partition
     assert _partition(got) == _partition(want)
 
 
+def _lpa_monotone_port(nodes, edge_rows, max_rounds=50):
+    """The monotone scale rule in plain Python: synchronous rounds; each
+    node adds a weight-1 self-vote to its neighbors' multiplicity-weighted
+    votes and adopts the plurality label (ties -> larger label) only when
+    it is LARGER than its current one."""
+    from collections import defaultdict
+    proj = defaultdict(lambda: defaultdict(int))
+    for s, d in edge_rows:
+        if s != d:
+            proj[s][d] += 1
+            proj[d][s] += 1
+    community = {u: u for u in nodes}
+    for _ in range(max_rounds):
+        new = {}
+        for u in nodes:
+            cand = defaultdict(int)
+            cand[community[u]] += 1
+            for v, w in proj[u].items():
+                cand[community[v]] += w
+            _, lbl = max((c, l) for l, c in cand.items())
+            new[u] = max(lbl, community[u])
+        if new == community:
+            break
+        community = new
+    return community
+
+
+_PORTS = {"monotone": _lpa_monotone_port, "reference": _lpa_reference_port}
+
+
 @pytest.mark.parametrize("mode", ["monotone", "reference"])
-def test_grouped_executor_equals_join_rounds(spark, mode):
-    """The cogrouped in-memory executor and the iterative-join executor
-    are the same function: rounds are group-local (a node's update reads
-    only same-group neighbors), so per-group fixpoints == global
-    synchronous fixpoint. Checked label-exact on a 3-group mix of random
-    blocks, stars, and isolated nodes."""
-    rows, nodes = [], []
+def test_grouped_lpa_matches_port_per_group(spark, mode):
+    """Groups are independent graphs: label propagation over a 3-group
+    mix of random blocks, stars and an isolated node equals the
+    pure-Python port of the mode's update rule run on each group
+    alone, label-exact."""
+    rows, nodes, want = [], [], {}
     for g, seed in (("g", 5), ("h", 6)):
         ns, es = _random_graph(seed)
         nodes += [(f"{g}{n}", g) for n in ns]
         rows += [(f"{g}{s}", f"{g}{d}", g) for s, d in es]
+        want.update(_PORTS[mode]([f"{g}{n}" for n in ns],
+                                 [(f"{g}{s}", f"{g}{d}") for s, d in es],
+                                 max_rounds=60))
     nodes += [("iso", "k")]                   # node-only group
+    want["iso"] = "iso"
     edges = spark.createDataFrame(
         [(f"e{i}", g, s, d) for i, (s, d, g) in enumerate(rows)],
         ["uuid", "group_id", "source_node_uuid", "target_node_uuid"])
     ents = spark.createDataFrame(nodes, ["uuid", "group_id"])
-    kw = dict(max_rounds=60, mode=mode)
-    got_g = sorted(map(tuple, C.label_propagation(
-        ents, edges, strategy="grouped", **kw).collect()))
-    got_r = sorted(map(tuple, C.label_propagation(
-        ents, edges, strategy="rounds", **kw).collect()))
-    assert got_g == got_r
-    # auto with a tiny cap routes group g+h (40 nodes) to rounds and the
-    # 1-node group to grouped — union must still be identical
-    got_a = sorted(map(tuple, C.label_propagation(
-        ents, edges, strategy="auto", max_group_nodes=1, **kw).collect()))
-    assert got_a == got_r
+    got = {r["uuid"]: r["community"] for r in C.label_propagation(
+        ents, edges, max_rounds=60, mode=mode).collect()}
+    assert got == want
+
+
+def _job_count(spark, group, action) -> int:
+    """Spark jobs that ``action`` runs under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_count_independent_of_diameter(spark):
+    """Pair components and label propagation run the same number of
+    Spark jobs on a 10-node and a 60-node path: the whole fixpoint runs
+    inside one task per group, with no driver loop per round."""
+    from graphiti_spark.operators import dedup
+
+    counts = {}
+    for n in (10, 60):
+        nodes = [f"n{i:03d}" for i in range(n)]
+        path = list(zip(nodes, nodes[1:]))
+        ents, edges = _graph(spark, path, nodes)
+        pairs = spark.createDataFrame(
+            [("g", a, b) for a, b in path], ["group_id", "uuid_a", "uuid_b"])
+        got = {}
+        counts[n] = (
+            _job_count(spark, f"cc-{n}", lambda: got.update(
+                (r["uuid"], r["component"]) for r in
+                dedup.pair_components(ents, pairs).collect())),
+            _job_count(spark, f"lpa-{n}", lambda: C.label_propagation(
+                ents, edges).collect()))
+        assert got == {u: "n000" for u in nodes}
+    assert counts[10] == counts[60]
+    assert min(counts[10]) > 0
 
 
 @pytest.mark.parametrize("mode", ["monotone", "reference"])
 def test_cross_group_edge_never_leaks_votes(spark, mode):
     """Groups are independent graphs (the reference labels one group at
     a time): an edge row whose group_id differs from an endpoint's must
-    not carry a vote across the boundary, in EITHER executor (r5 review
-    finding — the rounds executor used to join neighbor labels on uuid
-    alone and leaked such votes). x sits alone in group g2; a g1 edge
-    a→x must leave x labeled by itself and not pull a's label onto x."""
+    not carry a vote across the boundary. x sits alone in group g2; a g1
+    edge a→x must leave x labeled by itself and not pull a's label onto
+    x."""
     ents = spark.createDataFrame(
         [("a", "g1"), ("b", "g1"), ("x", "g2")], ["uuid", "group_id"])
     edges = spark.createDataFrame(
@@ -294,39 +349,9 @@ def test_cross_group_edge_never_leaks_votes(spark, mode):
          ("e2", "g1", "a", "x")],    # cross-group: must be inert
         ["uuid", "group_id", "source_node_uuid", "target_node_uuid"])
     expect = {("a", "g1", "b"), ("b", "g1", "b"), ("x", "g2", "x")}
-    for strategy in ("grouped", "rounds"):
-        got = {tuple(r) for r in C.label_propagation(
-            ents, edges, strategy=strategy, mode=mode).collect()}
-        assert got == expect, strategy
-
-
-def test_auto_gate_routes_on_edge_volume(spark):
-    """The auto size-gate must consider projection-row volume, not just
-    node count: a node-small but edge-heavy group routes to the rounds
-    executor (here forced with a tiny max_group_edges) and the union is
-    still label-exact."""
-    ns = [f"n{i}" for i in range(6)]
-    ents = spark.createDataFrame(
-        [(n, "dense") for n in ns] + [("p", "tiny"), ("q", "tiny")],
-        ["uuid", "group_id"])
-    dense = [(f"d{i}{j}", "dense", ns[i], ns[j])
-             for i in range(6) for j in range(i + 1, 6)]   # K6: 15 edges
-    edges = spark.createDataFrame(
-        dense + [("t1", "tiny", "p", "q")],
-        ["uuid", "group_id", "source_node_uuid", "target_node_uuid"])
-    kw = dict(mode="monotone", max_rounds=30)
-    ref = sorted(map(tuple, C.label_propagation(
-        ents, edges, strategy="rounds", **kw).collect()))
-    # K6 projects to 30 rows > 20; 'tiny' projects to 2 rows <= 20
-    got = sorted(map(tuple, C.label_propagation(
-        ents, edges, strategy="auto", max_group_edges=20, **kw).collect()))
-    assert got == ref
-
-
-def test_lpa_strategy_validation(spark):
-    ents, edges = _graph(spark, [("a", "b")], ["a", "b"])
-    with pytest.raises(ValueError, match="strategy"):
-        C.label_propagation(ents, edges, strategy="tree")
+    got = {tuple(r) for r in C.label_propagation(
+        ents, edges, mode=mode).collect()}
+    assert got == expect
 
 
 def test_reference_mode_weight1_rule(spark):
@@ -349,11 +374,10 @@ def test_lpa_mode_validation(spark):
         C.label_propagation(ents, edges, mode="jacobi")
 
 
-def test_auto_gate_keeps_null_group_entities(spark):
-    """code-review r5: with any oversized group present, the auto split
-    predicates `isin(big)` / `~isin(big)` both evaluate to NULL for a
-    NULL group_id, silently dropping those entities from BOTH branches.
-    The null-safe split must keep them (routed with the small groups)."""
+def test_null_group_entities_keep_rows_and_propagate(spark):
+    """A NULL group_id is one more group: its entities keep their rows
+    and a NULL-keyed pair still propagates a shared label, beside a
+    keyed group."""
     ents = spark.createDataFrame(
         [("a1", "big"), ("a2", "big"), ("a3", "big"),
          ("n1", None), ("n2", None)],
@@ -363,10 +387,8 @@ def test_auto_gate_keeps_null_group_entities(spark):
          ("e3", None, "n1", "n2")],
         "uuid string, group_id string, source_node_uuid string, "
         "target_node_uuid string")
-    out = C.label_propagation(ents, edges, strategy="auto",
-                              max_group_nodes=2, max_rounds=20)
-    rows = out.collect()
+    rows = C.label_propagation(ents, edges, max_rounds=20).collect()
     assert {r["uuid"] for r in rows} == {"a1", "a2", "a3", "n1", "n2"}
-    # the NULL-keyed pair still propagates a shared label
     labels = {r["uuid"]: r["community"] for r in rows}
-    assert labels["n1"] == labels["n2"]
+    assert labels["n1"] == labels["n2"] == "n2"
+    assert labels["a1"] == labels["a2"] == labels["a3"] == "a3"

@@ -1,4 +1,4 @@
-"""Canonicalization tests: blocking recall, CC determinism vs a pure-Python
+"""Canonicalization tests: blocking recall, pair components vs a pure-Python
 union-find oracle (``bulk_utils.py:377-414`` semantics), uuid-map transitive
 compression (3→2, 2→1 ⇒ 3→1)."""
 
@@ -77,6 +77,16 @@ class _UF:
             self.p[max(ra, rb)] = min(ra, rb)  # lexicographic-min canonical
 
 
+def _components(spark, nodes, pairs, group="g"):
+    """pair_components over one group → {uuid: component}."""
+    v = spark.createDataFrame([(group, n) for n in nodes],
+                              ["group_id", "uuid"])
+    p = spark.createDataFrame([(group, a, b) for a, b in pairs],
+                              "group_id string, uuid_a string, uuid_b string")
+    return {r["uuid"]: r["component"]
+            for r in dedup.pair_components(v, p).collect()}
+
+
 def test_cc_matches_union_find_on_random_graphs(spark):
     rng = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(60)]
@@ -89,22 +99,37 @@ def test_cc_matches_union_find_on_random_graphs(spark):
     for a, b in edges:
         uf.union(a, b)
     want = {n: uf.find(n) for n in nodes}
-
-    v = spark.createDataFrame([(n,) for n in nodes], ["uuid"])
-    p = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], ["uuid_a", "uuid_b"])
-    got = {r["uuid"]: r["component"]
-           for r in dedup.connected_components(v, p).collect()}
+    got = _components(spark, nodes,
+                      [(min(a, b), max(a, b)) for a, b in edges])
     assert got == want
 
 
 def test_uuid_map_transitive_compression(spark):
     """bulk_utils.py:270,359 — chains compress to the root canonical."""
-    v = spark.createDataFrame([("a",), ("b",), ("c",)], ["uuid"])
-    p = spark.createDataFrame([("b", "c"), ("a", "b")], ["uuid_a", "uuid_b"])
-    got = {r["uuid"]: r["component"]
-           for r in dedup.connected_components(v, p).collect()}
+    got = _components(spark, ["a", "b", "c"], [("b", "c"), ("a", "b")])
     assert got == {"a": "a", "b": "a", "c": "a"}
+
+
+def test_components_exact_on_long_path(spark):
+    """A 60-node path has diameter 59: every node's component is the
+    path's min uuid. A round-capped hash-min propagation stops short of
+    that silently; the union-find has no round cap."""
+    nodes = [f"n{i:03d}" for i in range(60)]
+    got = _components(spark, nodes, list(zip(nodes, nodes[1:])))
+    assert got == {n: "n000" for n in nodes}
+
+
+def test_components_stay_in_group(spark):
+    """The same uuid pair in two groups never joins their components,
+    and a vertex with no pair is its own component."""
+    v = spark.createDataFrame(
+        [("g1", "a"), ("g1", "b"), ("g2", "b"), ("g2", "c"), ("g2", "z")],
+        ["group_id", "uuid"])
+    p = spark.createDataFrame([("g1", "a", "b"), ("g2", "b", "c")],
+                              ["group_id", "uuid_a", "uuid_b"])
+    got = sorted(map(tuple, dedup.pair_components(v, p).collect()))
+    assert got == [("a", "a"), ("b", "a"), ("b", "b"), ("c", "b"),
+                   ("z", "z")]
 
 
 def test_resolve_edge_pointers_drops_self_loops(spark):
