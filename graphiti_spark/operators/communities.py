@@ -17,6 +17,7 @@ member's name.
 
 from __future__ import annotations
 
+import itertools
 from datetime import datetime
 
 from pyspark.sql import DataFrame, Window
@@ -51,7 +52,7 @@ def label_propagation(entities: DataFrame, edges: DataFrame,
     Initial label = own uuid; each round a node adopts a neighbor
     plurality label (Σ edge_count weighting, argmax ties → larger label,
     ``community_operations.py:102-108``); isolated nodes keep their own
-    label; synchronous rounds to fixpoint (capped at ``max_rounds``).
+    label; synchronous rounds to fixpoint.
     Rounds are group-local, so the whole fixpoint runs per group in
     memory (:func:`_grouped_lpa`) — the reference's own unit of work —
     with no driver loop per round and a fixed number of Spark jobs.
@@ -62,8 +63,10 @@ def label_propagation(entities: DataFrame, edges: DataFrame,
       added and a node adopts the plurality label only when LARGER than
       its current one. Labels are non-decreasing per node → the
       synchronous parallel update provably cannot oscillate (naive
-      Jacobi LPA does on symmetric pulls) and a fixpoint is guaranteed;
-      the partition can differ from the reference's on some graphs.
+      Jacobi LPA does on symmetric pulls), so the rounds run until no
+      label changes, with no cap: each label can only grow to one of
+      the group's finitely many uuids. The partition can differ from the
+      reference's on some graphs.
     * ``"reference"``: the exact update of
       ``community_operations.py:77-122`` — no self-vote; a node takes
       the plurality candidate when its vote weight exceeds 1, otherwise
@@ -73,9 +76,10 @@ def label_propagation(entities: DataFrame, edges: DataFrame,
       deterministic instantiation (labels are only compared/counted, so
       the emitted PARTITION matches a port that enumerates sorted
       uuids). The reference's ``while True`` can in principle oscillate
-      forever on adversarial symmetric graphs; this version stops at
+      forever on adversarial symmetric graphs; this mode alone stops at
       ``max_rounds`` (tested to fixpoint on seeded random graphs against
-      a pure-Python port, tests/test_communities.py).
+      a pure-Python port, tests/test_communities.py). ``max_rounds`` has
+      no effect on the monotone mode.
     """
     if mode not in ("monotone", "reference"):
         raise ValueError(f"unknown LPA mode {mode!r}")
@@ -110,7 +114,7 @@ def _grouped_lpa(entities: DataFrame, proj: DataFrame, mode: str,
                 nbrs.setdefault(s, []).append((d, int(w)))
         community = {u: u for u in nodes}
         monotone = mode == "monotone"
-        for _ in range(max_rounds):
+        for _ in (itertools.count() if monotone else range(max_rounds)):
             new, change = {}, False
             for u in nodes:
                 cur = community[u]

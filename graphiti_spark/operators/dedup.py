@@ -19,14 +19,18 @@ union-find (``/root/reference/graphiti_core/utils/bulk_utils.py:201-285,
      is needed in the hot path. Blocking by shared token has full recall
      for every branch: equal, subset, and token-cosine > 0 all require a
      shared token.
-  3. **Connected components**: one in-group union-find in one
-     ``mapInPandas`` over group-sorted partitions (components never span
-     groups). It finds the token duplicates itself
-     (:func:`grouped_uuid_map`) or takes precomputed pairs on the opt-in
-     embedding path (:func:`pair_components`). Canonical =
-     lexicographic-min uuid in the component — exactly the reference's
-     ``compress_uuid_map`` tie-break (``bulk_utils.py:399-414``), which
-     keeps outputs identical across partitionings and cluster sizes.
+  3. **Connected components**: one in-group union-find
+     (:func:`canonical_uuids`; components never span groups). The build
+     runs it inside its extraction kernel, in the task that extracts the
+     conversation (:func:`graphiti_spark.operators.extract.
+     extract_combined`), so no join remaps edge endpoints afterwards.
+     The opt-in embedding path solves its precomputed pairs with the same
+     union-find in one ``mapInPandas`` over group-sorted partitions
+     (:func:`pair_components`).
+     Canonical = lexicographic-min uuid in the component — exactly the
+     reference's ``compress_uuid_map`` tie-break
+     (``bulk_utils.py:399-414``), which keeps outputs identical across
+     partitionings and cluster sizes.
 
 Skew note: token blocks are capped (``MAX_BLOCK``) — a stop-token shared by
 millions of names would otherwise create a quadratic block; the reference
@@ -36,12 +40,17 @@ by two-phase salted aggregation (:mod:`graphiti_spark.operators.skew`).
 
 from __future__ import annotations
 
+import math
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from graphiti_spark import rules
 
 MAX_BLOCK = 64          # max members of one blocking bucket considered
+MAX_FULL_PAIRWISE = 200  # larger groups take token-blocked candidates
 
 
 def _tok(col) -> F.Column:
@@ -214,60 +223,68 @@ def _min_components(uuids: list, links) -> list:
     return [canon_by_root[find(i)] for i in range(len(uuids))]
 
 
-def _map_groups(rows: DataFrame, solve, schema: str) -> DataFrame:
-    """Run ``solve`` once per ``group_id`` in ONE ``mapInPandas`` over
-    group-sorted partitions. ``rows`` is (group_id, *cols); ``solve``
-    takes one group's column lists and returns the two output columns
-    of ``schema`` as lists.
+def group_partitions(spark) -> int:
+    """Width of every group-clustered shuffle: 2× the default parallelism,
+    at least 8. The build clusters its transcripts at this width, so a
+    later ``repartition(group_partitions(spark), "group_id")`` over the
+    same rows is a no-op that Spark plans away."""
+    return max(2 * spark.sparkContext.defaultParallelism, 8)
+
+
+def split_groups(batches, solve, out_names: list[str]):
+    """Split group-sorted pandas batches (``group_id`` first) into groups
+    and run ``solve(group_id, *column_lists)`` once per group; ``solve``
+    returns one list per name of ``out_names``. Yields one output frame
+    per input batch that completes a group.
 
     Groups are split out of each Arrow batch by hand: millions of
     conversation-sized groups make per-group pandas dispatch
     (applyInPandas) the bottleneck; here each batch handles thousands of
     groups with plain-list slicing. A group straddling two batches is
     carried over (state persists across yields within one partition)."""
-    from collections.abc import Iterator
-
     import pandas as pd
 
-    cols = rows.columns[1:]
-    out_names = [f.split()[0] for f in schema.split(",")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_g, carry = None, None
-        for pdf in batches:
-            gs = pdf["group_id"].tolist()
-            vals = [pdf[c].tolist() for c in cols]
-            out_a, out_b = [], []
-            i, n = 0, len(gs)
-            while i < n:
-                j, g = i, gs[i]
-                while j < n and gs[j] == g:
-                    j += 1
-                part = [v[i:j] for v in vals]
-                if carry is not None:
-                    if carry_g == g:
-                        part = [c + p for c, p in zip(carry, part)]
-                    else:
-                        a, b = solve(*carry)
-                        out_a += a
-                        out_b += b
-                    carry = None
-                if j == n:
-                    carry_g, carry = g, part    # may continue next batch
+    carry_g, carry = None, None
+    for pdf in batches:
+        gs = pdf["group_id"].tolist()
+        vals = [pdf[c].tolist() for c in pdf.columns[1:]]
+        outs: list[list] = [[] for _ in out_names]
+        i, n = 0, len(gs)
+        while i < n:
+            j, g = i, gs[i]
+            while j < n and gs[j] == g:
+                j += 1
+            part = [v[i:j] for v in vals]
+            if carry is not None:
+                if carry_g == g:
+                    part = [c + p for c, p in zip(carry, part)]
                 else:
-                    a, b = solve(*part)
-                    out_a += a
-                    out_b += b
-                i = j
-            if out_a:
-                yield pd.DataFrame(dict(zip(out_names, (out_a, out_b))))
-        if carry is not None:
-            yield pd.DataFrame(dict(zip(out_names, solve(*carry))))
+                    for o, r in zip(outs, solve(carry_g, *carry)):
+                        o += r
+                carry = None
+            if j == n:
+                carry_g, carry = g, part    # may continue next batch
+            else:
+                for o, r in zip(outs, solve(g, *part)):
+                    o += r
+            i = j
+        if outs[0]:
+            yield pd.DataFrame(dict(zip(out_names, outs)))
+    if carry is not None:
+        last = solve(carry_g, *carry)
+        if last[0]:
+            yield pd.DataFrame(dict(zip(out_names, last)))
 
-    n_part = max(2 * rows.sparkSession.sparkContext.defaultParallelism, 8)
-    return (rows.repartition(n_part, "group_id")
+
+def map_groups(rows: DataFrame, solve, schema: T.StructType) -> DataFrame:
+    """Run ``solve`` once per ``group_id`` in ONE ``mapInPandas`` over
+    partitions clustered by ``group_id`` and sorted by the first two
+    columns of ``rows`` (``group_id`` first). See :func:`split_groups`."""
+    names = schema.fieldNames()
+    return (rows.repartition(group_partitions(rows.sparkSession),
+                             "group_id")
             .sortWithinPartitions(*rows.columns[:2])
-            .mapInPandas(run, schema))
+            .mapInPandas(lambda it: split_groups(it, solve, names), schema))
 
 
 def pair_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -277,8 +294,8 @@ def pair_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
     ``vertices`` is (group_id, uuid) and ``pairs`` (group_id, uuid_a,
     uuid_b); components never cross ``group_id``. Both inputs become one
     union of (group_id, uuid, other) rows (``other`` NULL on a vertex
-    row) solved by the same in-group union-find as
-    :func:`grouped_uuid_map`: one shuffle and a fixed job count whatever
+    row) solved by the same in-group union-find as the build's kernel
+    (:func:`_min_components`): one shuffle and a fixed job count whatever
     the components' diameter. A union needs no re-aliasing when both
     inputs share lineage (``duplicate_pairs(entities)`` beside
     ``entities``), unlike a cogroup."""
@@ -288,7 +305,7 @@ def pair_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
                                       F.col("uuid_a").alias("uuid"),
                                       F.col("uuid_b").alias("other"))))
 
-    def solve(uuids: list, others: list) -> tuple[list, list]:
+    def solve(_g, uuids: list, others: list) -> tuple[list, list]:
         idx: dict[str, int] = {}
         for u in uuids + others:
             if u is not None:
@@ -300,59 +317,51 @@ def pair_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
                                    if o is None))
         return verts, [canon[u] for u in verts]
 
-    return _map_groups(rows, solve, "uuid string, component string")
+    return map_groups(rows, solve, T.StructType(
+        [T.StructField(n, T.StringType()) for n in ("uuid", "component")]))
 
 
-def grouped_uuid_map(entities: DataFrame, max_full_pairwise: int = 200
-                     ) -> DataFrame:
-    """(uuid → canonical_uuid) via ONE ``mapInPandas`` over ``group_id``.
+_ALNUM = re.compile(r"[a-z0-9]+")
 
-    Duplicate components can never span groups — every entity uuid is a
-    hash of (group_id, name) and all candidate joins are group-scoped — so
-    connected components reduce to an in-group union-find: one shuffle,
-    no driver-side iteration, no convergence barriers. Groups are
-    conversation-sized (tens of entities); a group with more than
-    ``max_full_pairwise`` members falls back to token-blocked candidate
-    generation (capped per token like MAX_BLOCK) inside the same UDF.
-    The ``emb_col`` path of :func:`canonicalize_entities` solves its
-    precomputed pairs with the same union-find (:func:`pair_components`)."""
-    import math
-    import re
 
-    alnum = re.compile(r"[a-z0-9]+")
+def canonical_uuids(uuids: list, names: list,
+                    max_full_pairwise: int = MAX_FULL_PAIRWISE) -> list:
+    """One group's entities (uuids, normalized names) → each entity's
+    canonical uuid under the duplicate rule of
+    :func:`duplicate_decision` (normalized-equal, token subset, or
+    token-cosine ≥ 0.8), solved by :func:`_min_components`.
 
-    def solve(uuids: list, names: list) -> tuple[list, list]:
-        # same alnum-run tokenization as rules.name_tokens / _tok
-        toks = [set(alnum.findall(n)) for n in names]
-        k = len(uuids)
+    Groups are conversation-sized (tens of entities) and are compared
+    pairwise; a group with more than ``max_full_pairwise`` members takes
+    token-blocked candidates instead, capped per token like
+    :data:`MAX_BLOCK`."""
+    # same alnum-run tokenization as rules.name_tokens / _tok
+    toks = [set(_ALNUM.findall(n)) for n in names]
+    k = len(uuids)
 
-        def dup(i, j):
-            if names[i] == names[j]:
-                return True
-            ti, tj = toks[i], toks[j]
-            if not ti or not tj:
-                return False
-            if ti <= tj or tj <= ti:
-                return True
-            cos = len(ti & tj) / math.sqrt(len(ti) * len(tj))
-            return cos >= rules.NODE_COSINE_THRESHOLD
+    def dup(i, j):
+        if names[i] == names[j]:
+            return True
+        ti, tj = toks[i], toks[j]
+        if not ti or not tj:
+            return False
+        if ti <= tj or tj <= ti:
+            return True
+        cos = len(ti & tj) / math.sqrt(len(ti) * len(tj))
+        return cos >= rules.NODE_COSINE_THRESHOLD
 
-        if k <= max_full_pairwise:
-            cand = ((i, j) for i in range(k) for j in range(i + 1, k))
-        else:
-            blocks: dict[str, list[int]] = {}
-            for i, ts in enumerate(toks):
-                for t in ts:
-                    b = blocks.setdefault(t, [])
-                    if len(b) < MAX_BLOCK:
-                        b.append(i)
-            cand = {(m[a], m[b]) for m in blocks.values()
-                    for a in range(len(m)) for b in range(a + 1, len(m))}
-        links = [(i, j) for i, j in cand if dup(i, j)]
-        return uuids, _min_components(uuids, links)
-
-    return _map_groups(entities.select("group_id", "uuid", "name_norm"),
-                       solve, "uuid string, canonical_uuid string")
+    if k <= max_full_pairwise:
+        cand = ((i, j) for i in range(k) for j in range(i + 1, k))
+    else:
+        blocks: dict[str, list[int]] = {}
+        for i, ts in enumerate(toks):
+            for t in ts:
+                b = blocks.setdefault(t, [])
+                if len(b) < MAX_BLOCK:
+                    b.append(i)
+        cand = {(m[a], m[b]) for m in blocks.values()
+                for a in range(len(m)) for b in range(a + 1, len(m))}
+    return _min_components(uuids, [(i, j) for i, j in cand if dup(i, j)])
 
 
 def canonicalize_entities(entities: DataFrame, run_ts,
@@ -362,43 +371,53 @@ def canonicalize_entities(entities: DataFrame, run_ts,
 
     uuid_map: (uuid, canonical_uuid) for every raw entity. Canonical row
     keeps the canonical member's surface form; labels = distinct union
-    (reference keeps resolved node's fields, ``node_operations.py:258-284``).
-    Embeddings are NOT computed here — the pipeline embeds canonical names
-    once, downstream, so the CC/merge shuffles stay narrow.
+    (reference keeps resolved node's fields, ``node_operations.py:258-284``)
+    in the order of the members' ``(first_turn, uuid)``, so ``labels[0]``
+    is the type of the component's first mention whatever the physical
+    plan; ``member_uuids`` lists the sorted member uuids. Embeddings are
+    NOT computed here — the pipeline embeds canonical names once,
+    downstream, so the merge shuffle stays narrow.
 
-    Duplicates are resolved by the single-shuffle per-group union-find
-    (:func:`grouped_uuid_map`).
+    ``entities`` carry the ``canonical_uuid`` that the build's extraction
+    kernel solved in-group (:func:`graphiti_spark.operators.extract.
+    extract_combined`), so only the merge runs here.
 
-    ``emb_col`` (opt-in) switches the duplicate verify to REAL embedding
-    cosine at the 0.8 threshold (``bulk_utils.py:208,236-241``) with
-    sign-LSH blocking — use when ``entities`` carries an external model's
-    embeddings, whose cosine is NOT the token cosine. Its pairs come from
-    :func:`duplicate_pairs` (group-scoped blocking joins) and are solved
-    by the same in-group union-find (:func:`pair_components`)."""
+    ``emb_col`` (opt-in) re-solves the components with the duplicate
+    verify switched to REAL embedding cosine at the 0.8 threshold
+    (``bulk_utils.py:208,236-241``) and sign-LSH blocking — use when
+    ``entities`` carries an external model's embeddings, whose cosine is
+    NOT the token cosine. Its pairs come from :func:`duplicate_pairs`
+    (group-scoped blocking joins) and are solved by the same in-group
+    union-find (:func:`pair_components`)."""
     if emb_col is not None:
+        entities = entities.drop("canonical_uuid")
         pairs = duplicate_pairs(entities, emb_col=emb_col)
-        uuid_map = (pair_components(entities, pairs)
-                    .select("uuid",
-                            F.col("component").alias("canonical_uuid")))
-    else:
-        uuid_map = grouped_uuid_map(entities)
+        entities = entities.join(
+            pair_components(entities, pairs).select(
+                "uuid", F.col("component").alias("canonical_uuid")),
+            "uuid")
+    uuid_map = entities.select("uuid", "canonical_uuid")
 
+    by_first = F.array_sort(F.collect_list(
+        F.struct("first_turn", "uuid", "labels")))
     merged = (
-        entities.join(uuid_map, "uuid")
+        entities
         .groupBy("group_id", "canonical_uuid")
         .agg(
             # min by uuid (unique) — trailing fields ride along.
             F.min(F.struct("uuid", "name", "name_norm")).alias("canon"),
-            F.array_distinct(F.flatten(F.collect_list("labels"))).alias("labels"),
+            F.array_distinct(F.flatten(F.transform(
+                by_first, lambda m: m["labels"]))).alias("labels"),
             F.min("created_at").alias("created_at"),
             F.min("first_turn").alias("first_turn"),
+            F.array_sort(F.collect_list("uuid")).alias("member_uuids"),
         )
         .select(
             F.col("canonical_uuid").alias("uuid"),
             F.col("canon.name").alias("name"),
             "group_id", "labels", "created_at",
             F.col("canon.name_norm").alias("name_norm"),
-            "first_turn",
+            "first_turn", "member_uuids",
         )
     )
     return merged, uuid_map
@@ -406,7 +425,8 @@ def canonicalize_entities(entities: DataFrame, run_ts,
 
 def resolve_edge_pointers(edges: DataFrame, uuid_map: DataFrame) -> DataFrame:
     """J8 — remap edge endpoints through the canonical map
-    (``bulk_utils.py:420-427``): two joins + coalesce.
+    (``bulk_utils.py:420-427``): two joins + coalesce. The build remaps
+    inside its extraction kernel instead; this serves other callers.
 
     Only genuine renames join: the left-join + coalesce already treats an
     absent key as identity, and most entities are singletons

@@ -8,8 +8,11 @@ Reference semantics reproduced:
     ``tests/evals/eval_e2e_graph_building.py:53``). This is the per-row
     invariant: per-turn text equality under stable (conv_id, turn_idx) order.
   * previous-episode context = prior ``EPISODE_WINDOW_LEN = 3`` turns
-    (``utils/maintenance/graph_data_operations.py:28,84-135``), attached by
-    :func:`hydrate_context` only to episodes a coreference can use it in.
+    (``utils/maintenance/graph_data_operations.py:28,84-135``). The build
+    reads it inside its extraction kernel from the conversation's
+    turn-sorted rows (:func:`graphiti_spark.operators.extract.
+    extract_combined`); :func:`hydrate_context` is the same window as a
+    Spark join, kept for callers outside the build.
   * ``valid_at`` = turn ts (document time), ``created_at`` = fixed run_ts
     (ingestion time) — the bi-temporal split (``nodes.py:151-153``).
 
@@ -38,8 +41,9 @@ def stable_id_cols(*cols):
 def assemble_episodes(transcripts: DataFrame, run_ts: datetime) -> DataFrame:
     """transcripts → one episode row per turn.
 
-    ``prev_context`` starts empty: :func:`hydrate_context` attaches the
-    previous turns only where a coreference can consume them. Context
+    ``prev_context`` starts empty: the build's extraction kernel reads
+    the previous turns from the sorted rows itself, and
+    :func:`hydrate_context` fills the column for other callers. Context
     retrieval for the read path is :func:`retrieve_episodes`.
     """
     # EpisodeType routing (``nodes.py:45-70``): an optional `source` column
@@ -125,7 +129,9 @@ def hydrate_context(episodes: DataFrame,
     """Attach ``prev_context`` (previous ``window_len`` turns, the
     reference's ``previous_episodes`` window,
     ``graph_data_operations.py:28,84-135``) to the episodes that might
-    need it — WITHOUT a full-corpus window shuffle.
+    need it — WITHOUT a full-corpus window shuffle. The build does not
+    call it: its extraction kernel reads the same window from the
+    conversation's turn-sorted rows in the task that extracts.
 
     The scale design: a per-row window over (conv_id, turn_idx) would
     shuffle and sort the whole transcript corpus and triple the bytes

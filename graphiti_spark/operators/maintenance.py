@@ -118,7 +118,7 @@ def remerge_edges(edges: DataFrame | None, raw: DataFrame, run_ts: datetime,
         raw = stored_edges_to_raw(edges).unionByName(
             raw, allowMissingColumns=True)
     out = versioning.apply_versioning(versioning.dedupe_edges(raw), run_ts,
-                                      eager=False, ontology=ontology)
+                                      ontology=ontology)
     if edges is not None and "fact_embedding" in edges.columns:
         from graphiti_spark.operators.extract import embed_udf
         out = out.withColumn("fact_embedding", embed_udf(F.col("fact")))

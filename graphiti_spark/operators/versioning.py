@@ -120,28 +120,23 @@ def dedupe_edges(edges_raw: DataFrame) -> DataFrame:
 
 
 def apply_versioning(edges: DataFrame, run_ts: datetime,
-                     eager: bool = True, ontology=None) -> DataFrame:
+                     ontology=None) -> DataFrame:
     """Fill invalid_at / expired_at per the T1/T2 rules. Input: output of
     :func:`dedupe_edges`. Output: full EDGES-shaped rows (minus embeddings).
 
     ``ontology`` (E6) extends the functional/sentiment predicate sets —
     a custom functional pred gets the same supersede-on-next-fact T1a
     semantics as the builtins.
+
+    The input feeds three branches (pos, neg, pos_keys) and is not
+    persisted: each branch re-runs the dedupe merge over the build's
+    persisted kernel output, with its own filter pushed below the
+    shuffle, which costs less than a materialization job per build.
     """
     functional = (FUNCTIONAL if ontology is None
                   else sorted(ontology.functional_preds))
     sentiment = (SENTIMENT if ontology is None
                  else sorted(ontology.sentiment_preds))
-    # The input feeds three branches (pos, neg, pos_keys) — persist AND
-    # (at scale) materialize eagerly: a lazy persist lets the branches pull
-    # the upstream dedupe/remap chain through the cold cache concurrently,
-    # computing the shared subtree up to three times in the same job. For
-    # small inputs the recompute is cheaper than the barrier job, so the
-    # pipeline passes eager=False below its row threshold.
-    from pyspark.storagelevel import StorageLevel
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        edges.count()
     pos = edges.where(~F.col("_neg"))
     neg = edges.where(F.col("_neg"))
 

@@ -34,24 +34,6 @@ EPISODES = T.StructType([
     T.StructField("prev_context", T.ArrayType(T.StringType()), True),
 ])
 
-MENTION = T.StructType([
-    T.StructField("name", T.StringType(), False),
-    T.StructField("entity_type_id", T.StringType(), False),
-])
-
-TRIPLE = T.StructType([
-    T.StructField("subj", T.StringType(), False),
-    T.StructField("pred", T.StringType(), False),
-    T.StructField("obj", T.StringType(), False),
-    T.StructField("fact", T.StringType(), False),
-    T.StructField("valid_at", T.TimestampType(), True),
-    T.StructField("invalid_at", T.TimestampType(), True),
-    # E4 typed attributes from template slots / temporal adjuncts / JSON
-    # field names (edges.py:186-188 attributes dict).
-    T.StructField("attributes", T.MapType(T.StringType(), T.StringType()),
-                  True),
-])
-
 # EntityNode (nodes.py:265-269).
 ENTITIES = T.StructType([
     T.StructField("uuid", T.StringType(), False),

@@ -163,7 +163,7 @@ FAMILIES = {
 
 # family → (render -> (content, prev_contents, gold)): constructions whose
 # antecedent lives in a PREVIOUS episode — exercised through the same
-# prev_context parameter the pipeline's hydrate_context populates.
+# prev_context parameter the build's extraction kernel fills.
 PREV_FAMILIES = {
     "cross_episode_coref": (
         lambda p, o, c, y: (f"She works at {o}.",

@@ -19,3 +19,21 @@ def spark():
 @pytest.fixture(scope="session")
 def corpus_dir() -> str:
     return ensure_corpus(0.001)
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(group, action)`` → the Spark jobs ``action`` runs under
+    its own job group."""
+    def count(group: str, action) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

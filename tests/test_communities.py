@@ -296,21 +296,7 @@ def test_grouped_lpa_matches_port_per_group(spark, mode):
     assert got == want
 
 
-def _job_count(spark, group, action) -> int:
-    """Spark jobs that ``action`` runs under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_job_count_independent_of_diameter(spark):
+def test_job_count_independent_of_diameter(spark, job_count):
     """Pair components and label propagation run the same number of
     Spark jobs on a 10-node and a 60-node path: the whole fixpoint runs
     inside one task per group, with no driver loop per round."""
@@ -325,14 +311,26 @@ def test_job_count_independent_of_diameter(spark):
             [("g", a, b) for a, b in path], ["group_id", "uuid_a", "uuid_b"])
         got = {}
         counts[n] = (
-            _job_count(spark, f"cc-{n}", lambda: got.update(
+            job_count(f"cc-{n}", lambda: got.update(
                 (r["uuid"], r["component"]) for r in
                 dedup.pair_components(ents, pairs).collect())),
-            _job_count(spark, f"lpa-{n}", lambda: C.label_propagation(
+            job_count(f"lpa-{n}", lambda: C.label_propagation(
                 ents, edges).collect()))
         assert got == {u: "n000" for u in nodes}
     assert counts[10] == counts[60]
     assert min(counts[10]) > 0
+
+
+def test_monotone_lpa_reaches_fixpoint_on_long_path(spark):
+    """The monotone rule runs to its fixpoint with default arguments: a
+    60-node path needs ~60 rounds, beyond the reference mode's
+    ``max_rounds`` default, and ends with one label, the largest uuid."""
+    nodes = [f"n{i:03d}" for i in range(60)]
+    ents, edges = _graph(spark, list(zip(nodes, nodes[1:])), nodes)
+    got = {r["uuid"]: r["community"]
+           for r in C.label_propagation(ents, edges).collect()}
+    assert set(got) == set(nodes)
+    assert set(got.values()) == {"n059"}
 
 
 @pytest.mark.parametrize("mode", ["monotone", "reference"])

@@ -1,8 +1,8 @@
-"""Cross-episode coreference through the DISTRIBUTED path: the
-hydrate_context operator (predicate-pruned ranged self-join, the Spark
-analogue of the reference's previous_episodes window,
-graph_data_operations.py:28,84-135) feeding the extraction UDFs and the
-full build_graph pipeline."""
+"""Cross-episode coreference through the DISTRIBUTED path: the build's
+group kernel (``extract.extract_combined``) reads each episode's previous
+turns from the conversation's turn-sorted rows (the reference's
+previous_episodes window, graph_data_operations.py:28,84-135) before it
+extracts, and the full build_graph pipeline runs the same kernel."""
 
 from __future__ import annotations
 
@@ -10,8 +10,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from graphiti_spark.operators.episodes import (assemble_episodes,
-                                               hydrate_context)
+from graphiti_spark import rules
+from graphiti_spark.operators.episodes import assemble_episodes
 from graphiti_spark.operators.extract import extract_edges
 from graphiti_spark.plans.pipeline import build_graph
 
@@ -38,7 +38,7 @@ def test_hydrate_context_resolves_cross_episode(spark):
         ("c3", 0, "user", "He works at Hooli.", None, TS0),
     ]
     tr = spark.createDataFrame(rows, SCHEMA)
-    eps = hydrate_context(assemble_episodes(tr, TS0))
+    eps = assemble_episodes(tr, TS0)
     got = _triples(extract_edges(eps, TS0))
     assert got == sorted([
         ("c1", 0, "Carol Moss", "LIVES_IN", "Oslo"),
@@ -58,7 +58,7 @@ def test_hydrate_window_is_bounded(spark):
                for i in (1, 2, 3)]
             + [("c1", 4, "user", "She works at Globex.", None, TS0)])
     tr = spark.createDataFrame(rows, SCHEMA)
-    eps = hydrate_context(assemble_episodes(tr, TS0))
+    eps = assemble_episodes(tr, TS0)
     got = _triples(extract_edges(eps, TS0))
     assert got == [("c1", 0, "Carol Moss", "LIVES_IN", "Oslo")]
     # ... and exactly at distance 3 it IS in reach
@@ -66,23 +66,27 @@ def test_hydrate_window_is_bounded(spark):
              + [("c1", i, "user", "nothing to see here.", None, TS0)
                 for i in (1, 2)]
              + [("c1", 3, "user", "She works at Globex.", None, TS0)])
-    eps2 = hydrate_context(assemble_episodes(
-        spark.createDataFrame(rows2, SCHEMA), TS0))
+    eps2 = assemble_episodes(spark.createDataFrame(rows2, SCHEMA), TS0)
     assert ("c1", 3, "Carol Moss", "WORKS_AT", "Globex") in _triples(
         extract_edges(eps2, TS0))
 
 
 def test_hydrate_context_inert_on_pronoun_free_corpus(spark, corpus_dir):
-    # on a pronoun-free corpus the trigger matches nothing: the
-    # hydrated plan must produce BIT-IDENTICAL extraction output (and
-    # the trigger itself must select zero episodes)
+    # on a pronoun-free corpus the trigger matches nothing: the kernel,
+    # which hands every episode its previous turns, must produce
+    # BIT-IDENTICAL extraction output to a context-free per-episode
+    # extraction (and the trigger itself must select zero episodes)
     tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
     eps = assemble_episodes(tr, TS0)
-    hydrated = hydrate_context(eps)
     from graphiti_spark.operators.episodes import _coref_trigger
     assert eps.where(_coref_trigger()).count() == 0
     a = _triples(extract_edges(eps, TS0))
-    b = _triples(extract_edges(hydrated, TS0))
+    b = sorted(
+        (r.group_id, r.turn_idx, t["subj"], t["pred"], t["obj"])
+        for r in eps.select("group_id", "turn_idx", "content").collect()
+        for t in rules.extract_all(r.content, TS0)[1]
+        if rules.entity_uuid(r.group_id, t["subj"])
+        != rules.entity_uuid(r.group_id, t["obj"]))
     assert a == b and len(a) > 0
 
 
@@ -94,7 +98,7 @@ def test_pipeline_consumes_cross_episode_context(spark):
         ("c1", 1, "user", "She works at Globex.", None, TS0),
     ]
     tr = spark.createDataFrame(rows, SCHEMA)
-    g = build_graph(spark, tr, eager=False)
+    g = build_graph(spark, tr)
     names = {r.name for r in g.entities.collect()}
     assert names == {"Carol Moss", "Oslo", "Globex"}
     edges = {(r.source_node_uuid, r.name, r.target_node_uuid)
@@ -115,7 +119,7 @@ def test_hydrate_resolves_punctuationless_tails(spark):
         ("c2", 1, "user", "Dana Kim does too", None, TS0),
     ]
     tr = spark.createDataFrame(rows, SCHEMA)
-    eps = hydrate_context(assemble_episodes(tr, TS0))
+    eps = assemble_episodes(tr, TS0)
     got = _triples(extract_edges(eps, TS0))
     assert ("c1", 1, "Carol Moss", "WORKS_AT", "Acme Corp") in got
     assert ("c2", 1, "Dana Kim", "WORKS_AT", "Initech") in got

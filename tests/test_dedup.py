@@ -44,9 +44,10 @@ def test_punctuated_alias_merges(spark):
     assert (min(cc1, cc2), max(cc1, cc2)) in pairs
     # pure-python rule agrees (single source of truth)
     assert rules.node_is_duplicate("Coca-Cola", "Coca Cola", 0.0)
-    # grouped union-find (the pipeline path) merges them too
-    umap = {r["uuid"]: r["canonical_uuid"]
-            for r in dedup.grouped_uuid_map(ents).collect()}
+    # the in-group union-find (the build kernel's path) merges them too
+    rows = ents.select("uuid", "name_norm").collect()
+    umap = dict(zip((r["uuid"] for r in rows), dedup.canonical_uuids(
+        [r["uuid"] for r in rows], [r["name_norm"] for r in rows])))
     assert umap[cc1] == umap[cc2] == min(cc1, cc2)
     assert umap[rules.entity_uuid("g", "Pepsi")] == \
         rules.entity_uuid("g", "Pepsi")

@@ -68,6 +68,5 @@ def test_stored_edges_roundtrip_through_merge(spark):
     base = _turns(spark, BASE + NEW)
     g = build_graph(spark, base, run_ts=RUN_TS)
     again = versioning.apply_versioning(
-        versioning.dedupe_edges(stored_edges_to_raw(g.edges)),
-        RUN_TS, eager=False)
+        versioning.dedupe_edges(stored_edges_to_raw(g.edges)), RUN_TS)
     assert _edge_key(again) == _edge_key(g.edges)

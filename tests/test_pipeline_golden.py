@@ -113,6 +113,59 @@ def test_episodic_edges_reference_canonical_entities(spark, graph):
     assert orphans == 0
 
 
+def _entity_rows(g):
+    return sorted(
+        (r["uuid"], r["name"], tuple(r["labels"]),
+         r["attributes"]["entity_type"], tuple(r["member_uuids"]),
+         r["summary"])
+        for r in g.entities.collect())
+
+
+def test_entities_independent_of_input_order_and_partitioning(spark,
+                                                              corpus_dir):
+    """Entity labels (and so ``attributes.entity_type``) follow the
+    members' (first_turn, uuid), not the order rows reach the merge: one
+    corpus built from two row orders and partitionings gives identical
+    entities, and a component's first label is its first mention's."""
+    tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
+    shuffled = tr.orderBy(F.desc("conv_id"), F.desc("turn_idx")) \
+        .repartition(3, "turn_idx")
+    assert _entity_rows(build_graph(spark, tr)) == \
+        _entity_rows(build_graph(spark, shuffled))
+
+    from datetime import datetime
+    ts0 = datetime(2024, 1, 1)
+    rows = [("s", 0, "carol", "I live in Lisbon.", None, ts0),
+            ("s", 1, "user", "Carol Moss works at Globex.", None, ts0),
+            ("p", 0, "user", "Carol Moss works at Globex.", None, ts0),
+            ("p", 1, "carol", "I live in Lisbon.", None, ts0)]
+    schema = ("conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    want = {("s", "Speaker"), ("p", "Person")}
+    for order in (rows, rows[::-1]):
+        g = build_graph(spark, spark.createDataFrame(order, schema)
+                        .repartition(2))
+        carol = {(r["group_id"], r["attributes"]["entity_type"])
+                 for r in g.entities.collect()
+                 if len(r["member_uuids"]) == 2}
+        assert carol == want
+
+
+def test_storeless_build_job_count_is_fixed(spark, corpus_dir, job_count):
+    """A storeless build forced through ``edges.count()`` runs at most 8
+    Spark jobs, and the same number at two corpus sizes: context,
+    extraction and the union-find run in one group-local pass. The
+    cache is cleared first, so no earlier build's cached kernel output
+    of the same plan serves this one."""
+    spark.catalog.clearCache()
+    tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
+    counts = [job_count(f"build-{name}",
+                        lambda: build_graph(spark, df).edges.count())
+              for name, df in (("small", tr.where(F.col("turn_idx") < 4)),
+                               ("full", tr))]
+    assert counts[0] == counts[1] and 0 < counts[0] <= 8, counts
+
+
 CUSTOM_ONTOLOGY = Ontology(
     entity_types={"Product": ("category",)},
     excluded_entity_types=["Place"],
@@ -144,7 +197,7 @@ def test_resume_reuses_checkpointed_stages(spark, corpus_dir, tmp_path,
 
 def _fp(ontology=None):
     from graphiti_spark.plans.pipeline import RUN_TS, _fingerprint
-    return _fingerprint(v=1, run_ts=RUN_TS, emb=False,
+    return _fingerprint(v=2, run_ts=RUN_TS, emb=False,
                         onto=None if ontology is None
                         else ontology.fingerprint())
 
