@@ -184,9 +184,11 @@ class GraphitiSpark:
             _join_groups(self.entities, groups, "left_semi"),
             self.run_ts, ontology=self.ontology)
         self.transcripts = transcripts
-        return self._apply(groups, edges=edges, entities=entities,
-                           episodes=g.episodes,
-                           episodic_edges=g.episodic_edges)
+        self._apply(groups, edges=edges, entities=entities,
+                    episodes=g.episodes, episodic_edges=g.episodic_edges)
+        # every table is checkpointed: nothing reads the kernel output again
+        g.release()
+        return self
 
     def _apply(self, groups: DataFrame, **tables: DataFrame
                ) -> "GraphitiSpark":

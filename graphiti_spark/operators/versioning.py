@@ -19,15 +19,17 @@ as closed-form window logic (SURVEY.md §2.5 W6, §2.7):
         the reference temporal test contract
         (``tests/utils/maintenance/test_temporal_operations_int.py:96-264``);
       - explicit negation rows ("no longer ...", invalid_at = ts) close the
-        matching open edge via an equi-join, earliest-after-valid_at first —
+        matching open edge, earliest negation strictly after valid_at —
         replicating the reference's sorted-by-valid_at-asc-Nones-last
         candidate order (``edge_operations.py:476``).
   * ``expired_at = run_ts`` whenever versioning set/found ``invalid_at``
     (T2: "resolved edge has invalid_at but no expired_at → expired_at=now",
     ``edge_operations.py:471-472``).
 
-All shuffles are keyed by (group_id, …) so at cluster scale the whole stage
-co-partitions with the extraction output.
+One stream, one exchange: ``dedupe_edges`` repartitions the raw edges by
+(group_id, source_node_uuid) once, and the merge and every versioning
+window are keyed by a superset of that, so the whole stage runs as sorts
+over that single shuffle.
 """
 
 from __future__ import annotations
@@ -51,18 +53,26 @@ def dedupe_edges(edges_raw: DataFrame) -> DataFrame:
     Negation rows are deduped exactly (same invalid_at ts collapses).
     """
     is_neg = F.col("valid_at").isNull() & F.col("invalid_at").isNotNull()
-    has_attrs = "attributes" in edges_raw.columns
-    attrs = (F.col("attributes") if has_attrs
+    attrs = (F.col("attributes") if "attributes" in edges_raw.columns
              else F.create_map().cast("map<string,string>"))
-    df = (edges_raw.withColumn("_neg", is_neg)
-          .withColumn("_attrs", attrs))
+    # Negation rows with distinct timestamps stay distinct — merging them to
+    # a min would lose later "no longer ..." statements; only exact repeats
+    # collapse. Positive rows merge per (group, src, pred, dst); an
+    # EXPLICIT invalid_at on a positive row ("... until <date>") is kept
+    # aside for the merge (earliest explicit date wins) rather than used
+    # as a grouping key. One select builds every helper column.
+    df = edges_raw.select(
+        *[c for c in edges_raw.columns if c != "invalid_at"],
+        F.when(is_neg, F.col("invalid_at")).alias("invalid_at"),
+        F.when(~is_neg, F.col("invalid_at")).alias("_exp_invalid"),
+        is_neg.alias("_neg"), attrs.alias("_attrs"))
     # ONE explicit shuffle keyed by (group_id, source_node_uuid): hash
     # partitioning on a subset of every downstream clustering key means
-    # the dedupe groupBy, both versioning windows (w_func on
-    # (group,src,name), w_sent on (group,src,dst)), and the negation
-    # equi-join all reuse this partitioning — sorts only, no further
-    # exchanges of the edge table through the whole dedupe+versioning
-    # stage. At 10^12-turn scale that removes 3 full-table shuffles.
+    # the dedupe groupBy and all three versioning windows (w_func on
+    # (group,src,name), w_sent on (group,src,dst), w_neg on
+    # (group,src,name,dst)) reuse this partitioning — sorts only, no
+    # further exchanges of the edge table through the whole
+    # dedupe+versioning stage.
     df = df.repartition("group_id", "source_node_uuid")
     # Flat ordering struct: comparison short-circuits at the unique uuid,
     # so the payload fields (fact/subj/obj/attrs) ride along without ever
@@ -74,31 +84,18 @@ def dedupe_edges(edges_raw: DataFrame) -> DataFrame:
         F.col("fact").alias("fact"),
         F.col("subj").alias("subj"),
         F.col("obj").alias("obj"))
-    # Negation rows with distinct timestamps stay distinct — merging them to
-    # a min would lose later "no longer ..." statements; only exact repeats
-    # collapse. Positive rows merge per (group, src, pred, dst); an
-    # EXPLICIT invalid_at on a positive row ("... until <date>") is kept
-    # aside for the merge (earliest explicit date wins) rather than used
-    # as a grouping key.
     grp = ["group_id", "source_node_uuid", "pred", "target_node_uuid",
            "_neg", "invalid_at"]
-    merged = (
-        df.withColumn("_exp_invalid",
-                      F.when(~is_neg, F.col("invalid_at")))
-        .withColumn("invalid_at",
-                    F.when(is_neg, F.col("invalid_at")).otherwise(F.lit(None)))
-        .groupBy(*grp)
-        .agg(
-            F.min(first_struct).alias("first"),
-            # maps are not orderable, so attrs can't ride in the struct —
-            # min_by picks the same first-row's map
-            F.min_by("_attrs", first_struct).alias("_first_attrs"),
-            F.min("valid_at").alias("valid_at"),
-            F.min("_exp_invalid").alias("_exp_invalid"),
-            F.min("created_at").alias("created_at"),
-            F.array_sort(F.array_distinct(
-                F.collect_list("episode_uuid"))).alias("episodes"),
-        )
+    merged = df.groupBy(*grp).agg(
+        F.min(first_struct).alias("first"),
+        # maps are not orderable, so attrs can't ride in the struct —
+        # min_by picks the same first-row's map
+        F.min_by("_attrs", first_struct).alias("_first_attrs"),
+        F.min("valid_at").alias("valid_at"),
+        F.min("_exp_invalid").alias("_exp_invalid"),
+        F.min("created_at").alias("created_at"),
+        F.array_sort(F.array_distinct(
+            F.collect_list("episode_uuid"))).alias("episodes"),
     )
     return merged.select(
         F.col("first.uuid").alias("uuid"),
@@ -128,70 +125,50 @@ def apply_versioning(edges: DataFrame, run_ts: datetime,
     a custom functional pred gets the same supersede-on-next-fact T1a
     semantics as the builtins.
 
-    The input feeds three branches (pos, neg, pos_keys) and is not
-    persisted: each branch re-runs the dedupe merge over the build's
-    persisted kernel output, with its own filter pushed below the
-    shuffle, which costs less than a materialization job per build.
+    One stream, one exchange: negation rows ride through all three
+    windows with the facts, over the input's (group_id,
+    source_node_uuid) partitioning, and keep their own invalid_at.
     """
     functional = (FUNCTIONAL if ontology is None
                   else sorted(ontology.functional_preds))
     sentiment = (SENTIMENT if ontology is None
                  else sorted(ontology.sentiment_preds))
-    pos = edges.where(~F.col("_neg"))
-    neg = edges.where(F.col("_neg"))
+    by_valid = (F.col("valid_at").asc_nulls_last(), F.col("uuid"))
 
     # T1a — functional predicates: next fact same (src, pred) supersedes.
+    # Negation rows have a NULL valid_at, so they sort after every dated
+    # fact: a lead that reaches one reads NULL, as if there were no next.
     w_func = (Window.partitionBy("group_id", "source_node_uuid", "name")
-              .orderBy(F.col("valid_at").asc_nulls_last(), F.col("uuid")))
-    cand_func = F.when(
-        F.col("name").isin(functional),
-        F.lead("valid_at").over(w_func)).otherwise(F.lit(None))
+              .orderBy(*by_valid))
+    cand_func = F.when(F.col("name").isin(functional),
+                       F.lead("valid_at").over(w_func))
 
     # T1b — sentiment contradiction per (src, dst): opposite pred later.
     w_sent = (Window.partitionBy("group_id", "source_node_uuid",
                                  "target_node_uuid")
-              .orderBy(F.col("valid_at").asc_nulls_last(), F.col("uuid")))
+              .orderBy(*by_valid))
     lead_pred = F.lead("name").over(w_sent)
-    lead_valid = F.lead("valid_at").over(w_sent)
     cand_sent = F.when(
         F.col("name").isin(sentiment) & lead_pred.isin(sentiment)
         & (lead_pred != F.col("name")),
-        lead_valid).otherwise(F.lit(None))
+        F.lead("valid_at").over(w_sent))
 
-    pos = (pos
-           .withColumn("_cand_func", cand_func)
-           .withColumn("_cand_sent", cand_sent))
+    # T1c — explicit negations close the matching open edge: the earliest
+    # negation strictly after valid_at. Rows sort by their time (valid_at,
+    # or a negation's invalid_at), negations first on a tie → the frame
+    # after a fact holds exactly the negations strictly after it.
+    w_neg = (Window.partitionBy("group_id", "source_node_uuid", "name",
+                                "target_node_uuid")
+             .orderBy(F.coalesce("valid_at", "invalid_at").asc_nulls_last(),
+                      F.col("_neg").desc(), F.col("uuid"))
+             .rowsBetween(1, Window.unboundedFollowing))
+    cand_neg = F.min(F.when(F.col("_neg"), F.col("invalid_at"))).over(w_neg)
 
-    # T1c — explicit negations close the matching open edge (earliest
-    # negation strictly after valid_at), computed per edge uuid then
-    # joined back (avoids grouping on the full row).
-    neg_keyed = (neg.select("group_id",
-                            F.col("source_node_uuid").alias("_s"),
-                            F.col("name").alias("_p"),
-                            F.col("target_node_uuid").alias("_t"),
-                            F.col("invalid_at").alias("_neg_at")))
-    pos_keys = pos.select("uuid", "group_id", "source_node_uuid", "name",
-                          "target_node_uuid", "valid_at")
-    neg_min = (pos_keys.join(
-        neg_keyed,
-        (pos_keys.group_id == neg_keyed.group_id)
-        & (pos_keys.source_node_uuid == neg_keyed._s)
-        & (pos_keys.name == neg_keyed._p)
-        & (pos_keys.target_node_uuid == neg_keyed._t)
-        & (neg_keyed._neg_at > pos_keys.valid_at))
-        .groupBy(pos_keys.uuid)
-        .agg(F.min("_neg_at").alias("_cand_neg")))
-
-    resolved = (pos.join(neg_min, "uuid", "left")
-                .withColumn("invalid_at",
-                            F.least("invalid_at", "_cand_func",
-                                    "_cand_sent", "_cand_neg"))
-                .drop("_cand_func", "_cand_sent", "_cand_neg"))
-
-    out = resolved.unionByName(neg)
+    invalid_at = F.when(F.col("_neg"), F.col("invalid_at")).otherwise(
+        F.least("invalid_at", cand_func, cand_sent, cand_neg))
+    out = edges.select(*[invalid_at.alias(c) if c == "invalid_at" else c
+                         for c in edges.columns if c != "_neg"])
     # T2 — anything holding an invalid_at is expired as of processing time.
-    return (out
-            .withColumn("expired_at",
-                        F.when(F.col("invalid_at").isNotNull(),
-                               F.lit(run_ts).cast("timestamp")))
-            .drop("_neg"))
+    return out.withColumn("expired_at",
+                          F.when(F.col("invalid_at").isNotNull(),
+                                 F.lit(run_ts).cast("timestamp")))

@@ -49,6 +49,13 @@ class GraphTables:
     edges: DataFrame
     episodic_edges: DataFrame
     uuid_map: DataFrame
+    kernel: DataFrame | None = None   # the persisted kernel output
+
+    def release(self) -> None:
+        """Unpersist the kernel output. Call once every table that will
+        be read again is materialized: lazy tables recompute from it."""
+        if self.kernel is not None:
+            self.kernel.unpersist()
 
 
 def entity_summaries(entities: DataFrame, edges: DataFrame) -> DataFrame:
@@ -189,4 +196,4 @@ def build_graph(spark: SparkSession, transcripts: DataFrame,
         store.flush_lineage()
     return GraphTables(episodes=episodes, entities=entities_final,
                        edges=edges, episodic_edges=episodic_edges,
-                       uuid_map=uuid_map)
+                       uuid_map=uuid_map, kernel=combined)

@@ -17,9 +17,11 @@ This module is the missing half of that story, in-repo and tested:
   the layer tables as parquet (the point-lookup store's load format).
 * :class:`ServedGraph` — loads one graph's artifacts into memory
   (inverted token index, L2 row norms + float64 embedding matrix,
-  symmetric adjacency) and answers the SAME composite ``search()`` —
-  same methods, rerankers, presets, filters, tie-breaks — in
-  milliseconds.
+  group → row-index map, symmetric adjacency) and answers the SAME
+  composite ``search()`` — same methods, rerankers, presets, filters,
+  tie-breaks — in milliseconds. Ranking runs on numpy ``(uuid, score)``
+  arrays ordered by :func:`_top_k`; pandas is touched once per layer per
+  query, for the positional take of the hydrated rows.
 
 Equivalence is the contract, not an aspiration: ``tests/test_serving.py``
 replays every composite preset through both engines and asserts
@@ -41,6 +43,7 @@ search/search_filters.py:40-184 (filter compiler).
 from __future__ import annotations
 
 import os
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
@@ -51,12 +54,7 @@ from graphiti_spark.operators.composite_search import (
     _LAYER_COLS,
     CompositeSearchConfig,
 )
-from graphiti_spark.operators.search import (
-    DEFAULT_SEARCH_LIMIT,
-    MAX_SEARCH_DEPTH,
-    SearchFilters,
-    _mmr_greedy,
-)
+from graphiti_spark.operators.search import SearchFilters, _mmr_greedy
 
 _ARTIFACTS = ("edges", "nodes", "episodes", "communities",
               "episodic_edges")
@@ -72,24 +70,39 @@ def _query_tokens(query: str) -> list[str]:
             .split() if t]
 
 
-def _sorted_scores(uuids, scores) -> pd.DataFrame:
-    """(score DESC, uuid ASC) — the ordering every Spark search plan
-    emits (hash-stable tie-break)."""
-    df = pd.DataFrame({"uuid": uuids, "score": scores})
-    return df.sort_values(["score", "uuid"], ascending=[False, True],
-                          ignore_index=True)
+_EMPTY = (np.array([], dtype=object), np.array([], dtype=np.float64))
+_NO_POSTINGS = (np.array([], dtype=np.int64), _EMPTY[1])
+
+
+def _top_k(uuids, scores, k: int | None = None):
+    """``(uuid, score)`` arrays of the top ``k`` rows (all rows when ``k``
+    is None) in (score DESC, uuid ASC) order — the ordering every Spark
+    search plan emits (hash-stable tie-break). Exact under ties:
+    ``argpartition`` bounds the candidates at the k-th score, every row
+    tied with it stays in, and ``lexsort`` settles the boundary by uuid."""
+    uuids = np.asarray(uuids, dtype=object)
+    scores = np.asarray(scores, dtype=np.float64)
+    if k is not None and k < len(scores):
+        if k <= 0:
+            return _EMPTY
+        kth = scores[np.argpartition(-scores, k - 1)[k - 1]]
+        keep = scores >= kth
+        uuids, scores = uuids[keep], scores[keep]
+    order = np.lexsort((uuids, -scores))[:k]
+    return uuids[order], scores[order]
 
 
 class _Layer:
     """One layer table prepared for point lookups: positional rows, an
     inverted token index (token → (row idx array, tf array)), doc
-    lengths, and the float64 embedding matrix + norms."""
+    lengths, the float64 embedding matrix + norms, and — built on the
+    first scoped query — a group_id → row-index map. Methods return
+    ``(uuid, score)`` arrays in :func:`_top_k` order."""
 
     def __init__(self, pdf: pd.DataFrame, text_col: str,
                  emb_col: str | None):
         self.rows = pdf.reset_index(drop=True)
-        self.uuid = self.rows["uuid"].to_numpy()
-        self.text_col = text_col
+        self.uuid = self.rows["uuid"].to_numpy(dtype=object)
         texts = self.rows[text_col] if text_col in self.rows else \
             pd.Series([""] * len(self.rows))
         self.toks = [tokenize(t if isinstance(t, str) else "")
@@ -98,10 +111,7 @@ class _Layer:
         self.dl = np.array([len(t) for t in self.toks], dtype=np.float64)
         index: dict[str, list[tuple[int, int]]] = {}
         for i, ts in enumerate(self.toks):
-            tf: dict[str, int] = {}
-            for t in ts:
-                tf[t] = tf.get(t, 0) + 1
-            for t, n in tf.items():
+            for t, n in Counter(ts).items():
                 index.setdefault(t, []).append((i, n))
         self.index = {
             t: (np.array([i for i, _ in post], dtype=np.int64),
@@ -120,45 +130,50 @@ class _Layer:
             # rows with zero norm score 0
             self.norm = np.sqrt(np.einsum("ij,ij->i", self.emb, self.emb))
         self._uuid_to_idx = {u: i for i, u in enumerate(self.uuid)}
+        self._group_rows: dict | None = None
+
+    def scope(self, group_ids) -> np.ndarray:
+        """Row mask of ``group_ids`` (the ``isin`` of compile_filters)."""
+        if self._group_rows is None:
+            self._group_rows = self.rows.groupby("group_id",
+                                                 sort=False).indices
+        mask = np.zeros(len(self.rows), dtype=bool)
+        for g in group_ids:
+            mask[self._group_rows.get(g, [])] = True
+        return mask
 
     # -- methods ----------------------------------------------------------
 
     def bm25(self, mask: np.ndarray | None, query: str, limit: int,
-             k1: float = 1.2, b: float = 0.75) -> pd.DataFrame:
+             k1: float = 1.2, b: float = 0.75):
         """Twin of ``bm25_lite_search``: full BM25, idf from the scoped
-        corpus itself, (score DESC, uuid) top-``limit``."""
+        corpus itself, (score DESC, uuid) top-``limit``. Per-term weights
+        add up in query-term order, as Spark's sum does."""
         uniq = list(dict.fromkeys(_query_tokens(query)))
         if not uniq:
-            return pd.DataFrame({"uuid": [], "score": []})
-        if mask is None:
-            n_docs = float(len(self.rows))
-            avgdl = float(self.dl.mean()) if len(self.dl) else 1.0
-        else:
-            n_docs = float(mask.sum())
-            avgdl = float(self.dl[mask].mean()) if mask.any() else 1.0
-        scores: dict[int, float] = {}
+            return _EMPTY
+        dl = self.dl if mask is None else self.dl[mask]
+        n_docs, avgdl = float(len(dl)), float(dl.mean()) if len(dl) else 1.0
+        rows, weights = [], []
         for t in uniq:
-            post = self.index.get(t)
-            if post is None:
-                continue
-            idx, tf = post
+            idx, tf = self.index.get(t, _NO_POSTINGS)
             if mask is not None:
                 keep = mask[idx]
                 idx, tf = idx[keep], tf[keep]
-            if len(idx) == 0:
-                continue
             df_t = float(len(idx))
             idf = np.log((n_docs - df_t + 0.5) / (df_t + 0.5) + 1.0)
             norm = (1.0 - b) + b * self.dl[idx] / max(avgdl, 1e-9)
-            w = idf * (tf * (k1 + 1.0)) / (tf + k1 * norm)
-            for i, wi in zip(idx, w):
-                scores[int(i)] = scores.get(int(i), 0.0) + float(wi)
-        hits = [(self.uuid[i], s) for i, s in scores.items() if s > 0]
-        out = _sorted_scores([u for u, _ in hits], [s for _, s in hits])
-        return out.head(limit).reset_index(drop=True)
+            rows.append(idx)
+            weights.append(idf * (tf * (k1 + 1.0)) / (tf + k1 * norm))
+        # bincount adds the term-ordered postings one by one into a zeroed
+        # bin: the same float additions, in the same order, as a dict loop
+        sums = np.bincount(np.concatenate(rows),
+                           weights=np.concatenate(weights))
+        hit = np.flatnonzero(sums > 0)
+        return _top_k(self.uuid[hit], sums[hit], limit)
 
     def cosine(self, mask: np.ndarray | None, query_vec, min_score: float,
-               limit: int) -> pd.DataFrame:
+               limit: int):
         """Twin of ``similarity_search``: cosine > min_score (strict),
         (score DESC, uuid) top-``limit``; zero-norm rows score 0."""
         q = np.asarray(query_vec, dtype=np.float64)
@@ -166,7 +181,7 @@ class _Layer:
         if self.emb.shape[0] == 0:
             # empty layer: the (0, 0) placeholder matrix cannot matmul a
             # dim-d query, and there is nothing to score anyway
-            return pd.DataFrame({"uuid": [], "score": []})
+            return _EMPTY
         if mask is None:
             # unscoped hot path: matmul against the stored matrix
             # directly — fancy-indexing with arange would COPY the whole
@@ -176,14 +191,13 @@ class _Layer:
         else:
             idx = np.flatnonzero(mask)
             if len(idx) == 0:
-                return pd.DataFrame({"uuid": [], "score": []})
+                return _EMPTY
             dots = self.emb[idx] @ q
             norms, uuids = self.norm[idx], self.uuid[idx]
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = np.where(norms > 0, dots / (norms * qn), 0.0)
         keep = cos > min_score
-        out = _sorted_scores(uuids[keep], cos[keep])
-        return out.head(limit).reset_index(drop=True)
+        return _top_k(uuids[keep], cos[keep], limit)
 
 
 @dataclass
@@ -222,52 +236,47 @@ class ServedGraph:
     @classmethod
     def from_spark(cls, edges=None, nodes=None, episodes=None,
                    communities=None, episodic_edges=None) -> "ServedGraph":
-        def pdf(df):
-            return None if df is None else df.toPandas()
-        return cls(pdf(edges), pdf(nodes), pdf(episodes), pdf(communities),
-                   pdf(episodic_edges))
+        return cls(*(None if df is None else df.toPandas() for df in
+                     (edges, nodes, episodes, communities, episodic_edges)))
 
     @classmethod
     def load(cls, artifacts_dir: str) -> "ServedGraph":
-        frames = {}
-        for name in _ARTIFACTS:
-            path = os.path.join(artifacts_dir, name)
-            frames[name] = pd.read_parquet(path) if os.path.isdir(path) \
-                else None
-        return cls(frames["edges"], frames["nodes"], frames["episodes"],
-                   frames["communities"], frames["episodic_edges"])
+        # _ARTIFACTS lists the tables in constructor order
+        paths = [os.path.join(artifacts_dir, name) for name in _ARTIFACTS]
+        return cls(*(pd.read_parquet(p) if os.path.isdir(p) else None
+                     for p in paths))
 
     def _layer(self, kind: str) -> _Layer | None:
         if kind not in self._layers:
             pdf = self._tables[kind]
-            text_col, emb_col = _LAYER_COLS[kind]
             self._layers[kind] = None if pdf is None else \
-                _Layer(pdf, text_col, emb_col)
+                _Layer(pdf, *_LAYER_COLS[kind])
         return self._layers[kind]
 
     # -- graph-method state (built lazily, cached for the unscoped case) ---
 
     def _adjacency(self, group_ids: list[str] | None):
-        edges = self._tables["edge"]
-        if edges is None:
+        layer = self._layer("edge")
+        if layer is None:
             return {}
         if group_ids is None and self._adj is not None:
             return self._adj
-        pdf = edges if group_ids is None else \
-            edges[edges["group_id"].isin(group_ids)]
+        rows = layer.rows
+        pos = (np.arange(len(rows)) if group_ids is None
+               else np.flatnonzero(layer.scope(group_ids)))
         adj: dict = {}
-        for s, t, u in zip(pdf["source_node_uuid"],
-                           pdf["target_node_uuid"], pdf["uuid"]):
+        for s, t, u in zip(rows["source_node_uuid"].to_numpy()[pos],
+                           rows["target_node_uuid"].to_numpy()[pos],
+                           layer.uuid[pos]):
             adj.setdefault(s, []).append((t, u))
             adj.setdefault(t, []).append((s, u))
         if group_ids is None:
             self._adj = adj
         return adj
 
-    def _bfs(self, origin_uuids, depth: int,
-             group_ids) -> pd.DataFrame:
+    def _bfs(self, origin_uuids, depth: int, group_ids):
         """Twin of ``bfs_search``: edge uuids within ``depth`` hops of the
-        origins (symmetric), min hop per edge."""
+        origins (symmetric), score 1/min hop per edge."""
         adj = self._adjacency(group_ids)
         hops: dict = {}
         frontier = set(origin_uuids)
@@ -283,8 +292,7 @@ class ServedGraph:
             seen |= frontier
             if not frontier:
                 break
-        return pd.DataFrame({"uuid": list(hops.keys()),
-                             "score": [1.0 / h for h in hops.values()]})
+        return _top_k(list(hops), [1.0 / h for h in hops.values()])
 
     def _mentions(self) -> dict:
         """Twin of ``episode_mentions_reranker``'s count: episodic-edge
@@ -305,9 +313,7 @@ class ServedGraph:
               ) -> np.ndarray | None:
         layer = self._layer(kind)
         rows = layer.rows
-        mask = None
-        if group_ids is not None:
-            mask = rows["group_id"].isin(group_ids).to_numpy()
+        mask = None if group_ids is None else layer.scope(group_ids)
         if filters is None:
             return mask
         cond = np.ones(len(rows), dtype=bool)
@@ -359,17 +365,11 @@ class ServedGraph:
         if not (query or "").strip():
             return ServedResults()
         group_ids = [g for g in (group_ids or []) if g] or None
-        out = {}
-        for kind, attr, layer_cfg in [
-                ("edge", "edges", config.edge_config),
-                ("node", "nodes", config.node_config),
-                ("episode", "episodes", config.episode_config),
-                ("community", "communities", config.community_config)]:
-            out[attr] = self._one_layer(
-                kind, layer_cfg, query, query_vec, config.limit,
-                config.reranker_min_score, group_ids, filters,
-                center_node_uuid, bfs_origin_node_uuids)
-        return ServedResults(**out)
+        return ServedResults(*(self._one_layer(
+            kind, getattr(config, f"{kind}_config"), query, query_vec,
+            config.limit, config.reranker_min_score, group_ids, filters,
+            center_node_uuid, bfs_origin_node_uuids)
+            for kind in ("edge", "node", "episode", "community")))
 
     def _one_layer(self, kind, layer_cfg, query, query_vec, limit,
                    reranker_min_score, group_ids, filters, center_uuid,
@@ -386,7 +386,7 @@ class ServedGraph:
         if not methods:
             return None
         mask = self._mask(kind, group_ids, filters)
-        results: list[pd.DataFrame] = []
+        results = []
         if "bm25" in methods:
             results.append(layer.bm25(mask, query, 2 * limit))
         if "cosine" in methods:
@@ -396,67 +396,66 @@ class ServedGraph:
                 and origin_uuids:
             results.append(self._bfs(origin_uuids,
                                      layer_cfg.bfs_max_depth, group_ids))
-        fused = self._rerank(layer, reranker, results, query, query_vec,
-                             layer_cfg.mmr_lambda, limit, center_uuid,
-                             group_ids)
+        uuids, scores = self._rerank(layer, reranker, results, query,
+                                     query_vec, layer_cfg.mmr_lambda, limit,
+                                     center_uuid, group_ids)
         if reranker_min_score:
-            fused = fused[fused["score"] >= reranker_min_score]
-        fused = fused.head(limit)
+            keep = scores >= reranker_min_score
+            uuids, scores = uuids[keep], scores[keep]
         # hydrate: positional take of the ≤limit fused rows (uuids not in
         # the layer table — e.g. bfs edge uuids fused into a node layer —
-        # drop, exactly like the Spark broadcast-join hydration; a full
-        # merge would hash the whole layer table per query)
-        present = fused["uuid"].map(layer._uuid_to_idx).notna()
-        fused = fused[present]
-        pos = [layer._uuid_to_idx[u] for u in fused["uuid"]]
-        hyd = layer.rows.iloc[pos].reset_index(drop=True)
-        hyd["score"] = fused["score"].to_numpy()
-        return hyd.sort_values(["score", "uuid"],
-                               ascending=[False, True],
-                               ignore_index=True)
+        # drop after taking their slots, exactly like the Spark
+        # broadcast-join hydration; a full merge would hash the whole
+        # layer table per query)
+        uuids, scores = uuids[:limit], scores[:limit]
+        present = [u in layer._uuid_to_idx for u in uuids]
+        uuids, scores = _top_k(uuids[present], scores[present])
+        hyd = layer.rows.take(np.array(
+            [layer._uuid_to_idx[u] for u in uuids], dtype=np.intp))
+        hyd.index = pd.RangeIndex(len(hyd))
+        hyd["score"] = scores
+        return hyd
 
     def _rerank(self, layer, reranker, results, query, query_vec,
-                mmr_lambda, limit, center_uuid, group_ids) -> pd.DataFrame:
+                mmr_lambda, limit, center_uuid, group_ids):
+        """Fused ``(uuid, score)`` arrays: the top ``limit`` in
+        :func:`_top_k` order, or MMR's selection order."""
+        cand, inv = np.unique(np.concatenate(
+            [_EMPTY[0]] + [u for u, _ in results]), return_inverse=True)
         if reranker == "rrf":
-            parts: dict = {}
-            for res in results:
-                ranked = res.sort_values(["score", "uuid"],
-                                         ascending=[False, True],
-                                         ignore_index=True)
-                for rank, u in enumerate(ranked["uuid"]):
-                    parts[u] = parts.get(u, 0.0) + 1.0 / (rank + 1)
-            return _sorted_scores(list(parts.keys()), list(parts.values()))
-        cand = list(dict.fromkeys(
-            u for res in results for u in res["uuid"]))
+            # each method's uuids come in rank order; bincount sums the
+            # 1/rank parts per uuid in method order, as a dict loop would
+            ranks = [1.0 / np.arange(1, len(u) + 1) for u, _ in results]
+            return _top_k(cand, np.bincount(
+                inv, weights=np.concatenate([_EMPTY[1]] + ranks),
+                minlength=len(cand)), limit)
         if reranker == "mmr":
             # inner join with the layer table, sorted by uuid — the same
             # deterministic tie-break order as mmr_rerank
-            present = sorted(u for u in cand if u in layer._uuid_to_idx)
-            if not present:
-                return pd.DataFrame({"uuid": [], "score": []})
+            present = cand[[u in layer._uuid_to_idx for u in cand]]
+            if not len(present):
+                return _EMPTY
             idx = [layer._uuid_to_idx[u] for u in present]
             sel, scores = _mmr_greedy(layer.emb[idx], query_vec,
                                       mmr_lambda, limit)
-            return pd.DataFrame({"uuid": [present[i] for i in sel],
-                                 "score": scores})
+            return present[sel], np.asarray(scores, dtype=np.float64)
         if reranker == "episode_mentions":
             counts = self._mentions()
-            return _sorted_scores(cand,
-                                  [counts.get(u, 0.0) for u in cand])
+            return _top_k(cand, [counts.get(u, 0.0) for u in cand], limit)
         if reranker == "node_distance":
             adj = self._adjacency(group_ids)
             neigh = {dst for dst, _eu in adj.get(center_uuid, ())}
-            return _sorted_scores(
-                cand, [10.0 if u == center_uuid
-                       else (1.0 if u in neigh else 0.0) for u in cand])
+            return _top_k(cand, [10.0 if u == center_uuid
+                                 else (1.0 if u in neigh else 0.0)
+                                 for u in cand], limit)
         if reranker == "cross_encoder":
             q_set = set(_query_tokens(query))
             if not q_set:
-                return pd.DataFrame({"uuid": [], "score": []})
+                return _EMPTY
             present = [u for u in cand if u in layer._uuid_to_idx]
             scores = [len(layer.tok_sets[layer._uuid_to_idx[u]] & q_set)
                       / float(len(q_set)) for u in present]
-            return _sorted_scores(present, scores)
+            return _top_k(present, scores, limit)
         raise ValueError(f"unknown reranker {reranker}")
 
 

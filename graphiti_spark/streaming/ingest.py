@@ -97,11 +97,15 @@ class StreamingGraphWriter:
                    ("edges", edges, "group_id")]
         materialized = [(name, df.localCheckpoint(eager=True), pcol)
                         for name, df, pcol in outputs]
+        g.release()
         for name, df, pcol in materialized:
             (df.write.mode("overwrite")
                .option("partitionOverwriteMode", "dynamic")
                .partitionBy(pcol)
                .parquet(os.path.join(self.out_root, name)))
+            # written: drop the checkpoint's blocks (the LogicalRDD under
+            # a localCheckpoint), which are never read again
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def run_stream(spark: SparkSession, in_path: str, out_root: str,

@@ -341,3 +341,16 @@ def test_aware_times_are_converted_to_utc(spark):
     assert g.transcripts.head()["ts"] == dt.datetime(2024, 5, 1, 10)
     assert g.edges.where("name = 'FOUNDED'").head()["valid_at"] == \
         dt.datetime(2024, 3, 1, 10)
+
+
+def test_writes_release_the_build_cache(spark):
+    """Each write unpersists its build's kernel output once the handle's
+    tables are checkpointed: after several writes the cache manager holds
+    no plan, and the tables still read."""
+    spark.catalog.clearCache()
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    for i in range(3):
+        g.add_episode("conv1", f"Carol Ng works at Initech{i} Corp.")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert g.transcripts.count() == len(ROWS) + 3
+    assert g.edges.where("fact LIKE '%Initech2%'").count() == 1

@@ -152,18 +152,19 @@ def test_entities_independent_of_input_order_and_partitioning(spark,
 
 
 def test_storeless_build_job_count_is_fixed(spark, corpus_dir, job_count):
-    """A storeless build forced through ``edges.count()`` runs at most 8
+    """A storeless build forced through ``edges.count()`` runs at most 5
     Spark jobs, and the same number at two corpus sizes: context,
-    extraction and the union-find run in one group-local pass. The
-    cache is cleared first, so no earlier build's cached kernel output
-    of the same plan serves this one."""
+    extraction and the union-find run in one group-local pass, and edge
+    dedup and versioning in one stream over one exchange. The cache is
+    cleared first, so no earlier build's cached kernel output of the
+    same plan serves this one."""
     spark.catalog.clearCache()
     tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
     counts = [job_count(f"build-{name}",
                         lambda: build_graph(spark, df).edges.count())
               for name, df in (("small", tr.where(F.col("turn_idx") < 4)),
                                ("full", tr))]
-    assert counts[0] == counts[1] and 0 < counts[0] <= 8, counts
+    assert counts[0] == counts[1] and 0 < counts[0] <= 5, counts
 
 
 CUSTOM_ONTOLOGY = Ontology(

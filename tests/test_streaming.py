@@ -95,3 +95,23 @@ def test_numeric_looking_conv_id_keeps_earlier_turns(spark, tmp_path):
     assert ({r["uuid"] for r in got_ents.collect()}
             == {r["uuid"] for r in full.entities.collect()})
     assert spark.read.parquet(os.path.join(out, "transcripts")).count() == 3
+
+
+def test_micro_batches_release_cached_state(spark, tmp_path):
+    """After several micro-batches no build plan stays cached and none of
+    the writer's checkpoint blocks stays persisted."""
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    first_new_rdd = jsc.sc().newRddId()
+    writer = StreamingGraphWriter(str(tmp_path / "out"), RUN_TS)
+    for i in range(3):
+        writer(_turns(spark, [("c1", i, f"Alice works at Acme{i} Corp.", i),
+                              (f"c{i + 2}", 0, "Bob lives in Paris.", i)]), i)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    leaked = [int(k) for k in jsc.getPersistentRDDs().keySet()
+              if int(k) > first_new_rdd]
+    assert leaked == []
+    got = spark.read.parquet(str(tmp_path / "out" / "edges"))
+    assert got.where("group_id = 'c1'").count() == 3
