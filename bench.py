@@ -40,7 +40,7 @@ HEADLINE = [
     "dedup_minhash", "embedding_knn", "embedding_centroid", "token_count",
     "quality_filter", "lang_id", "lang_id_ngram", "cross_encoder_rerank",
     "kg_extract_triples", "kg_mentions", "kg_json_episodes",
-    "kg_fact_dates", "kg_custom_ontology", "kg_relevant_nodes",
+    "kg_fact_dates", "kg_custom_ontology",
     "bm25_search", "composite_search", "doc_fingerprint",
     "simhash_buckets", "embedding_near_dup",
     # round-4 additions

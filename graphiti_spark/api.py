@@ -45,7 +45,6 @@ __all__ = ["GraphitiSpark"]
 
 _TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                       "text string, tool string, ts timestamp")
-_TURN_KEY = ["conv_id", "turn_idx"]
 
 
 def _join_groups(df: DataFrame | None, groups: DataFrame, how: str):
@@ -87,20 +86,10 @@ class GraphitiSpark:
         rebuild the conversations they touch. A re-supplied
         ``(conv_id, turn_idx)`` takes the NEW text. A NULL ``conv_id``
         or ``turn_idx`` raises ``ValueError``: such a turn never matches
-        the key joins, so it could be neither replaced nor rebuilt."""
-        if not transcripts.where(F.col("conv_id").isNull()
-                                 | F.col("turn_idx").isNull()).isEmpty():
-            raise ValueError("add_episode_bulk: conv_id and turn_idx "
-                             "must not be NULL")
-        all_tr = transcripts
-        if self.transcripts is not None:
-            # anti-join first: dropDuplicates over old ∪ new would keep
-            # an arbitrary shuffle winner
-            kept = self.transcripts.join(
-                transcripts.select(*_TURN_KEY).distinct(), _TURN_KEY,
-                "left_anti")
-            all_tr = kept.unionByName(transcripts.dropDuplicates(_TURN_KEY))
-        return self._rebuild(all_tr, transcripts.select("conv_id").distinct())
+        the key joins, so it could be neither replaced nor rebuilt
+        (``maintenance.merge_turns``, which the streaming writer shares)."""
+        return self._rebuild(MT.merge_turns(self.transcripts, transcripts),
+                             transcripts.select("conv_id").distinct())
 
     def add_episode(self, group_id: str, body: str, role: str = "user",
                     reference_time: datetime | None = None,
@@ -160,7 +149,7 @@ class GraphitiSpark:
         if not gone:
             return self
         gone = self.spark.createDataFrame(gone, "conv_id string, turn_idx int")
-        kept = self.transcripts.join(F.broadcast(gone), _TURN_KEY,
+        kept = self.transcripts.join(F.broadcast(gone), MT.TURN_KEY,
                                      "left_anti")
         return self._rebuild(kept, gone.select("conv_id").distinct())
 

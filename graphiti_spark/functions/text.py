@@ -7,9 +7,11 @@ Deterministic replacements for the reference's external services:
     reproducible offline;
   * cosine / L2 mirror ``helpers.py:104-107`` and ``bulk_utils.py:236-241``;
   * minhash / simhash are the Python references for the document-dedup
-    queries' signatures; the pipeline's own blocking (which the
-    reference lacks: its candidate generation is O(n²) Python,
-    ``bulk_utils.py:208-244``) is ``operators/ann.signlsh_buckets``.
+    queries' signatures. The pipeline's own entity blocking (the
+    reference's candidate generation is O(n²) Python,
+    ``bulk_utils.py:208-244``) runs per conversation on name tokens in
+    ``operators/dedup.canonical_uuids``; for these hash embeddings token
+    cosine equals embedding cosine, so dedup embeds nothing.
 
 All functions are batch-oriented (lists/ndarrays in, ndarray out) so the
 pandas UDF wrappers stay Arrow-vectorized.

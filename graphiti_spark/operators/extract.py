@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 from graphiti_spark import rules
 from graphiti_spark.functions import text as tx
 from graphiti_spark.operators import dedup
-from graphiti_spark.operators.episodes import EPISODE_WINDOW_LEN
+from graphiti_spark.operators.episodes import _context
 
 _S, _TS = T.StringType(), T.TimestampType()
 # (name, type) of the kernel's output after (group_id, episode_uuid,
@@ -81,22 +81,6 @@ def _sid(*parts) -> str:
     return rules.stable_id(*(p for p in parts if p is not None))
 
 
-def _context(turns: list, contents: list, i: int) -> list[str]:
-    """Contents of the turns in ``[t - EPISODE_WINDOW_LEN, t)`` before row
-    ``i`` of one group's turn-sorted rows, oldest first: the reference's
-    ``previous_episodes`` window (``graph_data_operations.py:28``). The
-    window is by ``turn_idx`` value, so a gap in the turns shortens it."""
-    t = turns[i]
-    prev = []
-    j = i - 1
-    while (j >= 0 and t is not None and turns[j] is not None
-           and turns[j] >= t - EPISODE_WINDOW_LEN):
-        if turns[j] < t:
-            prev.append((turns[j], contents[j] or ""))
-        j -= 1
-    return [c for _, c in sorted(prev)]
-
-
 def extract_group(group_id, turns: list, episode_uuids: list,
                   contents: list, valid_ats: list, sources: list,
                   ontology=None) -> list[list]:
@@ -104,7 +88,8 @@ def extract_group(group_id, turns: list, episode_uuids: list,
     columns of :func:`kernel_schema` as lists.
 
     Each episode is extracted by :func:`rules.extract_all` with its
-    previous-turn context (:func:`_context`); the group's distinct
+    previous-turn context (:func:`episodes._context
+    <graphiti_spark.operators.episodes._context>`); the group's distinct
     mentioned entities are then canonicalized by the shared in-group
     union-find (:func:`dedup.canonical_uuids`). A triple whose canonical
     endpoints coincide is dropped (``edge_operations.py:73-74``); an

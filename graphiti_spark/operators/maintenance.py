@@ -6,6 +6,19 @@ touched-group replace that every incremental write goes through
 (:func:`replace_groups`: the reference's ``add_episode`` semantics,
 ``graphiti.py:352-551``, re-expressed as a rebuild of the groups a write
 touches — SURVEY §2.10).
+
+:func:`stored_edges_to_raw` re-slices stored edges back to raw rows so a
+group's edges can re-enter ``dedupe_edges`` + ``apply_versioning``
+together with new rows — the re-merge behind :func:`add_triplet` and
+:func:`replace_groups`. Exactness of the re-slice: a stored positive
+edge re-enters the merge with its resolved ``invalid_at`` treated as
+explicit. That is still exact, because every fresh T1 candidate (lead
+over the superset slice, negation min) is ``<=`` the previously resolved
+value — the successor that produced the old value is still in the slice
+— and ``least()`` therefore lands on the full-rebuild answer. Ordering
+ties are exact too: the stored row carries the winning raw row's
+``(t, turn_idx, uuid)`` ordering key (``versioning.dedupe_edges`` keeps
+``turn_idx``).
 """
 
 from __future__ import annotations
@@ -94,6 +107,25 @@ def clear_groups(df: DataFrame, group_ids: list[str]) -> DataFrame:
 
 # -- Q11: add_triplet --------------------------------------------------------
 
+def stored_edges_to_raw(edges: DataFrame) -> DataFrame:
+    """Inverse of the ``dedupe_edges`` merge, for re-slicing: explode the
+    ``episodes`` array back to per-episode rows carrying the winner's
+    ``(t, turn_idx, uuid)`` ordering key and payload. Resolved
+    ``invalid_at`` re-enters as explicit — exact per the module
+    docstring's least() argument."""
+    return edges.select(
+        "group_id", "source_node_uuid", "target_node_uuid",
+        F.col("name").alias("pred"),
+        "subj", "obj", "fact", "uuid", "attributes",
+        "valid_at", "invalid_at", "created_at", "turn_idx",
+        # explode_OUTER: a manual triplet (api.add_triplet) has an EMPTY
+        # episodes array — plain explode would silently drop it from the
+        # re-slice and the re-merge would delete the edge; the outer row
+        # carries a NULL episode_uuid, which collect_list skips on the
+        # way back, preserving the empty provenance exactly
+        F.explode_outer("episodes").alias("episode_uuid"))
+
+
 def utc_naive(ts: datetime) -> datetime:
     """Naive UTC wall-clock time of ``ts`` (the tables' timestamp form):
     an aware datetime is converted to UTC, not stripped of its offset."""
@@ -105,14 +137,13 @@ def utc_naive(ts: datetime) -> datetime:
 def remerge_edges(edges: DataFrame | None, raw: DataFrame, run_ts: datetime,
                   ontology=None) -> DataFrame:
     """Resolve extra ``raw`` edge rows against a group's stored ``edges``:
-    the stored rows are re-sliced to raw (``stored_edges_to_raw``) and
+    the stored rows are re-sliced to raw (:func:`stored_edges_to_raw`) and
     everything re-runs ``dedupe_edges`` + ``apply_versioning``. Exact: a
     stored edge re-enters with its resolved ``invalid_at`` as explicit,
     and every added row can only lower it (``least()``). The versioning
     stage emits embedding-less rows, so ``fact_embedding`` is re-derived
     when the stored edges carry one."""
     from graphiti_spark.operators import versioning
-    from graphiti_spark.operators.incremental import stored_edges_to_raw
 
     if edges is not None:
         raw = stored_edges_to_raw(edges).unionByName(
@@ -161,6 +192,27 @@ def add_triplet(spark, group_id: str, subj: str, pred: str, obj: str,
 
 # -- §2.10: the touched-group replace ----------------------------------------
 
+TURN_KEY = ["conv_id", "turn_idx"]
+
+
+def merge_turns(old: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """The stored transcripts after a write of ``batch``: a re-supplied
+    ``(conv_id, turn_idx)`` takes the batch's row, every other old turn
+    is kept. The old turns are anti-joined on the batch's keys first,
+    because ``dropDuplicates`` over old ∪ batch would keep an arbitrary
+    shuffle winner. A NULL ``conv_id`` or ``turn_idx`` raises
+    ``ValueError``: such a turn never matches the key joins, so it could
+    be neither replaced nor rebuilt."""
+    if not batch.where(F.col("conv_id").isNull()
+                       | F.col("turn_idx").isNull()).isEmpty():
+        raise ValueError("conv_id and turn_idx must not be NULL")
+    if old is None:
+        return batch
+    kept = old.join(batch.select(*TURN_KEY).distinct(), TURN_KEY,
+                    "left_anti")
+    return kept.unionByName(batch.dropDuplicates(TURN_KEY))
+
+
 def replace_groups(edges: DataFrame | None, entities: DataFrame | None,
                    old_edges: DataFrame | None,
                    old_entities: DataFrame | None, run_ts: datetime,
@@ -182,8 +234,6 @@ def replace_groups(edges: DataFrame | None, entities: DataFrame | None,
     groups' (edges, entities): a fresh build over their turns plus their
     manual triplets. With no old manual edges nothing is folded and the
     rebuild is returned unchanged."""
-    from graphiti_spark.operators.incremental import stored_edges_to_raw
-
     if old_edges is None:
         return edges, entities
     manual = old_edges.where(F.size(F.coalesce(

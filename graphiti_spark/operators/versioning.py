@@ -108,7 +108,7 @@ def dedupe_edges(edges_raw: DataFrame) -> DataFrame:
         "episodes", "created_at", "valid_at",
         F.coalesce("invalid_at", "_exp_invalid").alias("invalid_at"),
         # Winner row's turn_idx rides through to the stored table so a
-        # re-slice (incremental.stored_edges_to_raw) re-enters the merge
+        # re-slice (maintenance.stored_edges_to_raw) re-enters the merge
         # with the EXACT (t, turn_idx, uuid) ordering key the full
         # rebuild would use — tie-breaks included.
         F.col("first.ti").alias("turn_idx"),

@@ -112,7 +112,7 @@ def build_graph(spark: SparkSession, transcripts: DataFrame,
     # Checkpoint fingerprints are ontology-scoped (E6): the same input
     # extracted under a different rule set must never resume from the
     # other ontology's materialized stages.
-    fp = _fingerprint(v=2, run_ts=run_ts, emb=with_embeddings,
+    fp = _fingerprint(v=3, run_ts=run_ts, emb=with_embeddings,
                       onto=None if ontology is None
                       else ontology.fingerprint())
 

@@ -1278,17 +1278,17 @@ SELECT * FROM (VALUES
 
 
 def q_kg_context_coref(spark, sf_dir):
-    """Round-4d cross-episode layer: hydrate_context (predicate-pruned
-    ranged self-join — the Spark analogue of the reference's
-    previous_episodes window, graph_data_operations.py:28,84-135)
-    feeding the real distributed extraction UDF. Covers: cross-episode
+    """Round-4d cross-episode layer: the build's extraction kernel
+    (extract.extract_combined), which reads each episode's previous
+    turns from the conversation's turn-sorted rows (the reference's
+    previous_episodes window, graph_data_operations.py:28,84-135) in
+    the task that extracts. Covers: cross-episode
     subject pronoun, object-pronoun tail, first-person antecedent
     ("I ..." in a previous turn seeds that turn's speaker), VP ellipsis
     ("does too") both in-episode and cross-episode, window bound
     (a name 4 turns back is OUT of reach), and conversation isolation.
     The oracle states every expected triple closed-form."""
-    from graphiti_spark.operators.episodes import (assemble_episodes,
-                                                   hydrate_context)
+    from graphiti_spark.operators.episodes import assemble_episodes
     from graphiti_spark.operators.extract import extract_edges
     ts0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     rows = [
@@ -1311,7 +1311,7 @@ def q_kg_context_coref(spark, sf_dir):
     tr = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-    eps = hydrate_context(assemble_episodes(tr, RUN_TS))
+    eps = assemble_episodes(tr, RUN_TS)
     raw = extract_edges(eps, RUN_TS)
     return raw.select(F.col("group_id").alias("conv_id"), "turn_idx",
                       "subj", "pred", "obj")
@@ -1333,7 +1333,8 @@ SELECT * FROM (VALUES
 
 def q_kg_speech_acts(spark, sf_dir):
     """Round-4e speech-act + residual-closure layer through the REAL
-    distributed extraction UDFs: questions and irrealis leads (If/Maybe/…)
+    distributed extraction kernel (extract.extract_combined, previous
+    turns included): questions and irrealis leads (If/Maybe/…)
     mention entities but assert NOTHING (the reference's edge prompt
     extracts only "factual information", prompts/extract_edges.py:95-104),
     an unasserted VP is not ellipsis-copyable, discourse leads
@@ -1345,8 +1346,7 @@ def q_kg_speech_acts(spark, sf_dir):
     expected triple — including each valid_at — closed-form; the
     no-assert cases are proven by ABSENCE (an emitted row breaks the
     row-count and hash gates)."""
-    from graphiti_spark.operators.episodes import (assemble_episodes,
-                                                   hydrate_context)
+    from graphiti_spark.operators.episodes import assemble_episodes
     from graphiti_spark.operators.extract import extract_edges
     ts0 = datetime(2024, 3, 15, tzinfo=timezone.utc)
     rows = [
@@ -1373,7 +1373,7 @@ def q_kg_speech_acts(spark, sf_dir):
     tr = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-    eps = hydrate_context(assemble_episodes(tr, RUN_TS))
+    eps = assemble_episodes(tr, RUN_TS)
     raw = extract_edges(eps, RUN_TS)
     return raw.select(F.col("group_id").alias("conv_id"), "turn_idx",
                       "subj", "pred", "obj", "valid_at")
@@ -1585,73 +1585,6 @@ SELECT 'pconv' || CAST(p_partkey AS VARCHAR) AS conv_id,
        p_type AS obj,
        TIMESTAMP '2024-01-01 00:00:00' AS valid_at
 FROM part
-"""
-
-
-def q_kg_relevant_nodes(spark, sf_dir):
-    """J3 ``get_relevant_nodes`` as a driver query: a micro-batch of
-    numeric aliases (last token of every 10th customer name) resolves
-    against the customer-derived entity table through the REAL
-    candidate join (`operators/incremental.relevant_nodes`
-    — token-block equi-join, per-(group, token) df cap, duplicate
-    verify). The oracle replays blocking, cap, and the verify rule
-    (equality | token-subset | token-cosine ≥ 0.8) in SQL."""
-    from graphiti_spark.operators.incremental import relevant_nodes
-    c = load(spark, sf_dir, "customer")
-    norm = F.lower(F.regexp_replace("c_name", "#", " "))
-    existing = c.select(
-        F.col("c_mktsegment").alias("group_id"),
-        F.col("c_custkey").cast("string").alias("uuid"),
-        norm.alias("name_norm"))
-    batch = (c.where(F.col("c_custkey") % 10 == 0)
-             .select(F.col("c_mktsegment").alias("group_id"),
-                     F.concat(F.lit("b"), F.col("c_custkey").cast("string"))
-                      .alias("uuid"),
-                     F.element_at(F.split(norm, " "), -1).alias("name_norm")))
-    return (relevant_nodes(batch, existing)
-            .select("group_id", "uuid", "existing_uuid"))
-
-
-SQL_KG_RELEVANT_NODES = """
-WITH existing AS (
-  SELECT c_mktsegment AS group_id, CAST(c_custkey AS VARCHAR) AS uuid,
-         replace(lower(c_name), '#', ' ') AS name_norm
-  FROM customer),
-batch AS (
-  SELECT c_mktsegment AS group_id,
-         'b' || CAST(c_custkey AS VARCHAR) AS uuid,
-         list_extract(string_split(replace(lower(c_name), '#', ' '), ' '),
-                      2) AS name_norm
-  FROM customer WHERE c_custkey % 10 = 0),
-etok AS (
-  SELECT group_id, uuid AS existing_uuid, name_norm AS existing_name,
-         t.tok
-  FROM existing, UNNEST(list_distinct(string_split(name_norm, ' ')))
-       AS t(tok)),
-ecap AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY group_id, tok
-                                 ORDER BY existing_uuid) AS rn
-    FROM etok) WHERE rn <= 64),
-btok AS (
-  SELECT group_id, uuid, name_norm, t.tok
-  FROM batch, UNNEST(list_distinct(string_split(name_norm, ' ')))
-       AS t(tok)),
-cand AS (
-  SELECT DISTINCT b.group_id, b.uuid, b.name_norm,
-                  e.existing_uuid, e.existing_name
-  FROM btok b
-  JOIN ecap e ON b.group_id = e.group_id AND b.tok = e.tok)
-SELECT group_id, uuid, existing_uuid FROM (
-  SELECT *,
-         list_distinct(string_split(name_norm, ' ')) AS ta,
-         list_distinct(string_split(existing_name, ' ')) AS tb
-  FROM cand)
-WHERE name_norm = existing_name
-   OR len(list_filter(ta, x -> NOT list_contains(tb, x))) = 0
-   OR len(list_filter(tb, x -> NOT list_contains(ta, x))) = 0
-   OR len(list_intersect(ta, tb))
-      / sqrt(CAST(len(ta) AS DOUBLE) * len(tb)) >= 0.8
 """
 
 
@@ -3001,7 +2934,6 @@ QUERIES = {
     "kg_json_episodes": q_kg_json_episodes,
     "kg_fact_dates": q_kg_fact_dates,
     "kg_custom_ontology": q_kg_custom_ontology,
-    "kg_relevant_nodes": q_kg_relevant_nodes,
     "kg_communities": q_kg_communities,
     "kg_communities_ref": q_kg_communities_ref,
     "kg_entity_summaries": q_kg_entity_summaries,
@@ -3071,7 +3003,6 @@ ORACLES = {
     "kg_json_episodes": SQL_KG_JSON_EPISODES,
     "kg_fact_dates": SQL_KG_FACT_DATES,
     "kg_custom_ontology": SQL_KG_CUSTOM_ONTOLOGY,
-    "kg_relevant_nodes": SQL_KG_RELEVANT_NODES,
     "kg_communities": SQL_KG_COMMUNITIES,
     "kg_communities_ref": SQL_KG_COMMUNITIES,
     "kg_entity_summaries": SQL_KG_ENTITY_SUMMARIES,

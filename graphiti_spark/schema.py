@@ -31,7 +31,6 @@ EPISODES = T.StructType([
     T.StructField("valid_at", T.TimestampType(), True),
     T.StructField("created_at", T.TimestampType(), True),
     T.StructField("turn_idx", T.IntegerType(), False),
-    T.StructField("prev_context", T.ArrayType(T.StringType()), True),
 ])
 
 # EntityNode (nodes.py:265-269).

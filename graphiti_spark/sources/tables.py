@@ -7,11 +7,6 @@ each stage writes ``<root>/<stage>/`` + a ``_MANIFEST.json`` carrying a
 config fingerprint; on resume, a stage whose manifest matches is read back
 instead of recomputed (the reference's stage cache is its LLM response disk
 cache, ``llm_client/client.py:150-167`` — ours is the table itself).
-
-Iceberg: the north star targets Iceberg tables; the sandbox has no Iceberg
-runtime jar, so `_HAS_ICEBERG` gates a ``writeTo(...).overwritePartitions()``
-path and we degrade to ``parquet`` + ``partitionBy`` transparently
-(SURVEY.md §7 risk 5). Pipeline code never branches on this.
 """
 
 from __future__ import annotations

@@ -37,8 +37,10 @@ def stream_transcripts(spark: SparkSession, path: str,
 
 
 class StreamingGraphWriter:
-    """foreachBatch sink: per micro-batch, rebuild only the conversations
-    the batch touches, fold their manual edges back in
+    """foreachBatch sink: per micro-batch, merge the batch's turns into
+    the stored ones as ``add_episode_bulk`` does
+    (``maintenance.merge_turns``), rebuild only the conversations the
+    batch touches, fold their manual edges back in
     (``maintenance.replace_groups``, the API's write step) and replace
     ONLY those partitions via dynamic partition overwrite — the parquet
     form of Iceberg's ``overwritePartitions``. IO per batch is O(touched
@@ -67,7 +69,8 @@ class StreamingGraphWriter:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        from graphiti_spark.operators.maintenance import replace_groups
+        from graphiti_spark.operators.maintenance import (merge_turns,
+                                                          replace_groups)
         from graphiti_spark.plans.pipeline import build_graph
 
         # A micro-batch's conversation list is bounded (maxFilesPerTrigger
@@ -82,12 +85,12 @@ class StreamingGraphWriter:
             df = self._read_or_none(spark, name)
             return None if df is None else df.where(F.col(key).isin(convs))
 
-        touched = batch_df
         old_tr = old("transcripts", "conv_id")
-        if old_tr is not None:
-            touched = (old_tr.select(*batch_df.columns)
-                       .unionByName(batch_df)
-                       .dropDuplicates(["conv_id", "turn_idx"]))
+        # the API's merge: a re-supplied turn takes the batch's text, and
+        # a NULL key raises before anything is written
+        touched = merge_turns(
+            None if old_tr is None else old_tr.select(*batch_df.columns),
+            batch_df)
         g = build_graph(spark, touched, run_ts=self.run_ts)
         edges, entities = replace_groups(g.edges, g.entities, old("edges"),
                                          old("entities"), self.run_ts)

@@ -72,14 +72,11 @@ def test_hydrate_window_is_bounded(spark):
 
 
 def test_hydrate_context_inert_on_pronoun_free_corpus(spark, corpus_dir):
-    # on a pronoun-free corpus the trigger matches nothing: the kernel,
-    # which hands every episode its previous turns, must produce
-    # BIT-IDENTICAL extraction output to a context-free per-episode
-    # extraction (and the trigger itself must select zero episodes)
+    # on a pronoun-free corpus the kernel, which hands every episode its
+    # previous turns, must produce BIT-IDENTICAL extraction output to a
+    # context-free per-episode extraction
     tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
     eps = assemble_episodes(tr, TS0)
-    from graphiti_spark.operators.episodes import _coref_trigger
-    assert eps.where(_coref_trigger()).count() == 0
     a = _triples(extract_edges(eps, TS0))
     b = sorted(
         (r.group_id, r.turn_idx, t["subj"], t["pred"], t["obj"])
@@ -110,8 +107,7 @@ def test_pipeline_consumes_cross_episode_context(spark):
 
 def test_hydrate_resolves_punctuationless_tails(spark):
     # regression: consumable shapes with no terminal punctuation must
-    # still trigger hydration (the first trigger draft anchored on
-    # [.!?] and silently dropped these in the distributed path)
+    # still resolve against the previous turns in the distributed path
     rows = [
         ("c1", 0, "user", "Carol Moss lives in Oslo.", None, TS0),
         ("c1", 1, "user", "Acme Corp employs her", None, TS0),
@@ -123,3 +119,39 @@ def test_hydrate_resolves_punctuationless_tails(spark):
     got = _triples(extract_edges(eps, TS0))
     assert ("c1", 1, "Carol Moss", "WORKS_AT", "Acme Corp") in got
     assert ("c2", 1, "Dana Kim", "WORKS_AT", "Initech") in got
+
+
+def test_hydrate_context_matches_kernel_window(spark):
+    """``hydrate_context`` attaches the kernel's previous-turn window to
+    every row and keeps every other column, whatever the input order and
+    partitioning; a gap in ``turn_idx`` shortens the window."""
+    import random
+
+    from graphiti_spark.operators.episodes import _context, hydrate_context
+
+    rows = ([("g1", i, "user", f"g1 turn {i}.", None, TS0)
+             for i in (0, 1, 2, 5, 6)]
+            + [("g2", i, "bob", f"g2 turn {i}.", None, TS0)
+               for i in range(5)])
+    random.Random(3).shuffle(rows)
+    eps = assemble_episodes(spark.createDataFrame(rows, SCHEMA), TS0)
+    eps = eps.repartition(3)
+    assert eps.rdd.getNumPartitions() >= 2
+    got = hydrate_context(eps).collect()
+    assert len(got) == len(rows)
+    assert ({tuple(r[c] for c in eps.columns) for r in got}
+            == {tuple(r) for r in eps.collect()})
+    by_group: dict[str, list] = {}
+    for r in sorted(got, key=lambda r: (r.group_id, r.turn_idx)):
+        by_group.setdefault(r.group_id, []).append(r)
+    for group in by_group.values():
+        turns = [r.turn_idx for r in group]
+        contents = [r.content for r in group]
+        for i, r in enumerate(group):
+            assert r.prev_context == _context(turns, contents, i)
+    ctx = {(r.group_id, r.turn_idx): r.prev_context for r in got}
+    assert ctx[("g1", 0)] == []
+    assert ctx[("g1", 5)] == ["user: g1 turn 2."]
+    assert ctx[("g1", 6)] == ["user: g1 turn 5."]
+    assert ctx[("g2", 4)] == ["bob: g2 turn 1.", "bob: g2 turn 2.",
+                              "bob: g2 turn 3."]

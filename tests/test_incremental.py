@@ -1,13 +1,11 @@
-"""Incremental-maintenance helpers (operators/incremental): the J3
-candidate join and the stored→raw re-slice that the touched-group
-replace re-merges through."""
+"""The stored→raw re-slice (``maintenance.stored_edges_to_raw``) that
+the touched-group replace and ``add_triplet`` re-merge through."""
 
 from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from graphiti_spark.operators.incremental import (
-    relevant_nodes, stored_edges_to_raw)
+from graphiti_spark.operators.maintenance import stored_edges_to_raw
 from graphiti_spark.plans.pipeline import build_graph
 
 RUN_TS = datetime(2025, 1, 1, tzinfo=timezone.utc)
@@ -45,20 +43,6 @@ NEW = [
     ("c2", 1, "Bob Jones no longer works at Globex.", 1),
     ("c2", 2, "Dave works at Globex.", 2),          # new entity
 ]
-
-
-def test_relevant_nodes_candidates_are_verified(spark):
-    ents = spark.createDataFrame(
-        [("g1", "u1", "bob jones"), ("g1", "u2", "acme corp"),
-         ("g2", "u3", "bob jones")],
-        "group_id string, uuid string, name_norm string")
-    batch = spark.createDataFrame(
-        [("g1", "b1", "bob"), ("g1", "b2", "zeta ltd")],
-        "group_id string, uuid string, name_norm string")
-    got = {(r["uuid"], r["existing_uuid"])
-           for r in relevant_nodes(batch, ents).collect()}
-    # 'bob' ⊂ 'bob jones' same group only; 'zeta ltd' matches nothing.
-    assert got == {("b1", "u1")}
 
 
 def test_stored_edges_roundtrip_through_merge(spark):

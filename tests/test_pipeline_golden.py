@@ -198,7 +198,7 @@ def test_resume_reuses_checkpointed_stages(spark, corpus_dir, tmp_path,
 
 def _fp(ontology=None):
     from graphiti_spark.plans.pipeline import RUN_TS, _fingerprint
-    return _fingerprint(v=2, run_ts=RUN_TS, emb=False,
+    return _fingerprint(v=3, run_ts=RUN_TS, emb=False,
                         onto=None if ontology is None
                         else ontology.fingerprint())
 

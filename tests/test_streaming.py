@@ -115,3 +115,57 @@ def test_micro_batches_release_cached_state(spark, tmp_path):
     assert leaked == []
     got = spark.read.parquet(str(tmp_path / "out" / "edges"))
     assert got.where("group_id = 'c1'").count() == 3
+
+
+def test_resupplied_turn_takes_new_text(spark, tmp_path):
+    """A micro-batch that re-supplies a stored ``(conv_id, turn_idx)``
+    replaces that turn, as ``add_episode_bulk`` does: the stored
+    transcript holds the new text and the edges are the new text's."""
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    writer = StreamingGraphWriter(out, RUN_TS)
+    writer(_turns(spark, [("c1", 0, "Alice Smith works at Acme Corp.", 0),
+                          ("c1", 1, "Bob Jones lives in Paris.", 1)]), 0)
+    batch2 = _turns(spark, [("c1", 0, "Alice Smith works at Globex.", 2)])
+    writer(batch2, 1)
+
+    tr = spark.read.parquet(os.path.join(out, "transcripts"))
+    assert sorted((r["turn_idx"], r["text"]) for r in tr.collect()) == [
+        (0, "Alice Smith works at Globex."), (1, "Bob Jones lives in Paris.")]
+    full = build_graph(spark, _turns(spark, [
+        ("c1", 0, "Alice Smith works at Globex.", 2),
+        ("c1", 1, "Bob Jones lives in Paris.", 1)]), run_ts=RUN_TS)
+    cols = ("uuid", "subj", "name", "obj")
+    got = spark.read.parquet(os.path.join(out, "edges"))
+    assert ({tuple(r) for r in got.select(*cols).collect()}
+            == {tuple(r) for r in full.edges.select(*cols).collect()})
+    assert ("Alice Smith", "WORKS_AT", "Globex") in {
+        (r["subj"], r["name"], r["obj"]) for r in got.collect()}
+
+
+def test_null_turn_key_raises_without_writing(spark, tmp_path):
+    """A NULL ``conv_id`` or ``turn_idx`` raises ``ValueError``, as in
+    ``add_episode_bulk``, and leaves the stored tables as they were."""
+    import pytest
+
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    writer = StreamingGraphWriter(out, RUN_TS)
+    writer(_turns(spark, [("c1", 0, "Alice Smith works at Acme Corp.", 0)]),
+           0)
+
+    def stored():
+        def read(name, *cols):
+            df = spark.read.parquet(os.path.join(out, name))
+            return sorted(map(tuple, df.select(*cols).collect()))
+        return (read("transcripts", "conv_id", "turn_idx", "text"),
+                read("edges", "uuid"), read("entities", "uuid"))
+
+    before = stored()
+    for bad in ([(None, 0, "Bob Jones works at Globex.", 1)],
+                [("c2", None, "Carol Moss lives in Oslo.", 1)]):
+        with pytest.raises(ValueError):
+            writer(_turns(spark, bad), 1)
+    assert stored() == before
