@@ -37,21 +37,17 @@ HEADLINE = [
     "sessionize", "anti_join_orphans", "semi_join_mentions",
     "canonical_remap", "bfs_2hop", "rrf_fusion", "top_k_per_group",
     "union_dedup", "pricing_summary", "dedup_exact", "dedup_jaccard",
-    "dedup_minhash", "embedding_knn", "embedding_centroid", "token_count",
-    "quality_filter", "lang_id", "lang_id_ngram", "cross_encoder_rerank",
+    "dedup_minhash", "embedding_knn", "embedding_centroid",
+    "cross_encoder_rerank",
     "kg_extract_triples", "kg_mentions", "kg_json_episodes",
     "kg_fact_dates", "kg_custom_ontology",
-    "bm25_search", "composite_search", "doc_fingerprint",
-    "simhash_buckets", "embedding_near_dup",
+    "bm25_search", "composite_search", "embedding_near_dup",
     # round-4 additions
     "kg_anaphora", "kg_context_coref", "kg_speech_acts",
     "kg_mmr_diverse", "kg_communities_ref", "embedding_knn_ivf",
     # round-5 additions
-    "pii_scrub", "quality_repetition", "stratified_sample", "kg_pagerank",
-    "events_asof_join", "decontaminate", "domain_mixture",
-    "length_quantiles", "keyword_tfidf", "quality_logprob",
+    "kg_pagerank", "events_asof_join", "keyword_tfidf",
     "embedding_int8", "inverted_index", "graph_triangles",
-    "weighted_sample", "boilerplate_ngrams",
 ]
 
 

@@ -2,17 +2,22 @@
 construction engine with the capabilities of oncallai/graphiti.
 
 Pipeline shape (SURVEY.md §3.2, modeled on the reference's bulk path
-``graphiti_core/graphiti.py:554-831`` but re-expressed as one Spark DAG):
+``graphiti_core/graphiti.py:554-831`` but re-expressed as one Spark DAG;
+stages in ``plans/pipeline.py``):
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
-      → episode assembly          (window over (conv_id, turn_idx))
-      → mention/triple extraction (vectorized pandas UDFs, deterministic rules)
-      → entity canonicalization   (token + LSH blocking → connected components)
-      → edge dedup + temporal versioning (window dedup, T1/T2 semantics)
-      → partitioned entities/edges/episodes tables (+ lineage, checkpoints)
+      → clustered once by conv_id, sorted by turn_idx
+      → episodes                  (one per turn, a projection)
+      → group kernel              (one mapInPandas per conversation:
+                                   previous-turn context, rule extraction,
+                                   in-group union-find → canonical endpoints)
+      → entity merge, edge dedup + temporal versioning
+                                  (Spark operators, T1/T2 semantics)
+      → entities/edges/episodes/episodic_edges tables
 
-Everything is DataFrame-first; Python only runs inside Arrow-vectorized
-pandas UDFs. No per-row Python UDFs anywhere.
+Everything before versioning is local to one conversation; the kernel's
+output is the one persisted intermediate, and every table is a
+projection or aggregate of it.
 """
 
 __version__ = "0.1.0"

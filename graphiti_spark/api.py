@@ -85,9 +85,9 @@ class GraphitiSpark:
         turn rows ``(conv_id, turn_idx, role, text, tool, ts)`` and
         rebuild the conversations they touch. A re-supplied
         ``(conv_id, turn_idx)`` takes the NEW text. A NULL ``conv_id``
-        or ``turn_idx`` raises ``ValueError``: such a turn never matches
-        the key joins, so it could be neither replaced nor rebuilt
-        (``maintenance.merge_turns``, which the streaming writer shares)."""
+        or ``turn_idx``, or a key the batch repeats, raises
+        ``ValueError`` (``maintenance.merge_turns``, which the streaming
+        writer shares)."""
         return self._rebuild(MT.merge_turns(self.transcripts, transcripts),
                              transcripts.select("conv_id").distinct())
 

@@ -1,8 +1,8 @@
 """Per-document keyword extraction by smoothed TF-IDF.
 
-The classic training-data / corpus-analysis pass: tokenize, drop
-stopwords, score each (doc, term) by ``tf * (ln((N+1)/(df+1)) + 1)``
-(sklearn's smooth-idf), keep the top-k terms per document.
+The classic corpus-analysis pass: tokenize, drop stopwords, score each
+(doc, term) by ``tf * (ln((N+1)/(df+1)) + 1)`` (sklearn's smooth-idf),
+keep the top-k terms per document.
 
 Plan shape, sized for a 100 TB corpus:
 
@@ -10,11 +10,10 @@ Plan shape, sized for a 100 TB corpus:
   token occurrence and paying a corpus-sized ``groupBy(doc, term)``
   shuffle, each row sorts its own (bounded, KB-sized) token array and
   folds runs into ``(term, tf)`` structs with one JVM ``aggregate``
-  lambda — the same sorted-run-length idiom as the Gopher repetition
-  filter (queries.q_quality_repetition), a single O(n log n) pass per
-  row riding the scan, while the avoided alternative is a full shuffle
-  of every token occurrence in the corpus (see _tf_pairs_sql for the
-  lambda-CSE trap this formulation dodges).
+  lambda — a single O(n log n) pass per row riding the scan, while the
+  avoided alternative is a full shuffle of every token occurrence in
+  the corpus (see _tf_pairs_sql for the lambda-CSE trap this
+  formulation dodges).
 * The explode that follows emits one row per DISTINCT (doc, term) —
   already tf-aggregated, i.e. the same cardinality the scoring join
   needs anyway.
@@ -24,7 +23,7 @@ Plan shape, sized for a 100 TB corpus:
   bench scale and falls back to a term-keyed shuffle join when the
   vocabulary outgrows the broadcast threshold.
 * **N** (corpus size) is a 1-row aggregate broadcast onto the scored
-  rows (the bm25_search / domain_mixture pattern).
+  rows (the bm25_search pattern).
 * **top-k** is a ``row_number`` window partitioned by the (high
   cardinality, unskewed) doc id — one shuffle keyed exactly like the
   final consumer of the result.
@@ -85,43 +84,6 @@ def _tf_pairs_sql(text_col: str, min_len: int,
         f"'acc', IF(a.prev IS NULL OR a.prev <=> x, a.acc, "
         f"array_append(a.acc, {pair}))), "
         f"a -> IF(a.prev IS NULL, a.acc, array_append(a.acc, {pair})))")
-
-
-def unigram_cross_entropy(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Per-document cross-entropy under the corpus's own unigram LM —
-    the CCNet-style perplexity quality filter with the n-gram model
-    degenerated to n=1 so the "LM" is trained by one aggregation over
-    the corpus itself (no external model): a doc full of common words
-    scores low, rare-token noise scores high.
-
-    Returns ``(id_col, n_toks, xent)`` where ``xent`` is
-    ``sum(tf * -ln(cnt/total)) / n_toks`` rounded to 6 dp (absorbs ln
-    ulp and partition-order float-sum jitter, the bm25 precedent);
-    zero-token docs emit nothing.
-
-    Plan: per-doc (term, tf) pairs map-side (zero-shuffle, see
-    extract_keywords), ONE vocabulary-sized ``groupBy(term)`` for the
-    LM counts, the 1-row grand total derived from those counts (not a
-    second corpus scan), and a final doc-keyed aggregation — at 100 TB
-    the corpus is tokenized once and only dictionary- and doc-keyed
-    rows ever shuffle.
-    """
-    pairs = (df.select(id_col,
-                       F.expr(_tf_pairs_sql(text_col, 1, ())).alias("pairs"))
-             .select(id_col, F.explode("pairs").alias("p"))
-             .select(id_col, F.col("p.term").alias("term"),
-                     F.col("p.tf").alias("tf")))
-    freq = pairs.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    tot = freq.agg(F.sum("cnt").alias("total_toks"))
-    return (pairs.join(freq, "term")
-            .crossJoin(F.broadcast(tot))
-            .groupBy(id_col)
-            .agg(F.sum("tf").alias("n_toks"),
-                 F.round(F.sum(F.col("tf")
-                               * -F.log(F.col("cnt")
-                                        / F.col("total_toks")))
-                         / F.sum("tf"), 6).alias("xent")))
 
 
 def extract_keywords(df: DataFrame, text_col: str = "text",

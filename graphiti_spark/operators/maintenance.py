@@ -200,17 +200,28 @@ def merge_turns(old: DataFrame | None, batch: DataFrame) -> DataFrame:
     ``(conv_id, turn_idx)`` takes the batch's row, every other old turn
     is kept. The old turns are anti-joined on the batch's keys first,
     because ``dropDuplicates`` over old ∪ batch would keep an arbitrary
-    shuffle winner. A NULL ``conv_id`` or ``turn_idx`` raises
-    ``ValueError``: such a turn never matches the key joins, so it could
-    be neither replaced nor rebuilt."""
-    if not batch.where(F.col("conv_id").isNull()
-                       | F.col("turn_idx").isNull()).isEmpty():
-        raise ValueError("conv_id and turn_idx must not be NULL")
+    shuffle winner. Raises ``ValueError`` on a NULL ``conv_id`` or
+    ``turn_idx`` (such a turn never matches the key joins, so it could
+    be neither replaced nor rebuilt) and on a key the batch repeats
+    (which of its rows is the turn is undefined). Both checks are one
+    Spark job: over one coalesced partition the key aggregate needs no
+    exchange, which adaptive execution would run as a job of its own."""
+    bad = (batch.select(*TURN_KEY).coalesce(1).groupBy(*TURN_KEY).count()
+           .where(F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+                  | (F.col("count") > 1))
+           .limit(1).collect())
+    if bad:
+        conv_id, turn_idx, n = bad[0]
+        if conv_id is None or turn_idx is None:
+            raise ValueError("conv_id and turn_idx must not be NULL")
+        raise ValueError(f"turn key (conv_id={conv_id!r}, "
+                         f"turn_idx={turn_idx!r}) repeats {n} times in "
+                         "one batch")
     if old is None:
         return batch
     kept = old.join(batch.select(*TURN_KEY).distinct(), TURN_KEY,
                     "left_anti")
-    return kept.unionByName(batch.dropDuplicates(TURN_KEY))
+    return kept.unionByName(batch)
 
 
 def replace_groups(edges: DataFrame | None, entities: DataFrame | None,

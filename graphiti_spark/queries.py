@@ -1,6 +1,6 @@
 """Named queries for the driver contract (``__spark_entry__.py``).
 
-Each entry maps a SURVEY.md §2 operator (or a training-data-pipeline op) to
+Each entry maps a SURVEY.md §2 operator (or a document/embedding op) to
 (a) an idiomatic Spark DataFrame implementation and (b) an equivalent ANSI
 SQL oracle DuckDB can run on the same parquet tables. Conventions keeping
 the value-hash compare exact across engines:
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -409,7 +408,7 @@ FROM events GROUP BY user_id, event_type
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline ops over documents / embeddings
+# Document / embedding ops (dedup, kNN, rerank, search)
 # ---------------------------------------------------------------------------
 
 _TOKS = "split(lower(trim(text)), '\\\\s+')"
@@ -676,229 +675,6 @@ SELECT vec_id, mx,
          AS max_abs_q
 FROM qz
 """
-
-
-def q_token_count(spark, sf_dir):
-    """BPE-ish token counting per source: alnum runs cost ceil(len/4),
-    punctuation 1 (whitespace + regex tokenizer)."""
-    d = load(spark, sf_dir, "documents")
-    pieces = "regexp_extract_all(text, '[A-Za-z0-9]+|[^\\\\sA-Za-z0-9]', 0)"
-    per_doc = F.expr(
-        f"aggregate({pieces}, CAST(0 AS BIGINT), (acc, p) -> acc + "
-        "CASE WHEN p RLIKE '^[A-Za-z0-9]' "
-        "THEN CAST((length(p) + 3) DIV 4 AS BIGINT) ELSE CAST(1 AS BIGINT) END)")
-    return (d.withColumn("doc_tokens", per_doc)
-            .groupBy("source")
-            .agg(F.sum("doc_tokens").alias("total_tokens"),
-                 F.count("*").alias("n_docs")))
-
-
-SQL_TOKEN_COUNT = """
-WITH per_doc AS (
-  SELECT source,
-         list_sum(list_transform(
-           regexp_extract_all(text, '[A-Za-z0-9]+|[^\\sA-Za-z0-9]'),
-           p -> CASE WHEN regexp_matches(p, '^[A-Za-z0-9]')
-                     THEN (length(p) + 3) // 4 ELSE 1 END)) AS doc_tokens
-  FROM documents
-)
-SELECT source, CAST(sum(doc_tokens) AS BIGINT) AS total_tokens,
-       count(*) AS n_docs
-FROM per_doc GROUP BY source
-"""
-
-
-def q_quality_filter(spark, sf_dir):
-    """Quality scoring via integer-exact signals: token count, distinct
-    tokens, char length — the length/stopword-ratio filter family."""
-    d = load(spark, sf_dir, "documents")
-    toks = F.expr(_TOKS)
-    return (d.select("doc_id",
-                     F.size(toks).cast("int").alias("n_tokens"),
-                     F.size(F.array_distinct(toks)).cast("int")
-                      .alias("n_distinct"),
-                     F.length(F.trim(F.col("text"))).cast("int")
-                      .alias("n_chars"))
-            .where((F.col("n_tokens") >= 40) & (F.col("n_distinct") >= 15)))
-
-
-SQL_QUALITY_FILTER = """
-SELECT doc_id,
-       CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS INTEGER)
-         AS n_tokens,
-       CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\\s+')))
-         AS INTEGER) AS n_distinct,
-       CAST(length(trim(text)) AS INTEGER) AS n_chars
-FROM documents
-WHERE len(string_split_regex(lower(trim(text)), '\\s+')) >= 40
-  AND len(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) >= 15
-"""
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction (emails, phone numbers) — the standard
-    training-data scrub pass. The synthetic corpus is PII-free, so the
-    query deterministically PLANTS both kinds of PII from doc_id (an
-    email and a dashed phone appended to the text), then masks them with
-    JVM ``regexp_replace`` and reports per-doc match counts plus the full
-    scrubbed text (proving the body is never over-masked). Email masking
-    runs first; ``<EMAIL>`` contains no digits, so the phone pass cannot
-    touch it. Everything is built-in-function work — a pure narrow map
-    riding the scan, zero shuffles, zero UDFs: at 100 TB this is
-    scan-bound and embarrassingly parallel."""
-    d = load(spark, sf_dir, "documents")
-    planted = F.concat(
-        F.col("text"), F.lit(" contact user"),
-        (F.col("doc_id") % 1000).cast("string"),
-        F.lit("@example.com or call 555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        F.lit("."))
-    email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    phone_re = r"[0-9]{3}-[0-9]{4}"
-    return (d.select("doc_id", planted.alias("t"))
-            .select(
-                "doc_id",
-                F.regexp_count("t", F.lit(email_re)).cast("int")
-                 .alias("n_emails"),
-                F.regexp_count("t", F.lit(phone_re)).cast("int")
-                 .alias("n_phones"),
-                F.regexp_replace(
-                    F.regexp_replace("t", email_re, "<EMAIL>"),
-                    phone_re, "<PHONE>").alias("scrubbed")))
-
-
-SQL_PII_SCRUB = r"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id % 1000 AS VARCHAR)
-              || '@example.com or call 555-'
-              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || '.' AS t
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(
-         t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER)
-         AS n_emails,
-       CAST(len(regexp_extract_all(t, '[0-9]{3}-[0-9]{4}')) AS INTEGER)
-         AS n_phones,
-       regexp_replace(
-         regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                        '<EMAIL>', 'g'),
-         '[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS scrubbed
-FROM planted
-"""
-
-
-def q_lang_id(spark, sf_dir):
-    """Language-ID histogram through the real stopword-vote heuristic
-    (functions/text.lang_id) in an Arrow-batched UDF; the oracle replays
-    the identical vote in SQL (distinct-token ∩ per-language stopword
-    lists, argmax by (score, lang) with 'unknown' at score 0)."""
-    from pyspark.sql import types as T
-
-    from graphiti_spark.functions import text as tx
-
-    @F.pandas_udf(T.StringType())
-    def lid(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: tx.lang_id(t or ""))
-
-    d = load(spark, sf_dir, "documents")
-    return (d.select(lid(F.col("text")).alias("lang"))
-            .groupBy("lang").agg(F.count("*").alias("n_docs")))
-
-
-def _sql_lang_id() -> str:
-    from graphiti_spark.functions import text as tx
-    langs = [("en", tx._STOPWORDS_EN)] + sorted(tx._STOPWORDS_OTHER.items())
-
-    def score(words):
-        lst = ", ".join(f"'{w}'" for w in sorted(words))
-        return f"len(list_intersect(toks, [{lst}]))"
-
-    scores = ",\n         ".join(
-        f"{score(words)} AS s_{lang}" for lang, words in langs)
-    structs = ", ".join("{'s': s_%s, 'l': '%s'}" % (lang, lang)
-                        for lang, _ in langs)
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')) AS toks
-  FROM documents
-), s AS (
-  SELECT doc_id,
-         {scores}
-  FROM t
-), p AS (
-  SELECT doc_id, list_sort([{structs}])[-1] AS best FROM s
-)
-SELECT CASE WHEN best.s = 0 THEN 'unknown' ELSE best.l END AS lang,
-       count(*) AS n_docs
-FROM p GROUP BY 1
-"""
-
-
-SQL_LANG_ID = _sql_lang_id()
-
-
-def q_lang_id_ngram(spark, sf_dir):
-    """Language-ID histogram through the n-gram heuristic: per-language
-    character-trigram occurrence counts via pure length/replace
-    arithmetic — (length(t) - length(replace(t, tg, ''))) sums to 3× the
-    non-overlapping occurrence count — so the whole classifier is one
-    codegen'd projection, zero UDFs, and the DuckDB oracle replays the
-    identical arithmetic. Argmax with alphabetically-first tie-break
-    (the CASE chain tests languages in sorted order), 'und' at score 0 —
-    same decision rule as functions/text.lang_id_ngram."""
-    from graphiti_spark.functions.text import TRIGRAM_PROFILES
-
-    d = load(spark, sf_dir, "documents")
-    # coalesce('') so NULL text lands in 'und' like the Python twin
-    # (NULL scores would null the whole CASE chain)
-    t = F.lower(F.coalesce(F.col("text"), F.lit("")))
-    langs = sorted(TRIGRAM_PROFILES)
-    scores = {}
-    for lang in langs:
-        parts = [F.length(t) - F.length(F.replace(t, F.lit(tg), F.lit("")))
-                 for tg in TRIGRAM_PROFILES[lang]]
-        s = parts[0]
-        for p in parts[1:]:
-            s = s + p
-        scores[lang] = s
-    d = d.select(*[scores[lang].alias(f"s_{lang}") for lang in langs])
-    mx = F.greatest(*[F.col(f"s_{lang}") for lang in langs])
-    pred = F.when(mx == 0, F.lit("und"))
-    for lang in langs:
-        pred = pred.when(F.col(f"s_{lang}") == mx, F.lit(lang))
-    return (d.select(pred.alias("lang"))
-            .groupBy("lang").agg(F.count("*").alias("n_docs")))
-
-
-def _sql_lang_id_ngram() -> str:
-    from graphiti_spark.functions.text import TRIGRAM_PROFILES
-    langs = sorted(TRIGRAM_PROFILES)
-
-    def score(lang):
-        return " + ".join(
-            f"(length(t) - length(replace(t, '{tg}', '')))"
-            for tg in TRIGRAM_PROFILES[lang])
-
-    scores = ",\n         ".join(f"{score(lang)} AS s_{lang}"
-                                 for lang in langs)
-    mx = f"greatest({', '.join('s_' + lang for lang in langs)})"
-    case = " ".join(f"WHEN s_{lang} = mx THEN '{lang}'" for lang in langs)
-    return f"""
-WITH s AS (
-  SELECT {scores}
-  FROM (SELECT lower(coalesce(text, '')) AS t FROM documents)
-), p AS (
-  SELECT CASE WHEN mx = 0 THEN 'und' {case} END AS lang
-  FROM (SELECT *, {mx} AS mx FROM s)
-)
-SELECT lang, count(*) AS n_docs FROM p GROUP BY lang
-"""
-
-
-SQL_LANG_ID_NGRAM = _sql_lang_id_ngram()
 
 
 def q_cross_encoder_rerank(spark, sf_dir):
@@ -2115,201 +1891,6 @@ FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
 """
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    """Winnowing-style document fingerprints (md5 rolling-hash
-    min-sampling) via an Arrow-batched UDF; join-ready fingerprint string.
-    md5-hex8 gram hashes so the oracle recomputes them in pure SQL."""
-    from pyspark.sql import types as T
-
-    from graphiti_spark.functions import text as tx
-
-    @F.pandas_udf(T.StringType())
-    def fp(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: ",".join(tx.rolling_fingerprint(t or "")))
-
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", fp(F.col("text")).alias("fingerprint"))
-
-
-SQL_DOC_FINGERPRINT = """
-WITH d AS (
-  SELECT doc_id,
-         array_to_string(regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')
-           AS s
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         CASE WHEN length(s) = 0 THEN CAST([] AS VARCHAR[])
-              WHEN length(s) < 8 THEN [s]
-              ELSE list_transform(range(1, length(s) - 6), i -> substr(s, i, 8))
-         END AS grams
-  FROM d
-), h AS (
-  SELECT doc_id, list_transform(grams, x -> substr(md5(x), 1, 8)) AS hs
-  FROM g
-), m AS (
-  SELECT doc_id,
-         CASE WHEN len(hs) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE list_transform(range(0, greatest(1, len(hs) - 7), 8),
-                                  i -> list_min(hs[i + 1 : i + 8]))
-         END AS mins
-  FROM h
-)
-SELECT doc_id,
-       array_to_string(list_sort(list_distinct(mins))[1:32], ',')
-         AS fingerprint
-FROM m
-"""
-
-
-def q_simhash_buckets(spark, sf_dir):
-    """16-bit md5-SimHash per document + 8-bit band buckets — near-dup
-    blocking for long documents. bit_i = sign of Σ ±1 over the token
-    multiset with the ±1 from md5 hex nibble i, so the oracle recomputes
-    the identical hash in SQL (SQL_SIMHASH_BUCKETS)."""
-    from pyspark.sql import types as T
-
-    from graphiti_spark.functions import text as tx
-
-    @F.pandas_udf(T.IntegerType())
-    def sh(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: tx.simhash16_md5(tx.tokenize(t or ""))).astype("int32")
-
-    d = load(spark, sf_dir, "documents")
-    return (d.select("doc_id", sh(F.col("text")).alias("simhash"))
-            .withColumn("band0", (F.col("simhash") % 256).cast("int"))
-            .withColumn("band1", F.expr("simhash DIV 256").cast("int")))
-
-
-_SH_BITS = ",\n         ".join(
-    f"sum(CASE WHEN substr(h, {i + 1}, 1) IN"
-    " ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END)"
-    f" AS a{i}" for i in range(16))
-_SH_VAL = " + ".join(
-    f"CASE WHEN a{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(16))
-
-SQL_SIMHASH_BUCKETS = f"""
-WITH t AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-), hh AS (
-  SELECT doc_id, md5(tok) AS h FROM t
-), agg AS (
-  SELECT doc_id,
-         {_SH_BITS}
-  FROM hh GROUP BY doc_id
-), v AS (
-  SELECT doc_id, {_SH_VAL} AS simhash FROM agg
-)
-SELECT d.doc_id,
-       CAST(coalesce(v.simhash, 0) AS INTEGER) AS simhash,
-       CAST(coalesce(v.simhash, 0) % 256 AS INTEGER) AS band0,
-       CAST(coalesce(v.simhash, 0) // 256 AS INTEGER) AS band1
-FROM documents d LEFT JOIN v ON d.doc_id = v.doc_id
-"""
-
-
-def q_quality_repetition(spark, sf_dir):
-    """Gopher-style repetition filters (Rae et al. 2021 §A1.1): per-doc
-    top-unigram and top-bigram counts, integer-exact so the oracle hash
-    can't drift on float division. Everything runs in JVM higher-order
-    array lambdas on the already-split token array — a pure narrow map
-    riding the parquet scan (zero shuffles, zero UDFs, O(n log n) per row
-    via sorted-run-length max multiplicity), so at 100 TB it is scan-bound
-    exactly like pii_scrub. ``repetitive`` applies the standard
-    top-word > 20% / top-bigram > 18% cut via integer cross-multiplication
-    (5·top_w > n  ⇔  top_w/n > 0.2)."""
-    d = load(spark, sf_dir, "documents")
-    w = F.expr(_TOKS)
-    bg = F.zip_with(F.slice(w, 1, F.size(w) - 1),
-                    F.slice(w, 2, F.size(w) - 1),
-                    lambda a, b: F.concat(a, F.lit(" "), b))
-
-    # Max multiplicity = longest run in the sorted array: O(n log n)
-    # instead of the O(n·distinct) filter-per-distinct-token scan (17 s →
-    # ~1 s at sf0.1). NULL on empty input preserves the old array_max
-    # semantics (only reachable for bigrams of 1-word docs).
-    def top(arr_sql):
-        return F.expr(
-            f"IF(size({arr_sql}) = 0, CAST(NULL AS BIGINT), "
-            f"aggregate(array_sort({arr_sql}), "
-            "named_struct('prev', CAST(NULL AS STRING), 'run', 0L, "
-            "'best', 0L), "
-            "(a, x) -> named_struct('prev', x, "
-            "'run', IF(a.prev <=> x, a.run + 1, 1L), "
-            "'best', greatest(a.best, IF(a.prev <=> x, a.run + 1, 1L))), "
-            "a -> a.best))")
-
-    return (d.select("doc_id", F.expr(_TOKS).alias("w"), bg.alias("bg"))
-            .select("doc_id", F.size("w").alias("n_words"),
-                    top("w").alias("top_word_n"),
-                    top("bg").alias("top_bigram_n"))
-            .select("doc_id",
-                    F.col("n_words").cast("int").alias("n_words"),
-                    F.col("top_word_n").cast("int").alias("top_word_n"),
-                    F.col("top_bigram_n").cast("int").alias("top_bigram_n"),
-                    ((5 * F.col("top_word_n") > F.col("n_words"))
-                     | (50 * F.col("top_bigram_n") > 9 * F.col("n_words")))
-                    .alias("repetitive")))
-
-
-SQL_QUALITY_REPETITION = r"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-  FROM documents
-), b AS (
-  SELECT doc_id, w,
-         list_transform(generate_series(1, len(w) - 1),
-                        i -> w[i] || ' ' || w[i + 1]) AS bg
-  FROM t
-), c AS (
-  SELECT doc_id, len(w) AS n_words,
-         list_max(list_transform(list_distinct(w),
-                  x -> len(list_filter(w, y -> y = x)))) AS top_word_n,
-         list_max(list_transform(list_distinct(bg),
-                  x -> len(list_filter(bg, y -> y = x)))) AS top_bigram_n
-  FROM b
-)
-SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
-       CAST(top_word_n AS INTEGER) AS top_word_n,
-       CAST(top_bigram_n AS INTEGER) AS top_bigram_n,
-       (5 * top_word_n > n_words OR 50 * top_bigram_n > 9 * n_words)
-         AS repetitive
-FROM c
-"""
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling — the language-rebalancing pass
-    every multilingual training-data pipeline runs. Keep-rates per ``lang``
-    stratum (en 37%, others 11%) are applied via md5(doc_id) — a pure
-    narrow map with NO shuffle and NO RNG state, so the same row is kept
-    on every run, at every parallelism, resumable mid-job (contrast
-    ``df.sample``, whose per-partition seed changes under repartitioning).
-    At 100 TB: scan-bound, embarrassingly parallel, and the sample is
-    reproducible from the row alone."""
-    d = load(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.concat(
-        F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("bigint") % 100)
-    rate = F.when(F.col("lang") == "en", F.lit(37)).otherwise(F.lit(11))
-    return (d.select("doc_id", "lang", bucket.cast("int").alias("bucket"))
-            .where(F.col("bucket") < rate))
-
-
-SQL_STRATIFIED_SAMPLE = """
-SELECT doc_id, lang,
-       CAST(CAST(('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)),
-                                 1, 8)) AS BIGINT) % 100 AS INTEGER)
-         AS bucket
-FROM documents
-WHERE CAST(('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)),
-                           1, 8)) AS BIGINT) % 100
-      < CASE WHEN lang = 'en' THEN 37 ELSE 11 END
-"""
-
-
 def q_kg_pagerank(spark, sf_dir):
     """PageRank over the per-conversation KG (operators/graph.pagerank):
     2 synchronous rounds, damping 0.85, per-``group_id`` graphs ranked
@@ -2401,102 +1982,6 @@ FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
 """
 
 
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination — the n-gram-overlap pass every training
-    corpus runs before release. The "benchmark" is a deterministic slice
-    (doc_id % 97 = 0, standing in for an eval suite); its distinct
-    3-grams form the SMALL side of a broadcast equi-join against the
-    corpus's exploded distinct 3-grams, so at 100 TB the plan is one
-    codegen'd scan + broadcast hash join + an agg over only the matched
-    rows — the corpus is never shuffled, and the explode is a narrow op
-    riding the scan. Output: each contaminated doc with its count of
-    distinct benchmark 3-grams (integer-exact for the value hash)."""
-    d = load(spark, sf_dir, "documents")
-    # Trigrams via a zip_with chain over the MATERIALIZED token column:
-    # 6.5× faster than transform(sequence, i -> slice(w, i, 3)), which
-    # re-walks the array per element (measured 4.8 s → 0.7 s at sf0.1).
-    dw = d.select("doc_id", F.expr(_TOKS).alias("w"))
-    w, n = F.col("w"), F.size("w")
-    tri = F.zip_with(
-        F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
-                   lambda a, b: F.concat(a, F.lit(" "), b)),
-        F.slice(w, 3, n - 2),
-        lambda ab, c: F.concat(ab, F.lit(" "), c))
-    grams = F.when(n >= 3, F.array_distinct(tri)).otherwise(
-        F.array().cast("array<string>"))
-    g = dw.select("doc_id", grams.alias("gs"))
-    bench = (g.where(F.col("doc_id") % 97 == 0)
-             .select(F.explode("gs").alias("gram")).distinct())
-    return (g.where(F.col("doc_id") % 97 != 0)
-            .select("doc_id", F.explode("gs").alias("gram"))
-            .join(F.broadcast(bench), "gram")
-            .groupBy("doc_id")
-            .agg(F.count("*").cast("int").alias("matched_ngrams")))
-
-
-SQL_DECONTAMINATE = r"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 3 THEN
-           list_distinct(list_transform(generate_series(1, len(w) - 2),
-               i -> array_to_string(list_slice(w, i, i + 2), ' ')))
-         ELSE [] END AS gs
-  FROM t
-), bench AS (
-  SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 97 = 0
-)
-SELECT doc_id, CAST(count(*) AS INTEGER) AS matched_ngrams
-FROM (SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 97 != 0) x
-JOIN bench USING (gram)
-GROUP BY doc_id
-"""
-
-
-def q_domain_mixture(spark, sf_dir):
-    """Temperature-scaled domain mixture weights (the α=0.5 sampling rule
-    of multilingual-BERT/XLM): per-source weight ∝ n_docs^0.5, normalized;
-    upsample_factor = weight / natural share. Plan at 100 TB: one
-    map-side-combined count per source (dimension-sized result), then a
-    broadcast of the 1-row totals — the corpus is scanned once and never
-    shuffled. Hash-exactness: sqrt is quantized to floor(sqrt(n)·10⁶) so
-    every SUM is over integers (order-free); the remaining divisions form
-    a fixed IEEE expression tree over integer inputs, identical in both
-    engines, rounded to 9 dp."""
-    d = load(spark, sf_dir, "documents")
-    c = (d.groupBy("source").agg(F.count("*").alias("n_docs"))
-         .withColumn("q_w", F.floor(F.sqrt(F.col("n_docs").cast("double"))
-                                    * 1e6).cast("bigint")))
-    tot = c.agg(F.sum("q_w").alias("tq"),
-                F.sum("n_docs").alias("tn"))
-    return (c.crossJoin(F.broadcast(tot))
-            .select("source", "n_docs",
-                    F.round(F.col("q_w") / F.col("tq"), 9)
-                     .alias("mix_weight"),
-                    F.round((F.col("q_w") / F.col("tq"))
-                            / (F.col("n_docs") / F.col("tn")), 9)
-                     .alias("upsample_factor")))
-
-
-SQL_DOMAIN_MIXTURE = """
-WITH c AS (
-  SELECT source, count(*) AS n_docs,
-         CAST(floor(sqrt(CAST(count(*) AS DOUBLE)) * 1e6) AS BIGINT) AS q_w
-  FROM documents GROUP BY source
-), t AS (
-  SELECT CAST(sum(q_w) AS BIGINT) AS tq, CAST(sum(n_docs) AS BIGINT) AS tn
-  FROM c
-)
-SELECT source, n_docs,
-       round(CAST(q_w AS DOUBLE) / tq, 9) AS mix_weight,
-       round((CAST(q_w AS DOUBLE) / tq)
-             / (CAST(n_docs AS DOUBLE) / tn), 9) AS upsample_factor
-FROM c, t
-"""
-
-
 def q_dedup_resolve(spark, sf_dir):
     """The end-step of near-dup dedup: candidate PAIRS → clusters →
     one canonical keeper per cluster. Reuses the Jaccard≥0.5 pairs of
@@ -2570,68 +2055,16 @@ FROM reach GROUP BY a
 """
 
 
-def q_length_quantiles(spark, sf_dir):
-    """Corpus profiling: EXACT nearest-rank p50/p90/p99 of doc length per
-    source — the distribution check every data pipeline runs before and
-    after filtering. Histogram method: only the (source, n_chars)
-    histogram is shuffled (bounded by the value domain, not the corpus),
-    then a cumulative window over distinct values and the quantile is the
-    min value whose cumulative count reaches ceil(q·n) — all integer
-    arithmetic, so hash-exact, and scalable where a per-row total-order
-    window would serialize a hot source. Nearest-rank idx via
-    ceil(n·q) = (n·q% + 99) DIV 100."""
-    d = load(spark, sf_dir, "documents")
-    h = d.groupBy("source", "n_chars").agg(F.count("*").alias("cnt"))
-    wcum = (Window.partitionBy("source").orderBy("n_chars")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = h.withColumn("cum", F.sum("cnt").over(wcum))
-    tot = h.groupBy("source").agg(F.sum("cnt").alias("n_docs"))
-    j = cum.join(F.broadcast(tot), "source")
-
-    def pick(pct):
-        idx = F.expr(f"(n_docs * {pct} + 99) DIV 100")
-        return F.min(F.when(F.col("cum") >= idx, F.col("n_chars")))
-
-    return (j.groupBy("source")
-            .agg(F.max("n_docs").alias("n_docs"),
-                 pick(50).alias("p50_chars"),
-                 pick(90).alias("p90_chars"),
-                 pick(99).alias("p99_chars")))
-
-
-SQL_LENGTH_QUANTILES = """
-WITH h AS (
-  SELECT source, n_chars, count(*) AS cnt
-  FROM documents GROUP BY source, n_chars
-), c AS (
-  SELECT source, n_chars, cnt,
-         SUM(cnt) OVER (PARTITION BY source ORDER BY n_chars
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum,
-         SUM(cnt) OVER (PARTITION BY source) AS n_docs
-  FROM h
-)
-SELECT source, CAST(max(n_docs) AS BIGINT) AS n_docs,
-       min(CASE WHEN cum >= (n_docs * 50 + 99) // 100 THEN n_chars END)
-         AS p50_chars,
-       min(CASE WHEN cum >= (n_docs * 90 + 99) // 100 THEN n_chars END)
-         AS p90_chars,
-       min(CASE WHEN cum >= (n_docs * 99 + 99) // 100 THEN n_chars END)
-         AS p99_chars
-FROM c GROUP BY source
-"""
-
-
 def q_keyword_tfidf(spark, sf_dir):
     """Per-doc top-5 TF-IDF keywords (operators/keywords.extract_keywords):
     tf is computed map-side via sorted-run-length on each row's own token
-    array (zero shuffles — the q_quality_repetition idiom), df is one
-    vocabulary-sized groupBy that AQE broadcasts into the scoring join,
-    N is a 1-row broadcast (the bm25/domain_mixture pattern), and top-k
-    is a row_number window partitioned by the unskewed doc id. Scores are
-    rounded to 6 dp BEFORE ranking on both engines (absorbs libm-vs-JVM
-    ln ulp, the bm25_search precedent); ties break on the term string so
-    the top-k set is a total order and hash-stable."""
+    array (zero shuffles), df is one vocabulary-sized groupBy that AQE
+    broadcasts into the scoring join, N is a 1-row broadcast (the bm25
+    pattern), and top-k is a row_number window partitioned by the
+    unskewed doc id. Scores are rounded to 6 dp BEFORE ranking on both
+    engines (absorbs libm-vs-JVM ln ulp, the bm25_search precedent); ties
+    break on the term string so the top-k set is a total order and
+    hash-stable."""
     from graphiti_spark.operators.keywords import extract_keywords
     d = load(spark, sf_dir, "documents")
     return extract_keywords(d, text_col="text", id_col="doc_id", top_k=5)
@@ -2707,45 +2140,6 @@ FROM tf GROUP BY term, doc_id % 4
 """
 
 
-def q_quality_logprob(spark, sf_dir):
-    """CCNet-style perplexity quality filter with the LM degenerated to
-    the corpus's own unigram distribution (no external model): per-doc
-    cross-entropy sum(tf · -ln(cnt/total))/n_toks. One vocabulary-sized
-    groupBy trains the 'LM', the grand total derives from it (the corpus
-    is tokenized once), and the per-doc aggregation is keyed by the
-    unskewed doc id. Rounded to 6 dp — ln ulp plus partition-order
-    float-sum jitter is ~1e-13 relative, far under the rounding
-    resolution (the bm25_search precedent)."""
-    from graphiti_spark.operators.keywords import unigram_cross_entropy
-    d = load(spark, sf_dir, "documents")
-    return unigram_cross_entropy(d, text_col="text", id_col="doc_id")
-
-
-SQL_QUALITY_LOGPROB = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                     x -> length(x) >= 1) AS tl
-  FROM documents
-), ex AS (
-  SELECT doc_id, unnest(tl) AS term FROM toks
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM ex GROUP BY doc_id, term
-), freq AS (
-  SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY term
-), tot AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS total_toks FROM freq
-)
-SELECT t.doc_id, CAST(sum(t.tf) AS BIGINT) AS n_toks,
-       round(sum(t.tf * -ln(CAST(f.cnt AS DOUBLE)
-                            / CAST(o.total_toks AS DOUBLE)))
-             / sum(t.tf), 6) AS xent
-FROM tf t JOIN freq f USING (term) CROSS JOIN tot o
-GROUP BY t.doc_id
-"""
-
-
 def q_graph_triangles(spark, sf_dir):
     """Triangle counting (operators/graph.triangle_count) with
     degree-ordered orientation — per-node wedge fan-out bounded O(√m) so
@@ -2785,103 +2179,6 @@ GROUP BY e1.g
 """
 
 
-def q_weighted_sample(spark, sf_dir):
-    """Weighted sampling without replacement (Efraimidis-Spirakis
-    exponential race): per ``source``, keep the 10 docs with the
-    smallest ``-ln(u)/w`` where ``u`` is an md5-derived uniform and the
-    weight ``w = n_chars`` — longer docs proportionally likelier, the
-    quality-weighted data-selection pass. NO RNG state: u comes from
-    md5(doc_id), so the sample is reproducible from the row alone, at
-    any parallelism, resumable mid-job (the stratified_sample argument,
-    now with weights). Plan: narrow map for the key + ONE top-k window
-    shuffle on the low-cardinality source — at 100 TB the scan dominates.
-    Keys are rounded to 6 dp before ranking on BOTH engines (absorbs
-    libm-vs-JVM ln ulp, the bm25 precedent) with doc_id as tie-break,
-    so the emitted set is a total order and hash-stable."""
-    d = load(spark, sf_dir, "documents")
-    u = ((F.conv(F.substring(F.md5(F.concat(
-        F.lit("wrs:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("double") + F.lit(1.0)) / F.lit(4294967297.0))
-    key = F.round(-F.log(u) / F.col("n_chars"), 6)
-    w = Window.partitionBy("source").orderBy("sample_key", "doc_id")
-    return (d.select("source", "doc_id",
-                     F.col("n_chars").alias("weight"),
-                     key.alias("sample_key"))
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= 10)
-            .select("source", "doc_id", "weight", "sample_key",
-                    F.col("rk").cast("int").alias("rk")))
-
-
-SQL_WEIGHTED_SAMPLE = """
-WITH keyed AS (
-  SELECT source, doc_id, n_chars AS weight,
-         round(-ln((CAST(CAST(('0x' || substr(
-                    md5('wrs:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) AS DOUBLE) + 1.0) / 4294967297.0)
-               / n_chars, 6) AS sample_key
-  FROM documents
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY source
-                               ORDER BY sample_key, doc_id) AS rk
-  FROM keyed
-)
-SELECT source, doc_id, weight, sample_key, CAST(rk AS INTEGER) AS rk
-FROM ranked WHERE rk <= 10
-"""
-
-
-def q_boilerplate_ngrams(spark, sf_dir):
-    """Boilerplate detection — the corpus-side heavy-hitter pass (C4 /
-    RefinedWeb drop text fragments repeated across many pages): a
-    trigram occurring in ≥ 25 DISTINCT docs is "boilerplate"; each doc
-    reports its distinct-trigram count and how many of those are
-    boilerplate (integer-exact). Plan at 100 TB: trigrams are built
-    narrow (the zip_with chain riding the scan, array_distinct per doc),
-    the df count is ONE map-side-combined groupBy whose ≥25 survivor set
-    is tiny and BROADCAST back against the corpus — the corpus itself is
-    never shuffled, and no driver-side collect anywhere."""
-    d = load(spark, sf_dir, "documents")
-    dw = d.select("doc_id", F.expr(_TOKS).alias("w"))
-    w, n = F.col("w"), F.size("w")
-    tri = F.zip_with(
-        F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
-                   lambda a, b: F.concat(a, F.lit(" "), b)),
-        F.slice(w, 3, n - 2),
-        lambda ab, c: F.concat(ab, F.lit(" "), c))
-    grams = F.when(n >= 3, F.array_distinct(tri)).otherwise(
-        F.array().cast("array<string>"))
-    g = (dw.select("doc_id", F.explode(grams).alias("gram")))
-    boiler = (g.groupBy("gram").agg(F.count("*").alias("df"))
-              .where(F.col("df") >= 25).select("gram"))
-    return (g.join(F.broadcast(boiler).withColumn("_b", F.lit(1)),
-                   "gram", "left")
-            .groupBy("doc_id")
-            .agg(F.count("*").cast("int").alias("n_grams"),
-                 F.sum(F.coalesce("_b", F.lit(0))).cast("int")
-                  .alias("n_boiler")))
-
-
-SQL_BOILERPLATE_NGRAMS = r"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-  FROM documents
-), g AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(w) - 2),
-           i -> array_to_string(list_slice(w, i, i + 2), ' ')))) AS gram
-  FROM t WHERE len(w) >= 3
-), boiler AS (
-  SELECT gram FROM g GROUP BY gram HAVING count(*) >= 25
-)
-SELECT g.doc_id, CAST(count(*) AS INTEGER) AS n_grams,
-       CAST(sum(CASE WHEN b.gram IS NULL THEN 0 ELSE 1 END) AS INTEGER)
-         AS n_boiler
-FROM g LEFT JOIN boiler b ON g.gram = b.gram
-GROUP BY g.doc_id
-"""
-
-
 QUERIES = {
     "episode_assembly": q_episode_assembly,
     "episode_retrieval": q_episode_retrieval,
@@ -2903,25 +2200,12 @@ QUERIES = {
     "embedding_knn": q_embedding_knn,
     "embedding_centroid": q_embedding_centroid,
     "embedding_int8": q_embedding_int8,
-    "token_count": q_token_count,
-    "quality_filter": q_quality_filter,
-    "pii_scrub": q_pii_scrub,
-    "quality_repetition": q_quality_repetition,
-    "stratified_sample": q_stratified_sample,
     "kg_pagerank": q_kg_pagerank,
     "graph_triangles": q_graph_triangles,
-    "weighted_sample": q_weighted_sample,
-    "boilerplate_ngrams": q_boilerplate_ngrams,
     "events_asof_join": q_events_asof_join,
-    "decontaminate": q_decontaminate,
-    "domain_mixture": q_domain_mixture,
     "dedup_resolve": q_dedup_resolve,
-    "length_quantiles": q_length_quantiles,
     "keyword_tfidf": q_keyword_tfidf,
-    "quality_logprob": q_quality_logprob,
     "inverted_index": q_inverted_index,
-    "lang_id": q_lang_id,
-    "lang_id_ngram": q_lang_id_ngram,
     "cross_encoder_rerank": q_cross_encoder_rerank,
     "bm25_search": q_bm25_search,
     "composite_search": q_composite_search,
@@ -2947,8 +2231,6 @@ QUERIES = {
     "kg_build_edges": q_kg_build_edges,
     "embedding_knn_ivf": q_embedding_knn_ivf,
     "embedding_near_dup": q_embedding_near_dup,
-    "doc_fingerprint": q_doc_fingerprint,
-    "simhash_buckets": q_simhash_buckets,
 }
 
 ORACLES = {
@@ -2972,25 +2254,12 @@ ORACLES = {
     "embedding_knn": SQL_EMBEDDING_KNN,
     "embedding_centroid": SQL_EMBEDDING_CENTROID,
     "embedding_int8": SQL_EMBEDDING_INT8,
-    "token_count": SQL_TOKEN_COUNT,
-    "quality_filter": SQL_QUALITY_FILTER,
-    "pii_scrub": SQL_PII_SCRUB,
-    "quality_repetition": SQL_QUALITY_REPETITION,
-    "stratified_sample": SQL_STRATIFIED_SAMPLE,
     "kg_pagerank": SQL_KG_PAGERANK,
     "graph_triangles": SQL_GRAPH_TRIANGLES,
-    "weighted_sample": SQL_WEIGHTED_SAMPLE,
-    "boilerplate_ngrams": SQL_BOILERPLATE_NGRAMS,
     "events_asof_join": SQL_EVENTS_ASOF_JOIN,
-    "decontaminate": SQL_DECONTAMINATE,
-    "domain_mixture": SQL_DOMAIN_MIXTURE,
     "dedup_resolve": SQL_DEDUP_RESOLVE,
-    "length_quantiles": SQL_LENGTH_QUANTILES,
     "keyword_tfidf": SQL_KEYWORD_TFIDF,
-    "quality_logprob": SQL_QUALITY_LOGPROB,
     "inverted_index": SQL_INVERTED_INDEX,
-    "lang_id": SQL_LANG_ID,
-    "lang_id_ngram": SQL_LANG_ID_NGRAM,
     "cross_encoder_rerank": SQL_CROSS_ENCODER_RERANK,
     "bm25_search": SQL_BM25_SEARCH,
     "composite_search": SQL_COMPOSITE_SEARCH,
@@ -3014,8 +2283,6 @@ ORACLES = {
     "kg_edges_by_node": SQL_KG_EDGES_BY_NODE,
     "kg_add_triplet": SQL_KG_ADD_TRIPLET,
     "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "simhash_buckets": SQL_SIMHASH_BUCKETS,
     # At nprobe = n_cells IVF scans every cell, so its result is
     # centroid-independent and exactly brute force — same oracle.
     "embedding_knn_ivf": SQL_EMBEDDING_KNN,

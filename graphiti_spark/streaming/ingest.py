@@ -87,7 +87,7 @@ class StreamingGraphWriter:
 
         old_tr = old("transcripts", "conv_id")
         # the API's merge: a re-supplied turn takes the batch's text, and
-        # a NULL key raises before anything is written
+        # a NULL or repeated key raises before anything is written
         touched = merge_turns(
             None if old_tr is None else old_tr.select(*batch_df.columns),
             batch_df)

@@ -33,14 +33,8 @@ ALLOW_NESTED_LOOP = {"embedding_knn", "embedding_knn_ivf",
                      "kg_mmr_diverse",    # same shape at λ=0.5: 3-row
                                           # query-id broadcast × 12
                                           # candidates
-                     "domain_mixture",    # 1-row (tq, tn) totals
-                                          # broadcast onto the per-source
-                                          # counts (dimension-sized)
-                     "keyword_tfidf",     # 1-row corpus-size N broadcast
+                     "keyword_tfidf"}     # 1-row corpus-size N broadcast
                                           # onto the scored (doc, term)
-                                          # rows
-                     "quality_logprob"}   # 1-row token grand total
-                                          # broadcast onto the (doc, term)
                                           # rows
 # Queries whose global (unpartitioned) windows rank only bounded inputs
 # (sort().limit() upstream): rrf_fusion ranks ≤200-row candidate lists,

@@ -176,6 +176,25 @@ def test_null_turn_key_raises_and_leaves_handle_unchanged(spark):
     assert g.edges.count() == n_edges
 
 
+def test_repeated_turn_key_raises_and_leaves_handle_unchanged(spark):
+    """A (conv_id, turn_idx) the batch holds twice raises on every write,
+    the first one included, and the handle keeps its tables."""
+    import pytest as _pytest
+
+    dup = _tr(spark, [("conv1", 0, "Carol Wu works at Acme Corp."),
+                      ("conv1", 0, "Carol Wu works at Globex.")])
+    empty = GraphitiSpark(spark, run_ts=TS)
+    with _pytest.raises(ValueError, match="conv1"):
+        empty.add_episode_bulk(dup)
+    assert empty.transcripts is None and empty.edges is None
+
+    g = GraphitiSpark(spark, run_ts=TS).add_episode_bulk(_tr(spark, ROWS))
+    before = sorted(map(tuple, g.transcripts.collect()))
+    with _pytest.raises(ValueError, match="conv1"):
+        g.add_episode_bulk(dup)
+    assert sorted(map(tuple, g.transcripts.collect())) == before
+
+
 def test_save_in_place_after_load(spark, tmp_path):
     import pytest as _pytest
 

@@ -13,8 +13,7 @@ import random
 import re
 
 from graphiti_spark.operators.keywords import (DEFAULT_STOPWORDS,
-                                               extract_keywords,
-                                               unigram_cross_entropy)
+                                               extract_keywords)
 
 VOCAB = ["spark", "window", "agg", "join", "scan", "the", "to", "on",
          "cat", "x", "partition", "shuffle", "broadcast"]
@@ -72,49 +71,6 @@ def test_keywords_edge_cases(spark):
     d4 = sorted(by_doc[4], key=lambda r: r.rank)
     assert (d4[0].term, d4[0].tf) == ("unique", 2)
     assert (d4[1].term, d4[1].tf, d4[1].df) == ("zz", 1, 1)
-
-
-def _py_xent(docs):
-    """docs: {doc_id: text} -> {doc_id: (n_toks, xent)} under the
-    corpus's own unigram LM."""
-    bags = {did: [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-            for did, text in docs.items()}
-    freq = {}
-    for toks in bags.values():
-        for t in toks:
-            freq[t] = freq.get(t, 0) + 1
-    total = sum(freq.values())
-    out = {}
-    for did, toks in bags.items():
-        if not toks:
-            continue
-        s = sum(-math.log(freq[t] / total) for t in toks)
-        out[did] = (len(toks), round(s / len(toks), 6))
-    return out
-
-
-def test_unigram_xent_matches_python_reference(spark):
-    rng = random.Random(11)
-    docs = {i: " ".join(rng.choices(VOCAB, k=rng.randint(0, 30)))
-            for i in range(50)}
-    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    got = {r.doc_id: (r.n_toks, r.xent)
-           for r in unigram_cross_entropy(df).collect()}
-    exp = _py_xent(docs)
-    assert set(got) == set(exp)
-    for did in exp:
-        assert got[did][0] == exp[did][0]
-        assert abs(got[did][1] - exp[did][1]) < 2e-6, (did, got[did], exp[did])
-
-
-def test_unigram_xent_ordering(spark):
-    # A doc of corpus-common words must score lower than rare-token noise.
-    common = "data " * 50
-    df = spark.createDataFrame(
-        [(1, common), (2, common), (3, common), (4, "zq xv jk wm")],
-        "doc_id long, text string")
-    got = {r.doc_id: r.xent for r in unigram_cross_entropy(df).collect()}
-    assert got[1] < got[4]
 
 
 def test_keywords_top_k_bound(spark):

@@ -74,21 +74,3 @@ def test_extract_all_total_and_wrapper_consistent(s, source):
     for t in triples:
         assert rules.normalize_name(t["subj"]) != \
             rules.normalize_name(t["obj"])
-
-
-@given(texts)
-@settings(max_examples=100, deadline=None)
-def test_rolling_fingerprint_deterministic_and_bounded(s):
-    f1 = tx.rolling_fingerprint(s)
-    assert f1 == tx.rolling_fingerprint(s)
-    assert len(f1) <= 32 and f1 == sorted(f1)
-
-
-@given(st.lists(st.text(alphabet="abcdefgh", min_size=1, max_size=6),
-                min_size=0, max_size=40))
-@settings(max_examples=100, deadline=None)
-def test_simhash_permutation_invariant(tokens):
-    """SimHash of a token multiset ignores order."""
-    a = tx.simhash16_md5(tokens)
-    b = tx.simhash16_md5(list(reversed(tokens)))
-    assert a == b and 0 <= a < (1 << 16)

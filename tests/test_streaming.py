@@ -169,3 +169,33 @@ def test_null_turn_key_raises_without_writing(spark, tmp_path):
         with pytest.raises(ValueError):
             writer(_turns(spark, bad), 1)
     assert stored() == before
+
+
+def test_repeated_turn_key_raises_without_writing(spark, tmp_path):
+    """A micro-batch that holds one (conv_id, turn_idx) twice raises
+    ``ValueError``, on an empty store and on a stored one, and writes
+    nothing."""
+    import pytest
+
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    writer = StreamingGraphWriter(out, RUN_TS)
+    dup = _turns(spark, [("c1", 0, "Alice Smith works at Acme Corp.", 0),
+                         ("c1", 0, "Alice Smith works at Globex.", 1)])
+    with pytest.raises(ValueError, match="c1"):
+        writer(dup, 0)
+    assert not os.path.exists(out)
+
+    writer(_turns(spark, [("c1", 0, "Bob Jones lives in Oslo.", 0)]), 0)
+    transcripts = os.path.join(out, "transcripts")
+
+    def stored():
+        return sorted(map(tuple, spark.read.parquet(transcripts)
+                          .select("conv_id", "turn_idx", "text")
+                          .collect()))
+
+    before = stored()
+    with pytest.raises(ValueError, match="c1"):
+        writer(dup, 1)
+    assert stored() == before

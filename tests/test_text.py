@@ -22,75 +22,5 @@ def test_embed_similarity_orders_sensibly():
     base = tx.embed_text("alice smith works at acme")
     close = tx.embed_text("alice smith works for acme")
     far = tx.embed_text("completely unrelated words entirely")
-    cs = tx.cosine_batch(np.stack([base, base]), np.stack([close, far]))
-    assert cs[0] > cs[1]
-
-
-def test_cosine_batch_zero_safe():
-    z = np.zeros((1, 4), dtype=np.float32)
-    o = np.ones((1, 4), dtype=np.float32)
-    assert tx.cosine_batch(z, o)[0] == 0.0
-
-
-def test_minhash_jaccard_estimate():
-    a = tx.minhash_signature(list("abcdefgh"), 128)
-    b = tx.minhash_signature(list("abcdefgh"), 128)
-    c = tx.minhash_signature(list("abcdwxyz"), 128)
-    assert (a == b).all()
-    est = float((a == c).mean())        # true Jaccard = 4/12 ≈ 0.33
-    assert 0.1 < est < 0.6
-
-
-def test_minhash_bands_collide_for_similar_sets():
-    a = set(tx.minhash_bands(tx.minhash_signature(list("abcdefghij"), 64), 16))
-    b = set(tx.minhash_bands(tx.minhash_signature(list("abcdefghiX"), 64), 16))
-    assert a & b    # near-identical sets share ≥1 band w.h.p.
-
-
-def test_simhash_hamming():
-    a = tx.simhash64(["alice", "smith", "acme"])
-    b = tx.simhash64(["alice", "smith", "acme", "corp"])
-    c = tx.simhash64(["totally", "different", "words"])
-    assert tx.hamming64(a, b) < tx.hamming64(a, c)
-
-
-def test_lang_id():
-    assert tx.lang_id("the cat is on the mat and it is happy") == "en"
-    assert tx.lang_id("der hund ist nicht mit der katze") == "de"
-    assert tx.lang_id("xyzzy qwerty") == "unknown"
-
-
-def test_quality_score_bounds():
-    assert tx.quality_score("") == 0.0
-    good = tx.quality_score(
-        "The quick brown fox jumps over the lazy dog and then it runs away "
-        "to the forest where it finds a quiet place to rest for the night.")
-    bad = tx.quality_score("@@@@ #### $$$$ %%%%")
-    assert 0.0 <= bad < good <= 1.0
-
-
-def test_approx_token_count():
-    assert tx.approx_token_count("") == 0
-    assert tx.approx_token_count("hi") == 1
-    # "internationalization" (20 chars) → ~5 pieces; punctuation counts 1 each
-    assert tx.approx_token_count("internationalization") == 5
-    assert tx.approx_token_count("a, b") == 3
-
-
-def test_rolling_fingerprint_stable():
-    f1 = tx.rolling_fingerprint("some document text for fingerprinting")
-    f2 = tx.rolling_fingerprint("some document text for fingerprinting")
-    assert f1 == f2 and len(f1) > 0
-
-
-def test_lang_id_ngram():
-    assert tx.lang_id_ngram(
-        "the quick brown fox is jumping over the lazy dog of the farm") == "en"
-    assert tx.lang_id_ngram(
-        "ich bin ein berliner und der schnee ist schoen") == "de"
-    assert tx.lang_id_ngram(
-        "les enfants etaient dans le jardin avec leur professeur") == "fr"
-    assert tx.lang_id_ngram(
-        "que la situacion de los ciudadanos era complicada") == "es"
-    assert tx.lang_id_ngram("zzz qqq 123") == "und"
-    assert tx.lang_id_ngram("") == "und"
+    # embed_text is L2-normalized, so the dot product is the cosine
+    assert float(base @ close) > float(base @ far)
