@@ -26,6 +26,9 @@ surviving manual triplets, and a write costs O(touched conversations),
 not O(graph) — the reference's per-episode incremental shape.
 Communities are derived state: every write drops them (``None``) until
 ``build_communities`` runs again.
+
+The streaming writer (``streaming/ingest``) runs this same write per
+micro-batch on a handle over the touched groups' stored rows.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.operators import maintenance as MT
 from graphiti_spark.plans.pipeline import RUN_TS, build_graph
-from graphiti_spark.sources.tables import read_group_table
+from graphiti_spark.sources.tables import read_store_table, write_store_table
 
 __all__ = ["GraphitiSpark"]
 
@@ -86,8 +89,8 @@ class GraphitiSpark:
         rebuild the conversations they touch. A re-supplied
         ``(conv_id, turn_idx)`` takes the NEW text. A NULL ``conv_id``
         or ``turn_idx``, or a key the batch repeats, raises
-        ``ValueError`` (``maintenance.merge_turns``, which the streaming
-        writer shares)."""
+        ``ValueError`` (``maintenance.merge_turns``). The streaming
+        writer runs this method once per micro-batch."""
         return self._rebuild(MT.merge_turns(self.transcripts, transcripts),
                              transcripts.select("conv_id").distinct())
 
@@ -162,7 +165,9 @@ class GraphitiSpark:
         transcripts = transcripts.localCheckpoint(eager=True)
         src = transcripts
         if self.transcripts is not None:
-            touched = touched.localCheckpoint(eager=True)
+            # cached, not checkpointed: unpersist releases it once the
+            # tables that read it are checkpointed
+            touched = touched.cache()
             src = transcripts.join(F.broadcast(touched), "conv_id",
                                    "left_semi")
         g = self._build(src)
@@ -175,8 +180,10 @@ class GraphitiSpark:
         self.transcripts = transcripts
         self._apply(groups, edges=edges, entities=entities,
                     episodes=g.episodes, episodic_edges=g.episodic_edges)
-        # every table is checkpointed: nothing reads the kernel output again
+        # every table is checkpointed: nothing reads the kernel output or
+        # the touched keys again
         g.release()
+        touched.unpersist()
         return self
 
     def _apply(self, groups: DataFrame, **tables: DataFrame
@@ -281,10 +288,10 @@ class GraphitiSpark:
         for the Iceberg tables of the brief)."""
         for name in self._TABLES:
             df = getattr(self, name)
-            path = f"{root.rstrip('/')}/{name}"
             if df is None:
                 # a table the handle dropped (communities after a write)
                 # must not come back stale from an earlier save
+                path = os.path.join(root, name)
                 if os.path.isdir(path):
                     shutil.rmtree(path)
                 continue
@@ -294,12 +301,7 @@ class GraphitiSpark:
             # would leave the on-disk graph half-replaced
             df = df.localCheckpoint(eager=True)
             setattr(self, name, df)
-            part = ("conv_id" if "conv_id" in df.columns else
-                    "group_id" if "group_id" in df.columns else None)
-            w = df.write.mode("overwrite")
-            if part:
-                w = w.partitionBy(part)
-            w.parquet(path)
+            write_store_table(df, root, name)
         return self
 
     @classmethod
@@ -317,10 +319,9 @@ class GraphitiSpark:
                 with_embeddings=with_embeddings)
         found = False
         for name in cls._TABLES:
-            p = f"{root.rstrip('/')}/{name}"
-            if os.path.isdir(p):
-                found = True
-                setattr(g, name, read_group_table(spark, p))
+            df = read_store_table(spark, root, name)
+            found = found or df is not None
+            setattr(g, name, df)
         if not found:
             # a typo'd root must not silently hand back an empty graph
             # that a later save() would happily write somewhere new

@@ -259,8 +259,9 @@ def name_tokens(name: str) -> list[str]:
     the extraction ``_NAME`` pattern admits internal punctuation ('&.-', so
     'Coca-Cola' vs 'Coca Cola'); splitting on non-alnum keeps such aliases
     in the same token space (and in the same dedup block) on every path —
-    this function, the JVM twin (operators/dedup.py), and the fulltext
-    tokenizer (functions/text.py) all use the same alnum-run rule."""
+    this function, the build kernel's in-group duplicate rule
+    (operators/dedup.canonical_uuids) and the fulltext tokenizer
+    (functions/text.py) all use the same alnum-run rule."""
     return _ALNUM_RUN.findall(normalize_name(name))
 
 

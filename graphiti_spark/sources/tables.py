@@ -21,17 +21,43 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_group_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a ``conv_id``/``group_id``-partitioned parquet table with
-    those keys as the strings that were written. Partition-type inference
-    alone would read ``conv_id=007`` back as the int 7, so the table is
-    re-read with the inferred schema's key fields pinned to string."""
-    inferred = spark.read.parquet(path).schema
+def group_key(df: DataFrame) -> str | None:
+    """The column a graph table is partitioned by in a store: ``conv_id``
+    (transcripts), else ``group_id``, else None."""
+    return next((c for c in ("conv_id", "group_id") if c in df.columns),
+                None)
+
+
+def read_store_table(spark: SparkSession, root: str,
+                     name: str) -> DataFrame | None:
+    """Table ``name`` of the store at ``root``. ONLY a missing directory
+    means the table is absent (None); any other read failure raises, since
+    an unreadable table taken as empty would be overwritten by a rebuild
+    of the touched groups from the new rows alone. Partition-type
+    inference alone would read ``conv_id=007`` back as the int 7, so the
+    keys are re-read pinned to the strings that were written."""
+    path = os.path.join(root, name)
+    if not os.path.isdir(path):
+        return None
     schema = T.StructType([
         T.StructField(f.name, T.StringType(), f.nullable)
         if f.name in ("conv_id", "group_id") else f
-        for f in inferred])
+        for f in spark.read.parquet(path).schema])
     return spark.read.schema(schema).parquet(path)
+
+
+def write_store_table(df: DataFrame, root: str, name: str,
+                      dynamic: bool = False) -> None:
+    """Write ``df`` as table ``name`` of the store at ``root``, partitioned
+    by its :func:`group_key`. ``dynamic`` replaces only the partitions
+    ``df`` has rows for (Iceberg's ``overwritePartitions``), else the
+    whole table is replaced."""
+    w = df.write.mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    if key := group_key(df):
+        w = w.partitionBy(key)
+    w.parquet(os.path.join(root, name))
 
 
 class TableStore:

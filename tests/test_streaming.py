@@ -199,3 +199,51 @@ def test_repeated_turn_key_raises_without_writing(spark, tmp_path):
     with pytest.raises(ValueError, match="c1"):
         writer(dup, 1)
     assert stored() == before
+
+
+def test_stream_store_loads_as_full_handle(spark, tmp_path):
+    """A store written by the streaming writer holds all five tables: the
+    loaded handle equals an ``add_episode_bulk`` over the same turns,
+    serves its episodes, and removes one like the in-memory handle."""
+    from graphiti_spark.api import GraphitiSpark
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    batch1 = _turns(spark, [
+        ("c1", 0, "Alice Smith works at Acme Corp.", 0),
+        ("c1", 1, "Alice Smith lives in Paris.", 1),
+        ("c2", 0, "Bob Jones works at Globex.", 0)])
+    batch2 = _turns(spark, [("c1", 2, "Carol Moss works at Acme Corp.", 2)])
+    writer = StreamingGraphWriter(out, RUN_TS)
+    writer(batch1, 0)
+    writer(batch2, 1)
+
+    loaded = GraphitiSpark.load(spark, out, RUN_TS, with_embeddings=False)
+    fresh = GraphitiSpark(spark, RUN_TS, with_embeddings=False)
+    fresh.add_episode_bulk(batch1.unionByName(batch2))
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in
+                      df.select(*sorted(df.columns)).collect())
+
+    for name in ("transcripts", "episodes", "entities", "edges",
+                 "episodic_edges"):
+        have, want = getattr(loaded, name), getattr(fresh, name)
+        assert sorted(have.columns) == sorted(want.columns), name
+        assert rows(have) == rows(want), name
+
+    stored = {r["uuid"] for r in
+              spark.read.parquet(os.path.join(out, "episodes")).collect()}
+    assert len(stored) == 4
+    got = loaded.retrieve_episodes(datetime(2030, 1, 1))
+    assert {r["uuid"] for r in got.collect()} == stored
+
+    gone = [r["uuid"] for r in loaded.episodes
+            .where("group_id = 'c1' AND turn_idx = 0").collect()]
+    assert len(gone) == 1
+    for h in (loaded, fresh):
+        h.remove_episode(gone)
+    assert rows(loaded.transcripts) == rows(fresh.transcripts)
+    assert rows(loaded.edges) == rows(fresh.edges)
+    assert ({r["uuid"] for r in loaded.entities.collect()}
+            == {r["uuid"] for r in fresh.entities.collect()})
