@@ -33,8 +33,6 @@ micro-batch on a handle over the touched groups' stored rows.
 
 from __future__ import annotations
 
-import os
-import shutil
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +40,8 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.operators import maintenance as MT
 from graphiti_spark.plans.pipeline import RUN_TS, build_graph
-from graphiti_spark.sources.tables import read_store_table, write_store_table
+from graphiti_spark.sources.tables import (drop_store_table, read_store_table,
+                                           write_store_table)
 
 __all__ = ["GraphitiSpark"]
 
@@ -291,9 +290,7 @@ class GraphitiSpark:
             if df is None:
                 # a table the handle dropped (communities after a write)
                 # must not come back stale from an earlier save
-                path = os.path.join(root, name)
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
+                drop_store_table(root, name)
                 continue
             # cut lineage BEFORE overwrite: a load()ed table's plan still
             # reads the very directory this write replaces — Spark

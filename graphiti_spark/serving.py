@@ -21,7 +21,14 @@ This module is the missing half of that story, in-repo and tested:
   composite ``search()`` — same methods, rerankers, presets, filters,
   tie-breaks — in milliseconds. Ranking runs on numpy ``(uuid, score)``
   arrays ordered by :func:`_top_k`; pandas is touched once per layer per
-  query, for the positional take of the hydrated rows.
+  query, for the positional take of the hydrated rows, whose score
+  column is preallocated and filled in place.
+
+Cost model per query and layer: bm25 reads the postings of the query's
+tokens; cosine folds the embedding matrix's columns at the query
+vector's nonzero coordinates, O(rows × nonzeros). The feature-hash
+embedder (E7) gives a 2-4 word query at most 4 nonzeros out of 1,024,
+so neither method scales with the embedding width.
 
 Equivalence is the contract, not an aspiration: ``tests/test_serving.py``
 replays every composite preset through both engines and asserts
@@ -93,15 +100,25 @@ def _top_k(uuids, scores, k: int | None = None):
 
 
 class _Layer:
-    """One layer table prepared for point lookups: positional rows, an
-    inverted token index (token → (row idx array, tf array)), doc
-    lengths, the float64 embedding matrix + norms, and — built on the
-    first scoped query — a group_id → row-index map. Methods return
-    ``(uuid, score)`` arrays in :func:`_top_k` order."""
+    """One layer table prepared for point lookups: positional rows (with a
+    NaN ``score`` column for hydration to fill), an inverted token index
+    (token → (row idx array, tf array)), doc lengths, the float64
+    embedding matrix + norms, and — built on the first scoped query — a
+    group_id → row-index map. Methods return ``(uuid, score)`` arrays in
+    :func:`_top_k` order.
+
+    The matrix stays row-major: cosine reads a few of its columns per
+    query, while MMR gathers whole rows (``emb[idx]``), which a
+    column-major copy would make ~15× slower."""
 
     def __init__(self, pdf: pd.DataFrame, text_col: str,
                  emb_col: str | None):
         self.rows = pdf.reset_index(drop=True)
+        # the hydrated frames' score column, allocated once: a query
+        # writes its scores into the taken rows' copy by position, where
+        # inserting a new column costs more than the take itself. A table
+        # that has a score column keeps it, at its position, as float64.
+        self.rows["score"] = np.nan
         self.uuid = self.rows["uuid"].to_numpy(dtype=object)
         texts = self.rows[text_col] if text_col in self.rows else \
             pd.Series([""] * len(self.rows))
@@ -175,29 +192,29 @@ class _Layer:
     def cosine(self, mask: np.ndarray | None, query_vec, min_score: float,
                limit: int):
         """Twin of ``similarity_search``: cosine > min_score (strict),
-        (score DESC, uuid) top-``limit``; zero-norm rows score 0."""
+        (score DESC, uuid) top-``limit``; zero-norm rows score 0.
+
+        The dot product is ``cosine_col``'s left fold of ``e[k] * q[k]`` in
+        index order, restricted to the query's nonzero coordinates: where
+        ``q[k] == 0`` the fold adds ±0, which changes no sum. So every row
+        gets Spark's dot, bit for bit, in O(rows × nonzeros of the query)
+        — a hashed 2-4 word query has at most 4 — instead of O(rows × dim).
+        The fold runs over all rows; the scope mask applies after it."""
         q = np.asarray(query_vec, dtype=np.float64)
         qn = float(np.sqrt((q * q).sum())) or 1.0
         if self.emb.shape[0] == 0:
-            # empty layer: the (0, 0) placeholder matrix cannot matmul a
-            # dim-d query, and there is nothing to score anyway
+            # empty layer: the (0, 0) placeholder matrix has no columns to
+            # fold, and there is nothing to score anyway
             return _EMPTY
-        if mask is None:
-            # unscoped hot path: matmul against the stored matrix
-            # directly — fancy-indexing with arange would COPY the whole
-            # (n × dim) matrix per query (measured: ~0.3 s/query at 27k
-            # docs × dim 1024, the entire served latency budget)
-            dots, norms, uuids = self.emb @ q, self.norm, self.uuid
-        else:
-            idx = np.flatnonzero(mask)
-            if len(idx) == 0:
-                return _EMPTY
-            dots = self.emb[idx] @ q
-            norms, uuids = self.norm[idx], self.uuid[idx]
+        dots = np.zeros(len(self.emb))
+        for j in np.flatnonzero(q):
+            dots += self.emb[:, j] * q[j]
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(norms > 0, dots / (norms * qn), 0.0)
+            cos = np.where(self.norm > 0, dots / (self.norm * qn), 0.0)
         keep = cos > min_score
-        return _top_k(uuids[keep], cos[keep], limit)
+        if mask is not None:
+            keep &= mask
+        return _top_k(self.uuid[keep], cos[keep], limit)
 
 
 @dataclass
@@ -413,7 +430,7 @@ class ServedGraph:
         hyd = layer.rows.take(np.array(
             [layer._uuid_to_idx[u] for u in uuids], dtype=np.intp))
         hyd.index = pd.RangeIndex(len(hyd))
-        hyd["score"] = scores
+        hyd.isetitem(hyd.columns.get_loc("score"), scores)
         return hyd
 
     def _rerank(self, layer, reranker, results, query, query_vec,

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from datetime import datetime, timezone
 
@@ -58,6 +59,13 @@ def write_store_table(df: DataFrame, root: str, name: str,
     if key := group_key(df):
         w = w.partitionBy(key)
     w.parquet(os.path.join(root, name))
+
+
+def drop_store_table(root: str, name: str) -> None:
+    """Remove table ``name`` from the store at ``root``, if it is there."""
+    path = os.path.join(root, name)
+    if os.path.isdir(path):
+        shutil.rmtree(path)
 
 
 class TableStore:

@@ -25,12 +25,14 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.api import GraphitiSpark
 from graphiti_spark.schema import TRANSCRIPTS
-from graphiti_spark.sources.tables import (group_key, read_store_table,
+from graphiti_spark.sources.tables import (drop_store_table, group_key,
+                                           read_store_table,
                                            write_store_table)
 
-# communities are derived: built on a loaded handle, never by a write
 _WRITTEN = ("transcripts", "episodes", "entities", "edges",
             "episodic_edges")
+# derived: built on a loaded handle, never by a write, and dropped by one
+_DERIVED = ("communities", "community_edges")
 
 
 def stream_transcripts(spark: SparkSession, path: str,
@@ -47,7 +49,8 @@ class StreamingGraphWriter:
     ``GraphitiSpark`` handle over the stored rows of the conversations the
     batch touches, and write the handle's five tables back by dynamic
     partition overwrite, so ONLY the touched partitions are replaced. IO
-    per batch is O(touched groups), not O(graph). The handle
+    per batch is O(touched groups), not O(graph). The store's communities
+    go, as the handle's do on a write. The handle
     ``localCheckpoint``s every table it writes, so all five are
     materialized BEFORE the first write replaces the files they read."""
 
@@ -73,6 +76,10 @@ class StreamingGraphWriter:
         # a NULL or repeated turn key raises here, before anything is
         # written
         g.add_episode_bulk(batch_df)
+        # as in save(): stored communities would describe the graph before
+        # this batch, so they go before the new rows land
+        for name in _DERIVED:
+            drop_store_table(self.out_root, name)
         for name in _WRITTEN:
             df = getattr(g, name)
             write_store_table(df, self.out_root, name, dynamic=True)

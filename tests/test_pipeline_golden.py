@@ -167,6 +167,21 @@ def test_storeless_build_job_count_is_fixed(spark, corpus_dir, job_count):
     assert counts[0] == counts[1] and 0 < counts[0] <= 5, counts
 
 
+def test_storeless_build_kernel_runs_one_wave(spark, corpus_dir, job_count):
+    """The kernel stage of a storeless build runs one task per core:
+    ``defaultParallelism`` tasks, the widest stage its materialization
+    runs (the sf0.001 input is one file split and the count's final
+    aggregate one task)."""
+    spark.catalog.clearCache()
+    tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
+    job_count("build-kernel", lambda: build_graph(spark, tr).kernel.count())
+    st = spark.sparkContext.statusTracker()
+    ran = [info.numTasks for job in st.getJobIdsForGroup("build-kernel")
+           for info in map(st.getStageInfo, st.getJobInfo(job).stageIds)
+           if info is not None and info.numCompletedTasks]
+    assert max(ran) == spark.sparkContext.defaultParallelism, ran
+
+
 CUSTOM_ONTOLOGY = Ontology(
     entity_types={"Product": ("category",)},
     excluded_entity_types=["Place"],

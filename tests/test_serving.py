@@ -16,9 +16,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from graphiti_spark.functions.text import embed_text
 from graphiti_spark.operators import composite_search as CS
 from graphiti_spark.operators.communities import build_communities
-from graphiti_spark.operators.search import DateFilter, SearchFilters
+from graphiti_spark.operators.search import (DateFilter, SearchFilters,
+                                             similarity_search)
 from graphiti_spark.plans.pipeline import RUN_TS, build_graph
 from graphiti_spark.serving import ServedGraph, export_search_artifacts
 
@@ -196,3 +198,64 @@ def test_empty_layer_does_not_crash(served_setup):
     assert res.communities is not None and len(res.communities) == 0
     assert res.edges is not None and len(res.edges) > 0
     assert res.nodes is not None and len(res.nodes) > 0
+
+
+def _no_hit_query(layer) -> str:
+    """A word whose hashed coordinate is zero in every row of ``layer``:
+    its cosine with every row is 0."""
+    for i in range(10_000):
+        word = f"zq{i}"
+        if not layer.emb[:, np.flatnonzero(embed_text(word))].any():
+            return word
+    raise AssertionError("every probe word hits a row")
+
+
+@pytest.mark.parametrize("kind,table", [("edge", "edges"),
+                                        ("node", "nodes")])
+def test_cosine_equals_spark_exactly(served_setup, kind, table):
+    """The served cosine folds only the query's nonzero coordinates; each
+    row's score is ``==`` to Spark's ``cosine_col`` fold over all of
+    them, scoped and unscoped, for every row (min_score below -1), and
+    a query that hits no row returns nothing on both engines."""
+    layers, sg, facts, _, _ = served_setup
+    layer, df = sg._layer(kind), layers[table]
+    emb_col = CS._LAYER_COLS[kind][1]
+    gid = df.select("group_id").orderBy("group_id").head()["group_id"]
+    queries = [" ".join(f.split()[:4]) for f in facts[:3]]
+    for scoped in (False, True):
+        sdf = df.where(F.col("group_id") == gid) if scoped else df
+        mask = layer.scope([gid]) if scoped else None
+        no_hit = _no_hit_query(layer)
+        for query in queries + [no_hit]:
+            qvec = [float(x) for x in embed_text(query)]
+            for min_score in (-2.0, 0.0):
+                want = _collect(similarity_search(
+                    sdf, emb_col, qvec, min_score=min_score,
+                    limit=len(layer.uuid)))
+                got_u, got_s = layer.cosine(mask, qvec, min_score,
+                                            len(layer.uuid))
+                assert list(zip(got_u.tolist(), got_s.tolist())) == want, \
+                    (kind, scoped, query, min_score)
+                if min_score == 0.0 and query == no_hit:
+                    assert want == [], query
+
+
+def test_hydration_keeps_an_existing_score_column(served_setup):
+    """Hydration writes the scores into a score column preallocated on the
+    layer: a table without one gains it last, a table with one keeps it
+    at its position as float64, and every other dtype is the table's."""
+    layers, _, facts, qvec, _ = served_setup
+    edges = layers["edges"].toPandas()
+    scored = edges.copy()
+    scored.insert(2, "score", np.arange(len(scored)))
+    query = " ".join(facts[0].split()[:4])
+    for table, want_cols in ((edges, list(edges.columns) + ["score"]),
+                             (scored, list(scored.columns))):
+        res = ServedGraph(edges=table).search(
+            query, qvec, CS.EDGE_HYBRID_SEARCH_RRF)
+        assert len(res.edges) > 0
+        assert list(res.edges.columns) == want_cols
+        want_dtypes = table.dtypes.to_dict()
+        want_dtypes["score"] = np.dtype(np.float64)
+        assert res.edges.dtypes.to_dict() == want_dtypes
+        assert res.edges["score"].notna().all()

@@ -125,3 +125,47 @@ def test_bm25_sums_match_the_dict_loop_exactly():
         want = _bm25_loop(layer, q)
         got_u, got_s = layer.bm25(None, q, 1000)
         assert dict(zip(got_u.tolist(), got_s.tolist())) == want, q
+
+
+def _dense_layer(seed: int, n: int = 300, dim: int = 64):
+    """A layer with dense ``dim``-wide embeddings, like the ``embeddings``
+    table of the ``served_search`` query, in two groups."""
+    from graphiti_spark.serving import _Layer
+    rng = np.random.default_rng(seed)
+    emb = rng.normal(size=(n, dim)).astype(np.float32)
+    emb[::17] = 0.0                               # zero-norm rows score 0
+    pdf = pd.DataFrame({"uuid": [f"d{i:03d}" for i in rng.permutation(n)],
+                        "group_id": [f"g{i % 2}" for i in range(n)],
+                        "fact": ["w"] * n,
+                        "fact_embedding": list(emb)})
+    return _Layer(pdf, "fact", "fact_embedding"), rng
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_cosine_fold_matches_matmul_on_dense_vectors(seed):
+    """Every coordinate of a dense query is nonzero: the fold then visits
+    all of them and ranks as ``emb @ q`` does, scores to float tolerance."""
+    layer, rng = _dense_layer(seed)
+    q = rng.normal(size=64).astype(np.float32).astype(np.float64)
+    dots = layer.emb @ q
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(layer.norm > 0,
+                       dots / (layer.norm * np.sqrt(q @ q)), 0.0)
+    for k, min_score in ((10, -1.0), (40, 0.0), (1000, -2.0)):
+        got_u, got_s = layer.cosine(None, q, min_score, k)
+        keep = cos > min_score
+        want_u, want_s = _oracle(layer.uuid[keep].tolist(),
+                                 cos[keep].tolist(), k)
+        assert got_u.tolist() == want_u, (k, min_score)
+        assert np.allclose(got_s, want_s, rtol=1e-12, atol=1e-12)
+
+
+def test_empty_scope_returns_empty_arrays():
+    layer, rng = _dense_layer(0)
+    none = np.zeros(len(layer.uuid), dtype=bool)
+    for uuids, scores in (layer.cosine(none, rng.normal(size=64), -2.0, 10),
+                          layer.bm25(none, "w", 10)):
+        assert len(uuids) == 0 and len(scores) == 0
+        assert scores.dtype == np.float64
+    assert len(layer.cosine(layer.scope(["g0"]), rng.normal(size=64),
+                            -2.0, 1000)[0]) == 150

@@ -247,3 +247,29 @@ def test_stream_store_loads_as_full_handle(spark, tmp_path):
     assert rows(loaded.edges) == rows(fresh.edges)
     assert ({r["uuid"] for r in loaded.entities.collect()}
             == {r["uuid"] for r in fresh.entities.collect()})
+
+
+def test_stream_write_drops_stale_communities(spark, tmp_path):
+    """A micro-batch drops the store's communities, as a write on the
+    handle does: they describe the graph before the batch, so a store
+    saved with communities loads without them after one batch."""
+    from graphiti_spark.api import GraphitiSpark
+    from graphiti_spark.streaming.ingest import StreamingGraphWriter
+
+    out = str(tmp_path / "out")
+    g = GraphitiSpark(spark, RUN_TS, with_embeddings=False)
+    g.add_episode_bulk(_turns(spark, [
+        ("c1", 0, "Alice Smith works at Acme Corp.", 0),
+        ("c1", 1, "Bob Jones works at Acme Corp.", 1)]))
+    g.build_communities()
+    g.save(out)
+
+    def load():
+        return GraphitiSpark.load(spark, out, RUN_TS, with_embeddings=False)
+
+    assert load().communities is not None
+    writer = StreamingGraphWriter(out, RUN_TS)
+    writer(_turns(spark, [("c2", 0, "Carol Moss works at Globex.", 0)]), 0)
+    loaded = load()
+    assert loaded.communities is None and loaded.community_edges is None
+    assert {r["group_id"] for r in loaded.edges.collect()} == {"c1", "c2"}
